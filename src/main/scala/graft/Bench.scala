@@ -1,6 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Byte budget of one stream-replay micro-batch (`maxBytesPerTrigger`). */
+  private[graft] val ReplayTriggerBytes: Long = 512L << 20
+
+  /** State partitions for a replay over `pathBytes` of input, sized by
+    * the per-trigger volume that [[ReplayTriggerBytes]] caps.
+    */
+  private[graft] def replayStatePartitions(pathBytes: Long): Int =
+    graft.streaming.Streams.statePartitions(
+      math.min(pathBytes, ReplayTriggerBytes))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -162,8 +172,7 @@ object Bench {
     // sf0.1): full file-source micro-batch replay through the windowed
     // event-time EWMA into a memory sink
     val streamSecs = timedEntry("ewma_stream_replay") {
-      graft.streaming.Streams.withStatePartitions(spark,
-        graft.streaming.Streams.statePartitions(
+      graft.streaming.Streams.withStatePartitions(spark, replayStatePartitions(
           graft.streaming.Streams.pathBytes(spark, s"$sfDir/events.parquet"))) {
         import org.apache.spark.sql.functions._
         val batchSchema = graft.Tables.events(spark, sfDir).schema
@@ -173,7 +182,7 @@ object Bench {
         // (Specs that pin multi-batch semantics keep maxFilesPerTrigger=1.)
         val raw = spark.readStream.schema(
             spark.read.parquet(s"$sfDir/events.parquet").schema)
-          .option("maxBytesPerTrigger", (512L * 1024 * 1024).toString)
+          .option("maxBytesPerTrigger", ReplayTriggerBytes.toString)
           .option("pathGlobFilter", "events.parquet") // table files are flat in sfDir
           .parquet(sfDir)
         // tsl must be full-microsecond so events within the same second fold
@@ -196,12 +205,11 @@ object Bench {
     // streaming LSH near-dup replay over documents.parquet: the stateful
     // per-bucket candidate stream (StreamingLshDedup) end-to-end
     val slshSecs = timedEntry("slsh_stream_replay") {
-      graft.streaming.Streams.withStatePartitions(spark,
-        graft.streaming.Streams.statePartitions(
+      graft.streaming.Streams.withStatePartitions(spark, replayStatePartitions(
           graft.streaming.Streams.pathBytes(spark, s"$sfDir/documents.parquet"))) {
         val docs = spark.readStream.schema(
             spark.read.parquet(s"$sfDir/documents.parquet").schema)
-          .option("maxBytesPerTrigger", (512L * 1024 * 1024).toString)
+          .option("maxBytesPerTrigger", ReplayTriggerBytes.toString)
           .option("pathGlobFilter", "documents.parquet")
           .parquet(sfDir)
         val q = graft.streaming.StreamingLshDedup.candidates(docs, "text", "doc_id")

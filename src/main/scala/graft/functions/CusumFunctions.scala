@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions.udaf
   *
   * EXACT integer micro arithmetic end to end — deviations arrive already
   * micro-quantized, the fold is max/add/compare on Longs — so the oracle
-  * replays it bit-for-bit with a recursive CTE and the streaming twin can
-  * share this literal step function (the TwsLshDedup fold-sharing
-  * contract). Strict (ord, seq) fold order; alarms fire on STRICT h
+  * replays it bit-for-bit with a recursive CTE, and the batch and
+  * streaming forms step with this same literal function, so they cannot
+  * drift. Strict (ord, seq) fold order; alarms fire on STRICT h
   * crossing; `first_alarm` keeps the ord key of the earliest alarm of
   * either side ('' = never alarmed).
   */

@@ -104,9 +104,9 @@ object HoltFunctions {
     * γ = 0 keeps the ring at its zero seed, collapsing EXACTLY to
     * [[foldOracle]] (HoltSpec pins this).
     */
-  /** ONE Holt-Winters step, shared verbatim by the batch aggregator and
-    * the continuous streaming twin (the TwsLshDedup shared-fold rule —
-    * the two forms cannot drift). Mutates `ring` slot `t mod period`,
+  /** ONE Holt-Winters step: the batch aggregator and the continuous
+    * streaming form step with this same literal function, so the two
+    * forms cannot drift. Mutates `ring` slot `t mod period`,
     * returns (l', b').
     */
   def wintersStep(

@@ -51,8 +51,11 @@ object Associations {
     // rule direction) — materialize each once instead of re-running the
     // grouping shuffle per consumer (the connectedComponents/pageRank
     // loop-invariant pattern). The basket key itself is dropped before
-    // materialization: only the item sets matter downstream.
+    // materialization: only the item sets matter downstream. A NULL key
+    // names no basket (NULL = NULL is not true), so its rows are dropped
+    // rather than grouped into one.
     val grouped = baskets
+      .filter(col(basketCol).isNotNull)
       .select(col(basketCol).as("bk"), col(itemCol).cast("bigint").as("it"))
       .groupBy(col("bk"))
       .agg(array_sort(collect_set(col("it"))).as("items"))

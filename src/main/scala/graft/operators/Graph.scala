@@ -570,7 +570,9 @@ object Graph {
     */
   private def collectWeightedIfSmall(
       e: DataFrame): Option[Array[(Long, Long, Long)]] = {
-    val rows = e.limit(DriverGraphMaxEdges.toInt + 1).collect()
+    // clamped so a gate at Int.MaxValue cannot overflow the probe size
+    val probe = math.min(DriverGraphMaxEdges, Int.MaxValue - 1L).toInt + 1
+    val rows = e.limit(probe).collect()
     if (rows.length > DriverGraphMaxEdges) None
     else if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
       None

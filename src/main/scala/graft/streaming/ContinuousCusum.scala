@@ -8,11 +8,11 @@ import graft.functions.CusumFunctions.CusumState
 
 /** Cross-batch CONTINUOUS online CUSUM — the streaming twin of
   * [[graft.operators.EventAnalytics.onlineCusum]], carrying the LITERAL
-  * [[CusumFunctions.step]] fold (the TwsLshDedup fold-sharing contract:
-  * batch and stream cannot drift because they execute the same
-  * function). One running two-sided CUSUM state per key survives across
-  * micro-batches via the state store, so the stream's state after any
-  * replay prefix equals the batch fold of that prefix (spec-pinned).
+  * [[CusumFunctions.step]] fold (batch and stream step with the same
+  * literal function, so they cannot drift). One running two-sided CUSUM
+  * state per key survives across micro-batches via the state store, so
+  * the stream's state after any replay prefix equals the batch fold of
+  * that prefix (spec-pinned).
   * Deviations arrive pre-computed against the FROZEN reference mean —
   * the monitor's μ₀ is configuration, exactly as in the batch operator.
   *

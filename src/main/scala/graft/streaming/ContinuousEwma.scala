@@ -27,8 +27,7 @@ object ContinuousEwma {
   /** Per-batch output: the EWMA after folding this batch's rows. */
   final case class EwmaUpdate(key: String, current: Double, n: Long, lastTs: Long)
 
-  /** The one shared batch fold (used by both the flatMapGroupsWithState
-    * and transformWithState wrappers so their semantics cannot drift):
+  /** The per-batch fold the flatMapGroupsWithState operator steps with:
     * sorts the batch (ts, seq), folds rows newer than the state's
     * high-water mark, and returns the new state iff anything folded —
     * a batch of only out-of-order stragglers emits nothing (emitting

@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * State per open window is one (sum, count) pair per group — cheaper
   * than any fold twin; the trade is daily granularity on close instead
-  * of per-event alarms (the [[ContinuousCusum]]/[[TwsCusum]] twins cover
-  * the per-event path).
+  * of per-event alarms ([[ContinuousCusum]] covers the per-event path).
   */
 object StreamingDailyStats {
 

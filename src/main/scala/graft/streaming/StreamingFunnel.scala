@@ -55,9 +55,8 @@ object StreamingFunnel {
     * exactly for any intra-batch arrival order. `nSteps`/`converted`
     * derive from the slot array: -1 marks an unreached step.
     */
-  /** Pure chain fill, shared by the fmgws and transformWithState forms
-    * (extracting it is what lets TwsFunnelSpec pin their equality by
-    * construction, not just by test): mutates `t` in place.
+  /** Pure chain fill the streaming form steps with, one call per
+    * micro-batch: mutates `t` in place.
     */
   private[streaming] def fillChain(
       nStepsTotal: Int, windowMicros: Long,

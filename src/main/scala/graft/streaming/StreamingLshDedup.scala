@@ -38,8 +38,7 @@ object StreamingLshDedup {
   final case class BucketState(ids: Seq[Long])
   final case class CandidatePair(id_a: Long, id_b: Long)
 
-  /** The literal per-bucket fold shared by the fmgws variant and
-    * [[TwsLshDedup]] (so the two state APIs cannot drift): pair each
+  /** The literal per-bucket fold the streaming store steps with: pair each
     * first-seen doc against the bucket's members (and earlier first-seens
     * of this batch, id-sorted for determinism), append to the bucket,
     * keep the newest `maxBucket`. Returns (emitted pairs, new bucket ids,

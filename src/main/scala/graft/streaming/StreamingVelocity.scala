@@ -40,8 +40,8 @@ object StreamingVelocity {
       user: Long, tsu: Long, id: Long, value_micro: Long,
       prev_n: Long, prev_sum_micro: Long)
 
-  /** Pure merge + trailing-window sweep + prune, shared by the fmgws and
-    * transformWithState forms: returns the batch's output rows and the
+  /** Pure merge + trailing-window sweep + prune, one call per micro-batch
+    * of the streaming form: returns the batch's output rows and the
     * pruned retained state (None = state unchanged because the batch was
     * empty).
     */

@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * State per host: ONE long (the next slot) in the RocksDB store —
   * control-plane-sized at any corpus scale (state grows with the HOST
   * population, never the URL count). transformWithState + typed
-  * ValueState, the [[TwsVelocity]] discipline; `idleTimeoutMs > 0` maps
+  * ValueState; `idleTimeoutMs > 0` maps
   * to native TTL so hosts not seen for the window restart their
   * numbering (an idle host's politeness clock has long expired — the
   * eviction is semantically a fresh frontier, stated loudly rather than

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftvec
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType, StringType}
@@ -709,11 +711,11 @@ object TextExprs {
     * string per (shingle, permutation). Fixed-width lowercase hex
     * compares exactly like the digest bytes, so the unsigned byte-wise
     * min IS the hex-string min and only the n winners are hex-encoded.
-    * NULL shingles are skipped (array_min's null handling); an empty or
-    * all-null input yields n NULL slots (array_min of nothing).
+    * NULL shingles are skipped (array_min's null handling); a NULL,
+    * empty or all-null input yields n NULL slots (array_min of nothing).
     */
   def minhashSigMd5(arr: ArrayData, n: Int): ArrayData = {
-    val m = arr.numElements()
+    val m = if (arr == null) 0 else arr.numElements()
     val out = new Array[Any](n)
     val mins = new Array[Array[Byte]](n)
     val md = md5Digest.get()
@@ -774,12 +776,18 @@ object TextExprs {
     require(n >= 1 && n <= 256, "n in [1, 256]")
     override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
     override def dataType: DataType = ArrayType(StringType, containsNull = true)
-    override def nullSafeEval(a: Any): Any =
-      minhashSigMd5(a.asInstanceOf[ArrayData], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        s"${ev.value} = org.apache.spark.sql.graftvec.TextExprs.minhashSigMd5($a, $n);"
-      })
+    // a NULL input still yields n NULL slots, as the HOF form does
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any =
+      minhashSigMd5(child.eval(input).asInstanceOf[ArrayData], n)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        ${c.code}
+        ${CodeGenerator.javaType(dataType)} ${ev.value} =
+          org.apache.spark.sql.graftvec.TextExprs.minhashSigMd5(
+            ${c.isNull} ? null : ${c.value}, $n);""", isNull = FalseLiteral)
+    }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }

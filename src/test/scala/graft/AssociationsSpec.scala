@@ -46,6 +46,22 @@ class AssociationsSpec extends SparkSpec {
     }
   }
 
+  test("pairRules: NULL basket keys form no basket") {
+    // under SQL equality a NULL key joins nothing: the two NULL-key rows
+    // must not merge into a third {1, 2} basket
+    val bi = Seq[(Option[Long], Long)](
+      (Some(1L), 1L), (Some(1L), 2L), (Some(2L), 1L), (Some(2L), 2L),
+      (None, 1L), (None, 2L)).toDF("bk", "it")
+    val got = Associations.pairRules(bi, "bk", "it", minPairSupport = 2L)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
+      .toMap
+    // (n_ab, n_a, n_b, n_baskets)
+    assert(got === Map((1L, 2L) -> ((2L, 2L, 2L, 2L)),
+      (2L, 1L) -> ((2L, 2L, 2L, 2L))))
+  }
+
   test("pairRules: empty result when nothing clears the support floor") {
     val bi = Seq((1L, 1L), (1L, 2L), (2L, 3L)).toDF("bk", "it")
     assert(Associations.pairRules(bi, "bk", "it", minPairSupport = 2L).count() === 0L)

@@ -278,7 +278,8 @@ class ExtensionsSpec extends SparkSpec {
     val docs = (0 until 50).map { i =>
       val len = rnd.nextInt(120)
       (i.toLong, (0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
-    } ++ Seq((900L, ""), (901L, "one"), (902L, "two words here now five six"))
+    } ++ Seq((900L, ""), (901L, "one"), (902L, "two words here now five six"),
+      (903L, null))
     val df = docs.toDF("doc_id", "text")
       .withColumn("__w", graft.functions.TextFunctions.tokens(col("text")))
       .withColumn("__sh", array_distinct(

@@ -109,6 +109,19 @@ class GraphSpec extends SparkSpec {
     assert(hD === hX)
   }
 
+  test("pageRank with the driver gate at Int.MaxValue keeps the driver path") {
+    val e = (0L until 20L).map(i => (i, (i * 7 + 1) % 20, i % 3 + 1))
+      .toDF("src", "dst", "w")
+    val want = Graph.pageRank(e, "src", "dst", "w", iterations = 3)
+      .as[(Long, Long)].collect().toMap
+    val saved = Graph.DriverGraphMaxEdges
+    Graph.DriverGraphMaxEdges = Int.MaxValue.toLong
+    val got = try Graph.pageRank(e, "src", "dst", "w", iterations = 3)
+      .as[(Long, Long)].collect().toMap
+    finally Graph.DriverGraphMaxEdges = saved
+    assert(got === want)
+  }
+
   test("pageRank derives an expensive edge join ONCE, not once per iteration") {
     distributedOnly {
     // Build the edge table from a join (the q97 shape: edges are themselves

@@ -102,9 +102,9 @@ class TwsFrontierSpec extends SparkSpec {
         spark.readStream.schema(spark.read.parquet(s"$dir/in").schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$dir/in"),
         "host", "doc_id", "priority", idleTimeoutMs = 1500L)
-      // the TwsVelocitySpec TTL harness: under the ProcessingTime time
-      // mode processAllAvailable never stabilizes — poll consumed rows
-      // against an explicit trigger cadence instead
+      // under the ProcessingTime time mode processAllAvailable never
+      // stabilizes — poll consumed rows against an explicit trigger
+      // cadence instead
       val q = stream.toDF().writeStream.format("memory").queryName("twsfrttl")
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger
