@@ -21,6 +21,31 @@ object SparkEntry {
     spark
   }
 
+  /** Cores of a harness session: `SPARK_GRAFT_CPUS`, default 4. */
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+
+  /** The one session Bench, Verify, the tools and the specs run on:
+    * `local[cpus]` with `cpus` shuffle partitions, the graft extensions
+    * and SQL aggregates, and [[configure]]'s settings.
+    */
+  def localSession(cpus: Int = localCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      // Spark frees broadcast/shuffle/RDD state via ContextCleaner, which
+      // only fires when the DRIVER GCs — on a large heap a 153-query suite
+      // never GCs, state from every prior query accumulates, and late
+      // queries run 3-6x slower than standalone (observed r10: q84 32s in
+      // suite vs ~5s alone). periodicGC forces the cleaner to keep up.
+      .config("spark.cleaner.periodicGC.interval", "2min")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    GraftFunctions.registerAggregates(spark)
+    configure(spark)
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Registry.queries("q04_nation_revenue")(configure(spark), "/root/testdata/sf0.001")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,22 +13,7 @@ object Verify {
         (n: String) => ps.exists(n.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep ContextCleaner draining across the 147-query dump (see Bench:
-      // on a big heap the driver may never GC, so broadcast/shuffle state
-      // piles up and late queries crawl)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.registerAggregates(spark)
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     // Dump the oracle SQL FIRST: if any later stage dies, the driver still
     // has the per-query oracle map instead of an empty correctness round.

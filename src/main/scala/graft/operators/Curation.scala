@@ -255,8 +255,8 @@ object Curation {
     *     same factor in index space); run it AFTER cheaper dedup stages.
     *     Cost is LINEAR in document bytes (one CharGramMd5 pass): an
     *     N-char doc yields ~N gram rows — a 4 MB document among 200
-    *     small ones runs in ~0.5 s at local[32] (graft.tools.Profile)
-    *     and a 2 MB one in ~11 s even at local[4] test settings
+    *     small ones measured ~0.5 s at local[32], and a 2 MB one
+    *     ~11 s even at local[4] test settings
     *     (CurationSpec pins the no-single-task-blowup bound; the
     *     (g, doc) partial aggregation absorbs the per-doc key skew
     *     map-side)

@@ -780,8 +780,8 @@ object Dedup {
     * converge within `maxIter` rounds THROWS rather than silently
     * returning split labels; at O(log n) rounds the default 50 covers
     * graphs far beyond any conceivable corpus (a path graph needs about
-    * log2(diameter) rounds — measured in graft.tools.Profile: a 100k-node
-    * chain converges in well under 30).
+    * log2(diameter) rounds — measured: a 100k-node chain converges in
+    * well under 30).
     */
   /** Star-forest invariant of the large-star/small-star fixpoint: every
     * edge points node→root, so no node may appear on both sides — the

@@ -11,20 +11,18 @@ import org.apache.spark.sql.SparkSession
   * sharded: a 2 MB/trigger stream over 32 HDFS-backed stores pays 32
   * file commits per batch to shard a few thousand keys (measured: the
   * EWMA replay's addBatch drops 2450 → 1090 ms going 32 → 8 partitions
-  * on identical data; graft.tools.StreamProfile). The converse holds at
-  * 100 TB: per-trigger volume, not core count, is what the state shards.
+  * on identical data, read from the stream's per-batch durationMs). The
+  * converse holds at 100 TB: per-trigger volume, not core count, is what
+  * the state shards.
   */
 object Streams {
 
   /** State partitions for an expected per-trigger input volume: one per
     * 16 MB with a parallelism floor of 4. No upper cap — the trigger's
     * own byte budget (`maxBytesPerTrigger`) bounds the product.
-    * `SPARK_GRAFT_STREAM_PARTITIONS` overrides for deployments that size
-    * state shards explicitly.
     */
   def statePartitions(bytesPerTrigger: Long): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse(
-      math.max(4L, (bytesPerTrigger + (16L << 20) - 1) / (16L << 20)).toInt)
+    math.max(4L, (bytesPerTrigger + (16L << 20) - 1) / (16L << 20)).toInt
 
   /** Run `body` (which STARTS a streaming query — the stream captures a
     * session clone at start, so the setting sticks to that query) with

@@ -1,18 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Memory-floor proof for the dedup funnel (round-14 directive #6): run
-  * the two heaviest composed pipelines — pipeline_full (the end-to-end
-  * curation funnel) and pipeline_dedup_shared (the shared shingle-index
-  * triple) — under whatever heap `SPARK_DRIVER_MEM` grants the forked
-  * JVM (build.sbt wires it into -Xmx) and print one machine-readable
-  * line with the heap and the result counts. A constrained run (e.g.
+  * the heaviest composed pipelines — pipeline_full (the end-to-end
+  * curation funnel), pipeline_dedup_shared (the shared shingle-index
+  * triple) and the streaming front doors — under whatever heap
+  * `SPARK_DRIVER_MEM` grants the forked JVM (build.sbt wires it into
+  * -Xmx) and print one machine-readable line with the heap and, per
+  * entry, its timed seconds and result counts. A constrained run (e.g.
   * SPARK_DRIVER_MEM=2g at sf0.1) proving completion WITH counts
   * identical to the 8g run demonstrates the plans spill instead of
   * ballooning: in local mode -Xmx bounds driver AND all executor threads
   * together, so this is the harshest memory shape the composition can
-  * meet. Usage:
+  * meet. Each entry runs as Bench runs it (graft.Pipelines.runEntry:
+  * untimed prepare, timed body). Usage:
   *
   *   SPARK_DRIVER_MEM=2g SPARK_GRAFT_CPUS=8 \
   *     sbt "runMain graft.tools.MemFloor /root/testdata/sf0.1"
@@ -20,85 +20,33 @@ import org.apache.spark.sql.SparkSession
   * The documented floor lives in SCALE.md (round-14 section).
   */
 object MemFloor {
+  /** The floor's entries, in run order: the two batch compositions, then
+    * the streaming doors — foreachBatch decide + stored-index writes, the
+    * refresh cadence's vocabulary-bounded epoch fold, the crawl door's
+    * per-archive record walk and the CDC door's chunk pass must all
+    * spill or stream, never balloon.
+    */
+  private val Entries: Seq[String] = Seq("pipeline_dedup_shared", "pipeline_full",
+    "pipeline_stream_funnel", "pipeline_stream_refresh",
+    "pipeline_crawl_stream", "pipeline_cdc_stream")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftFunctions.registerAggregates(spark)
+    val cpus = graft.SparkEntry.localCpus
+    val spark = graft.SparkEntry.localSession(cpus)
     val heapMb = Runtime.getRuntime.maxMemory() >> 20
-    val t0 = System.nanoTime()
-    val (nJac, nMh, nKeep) = graft.Pipelines.dedupShared(spark, sfDir)
-    graft.operators.Dedup.releaseAllCaches()
-    spark.catalog.clearCache()
-    val t1 = System.nanoTime()
-    val sharded = graft.Pipelines.fullCuration(spark, sfDir)
-    graft.operators.Dedup.releaseAllCaches()
-    val t2 = System.nanoTime()
-    // round-15: the streaming front door under the same heap bound —
-    // foreachBatch decide + stored-index writes must spill, not balloon
-    // (model training included: the trainer's driver collects are
-    // vocabulary-bounded by design and must fit the floor too)
-    val (nDec, nKept) = graft.Pipelines.streamFunnel(spark, sfDir)
-    graft.operators.Dedup.releaseAllCaches()
-    val t3 = System.nanoTime()
-    // round-16: the refresh cadence under the same heap bound — the
-    // epoch fold's collects are vocabulary-bounded and must fit too
-    val refreshTmp = graft.Pipelines.prepareStreamRefresh(spark, sfDir)
-    val (nRDec, nRKept) = try
-      graft.Pipelines.replayStreamRefresh(spark, sfDir, refreshTmp)
-    finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(refreshTmp)).deleteRecursively(); ()
-    }
-    graft.operators.Dedup.releaseAllCaches()
-    val t4 = System.nanoTime()
-    // round-18: the streaming crawl door under the same heap bound — the
-    // per-archive record walk + extraction must stream through the one
-    // reassembly aggregation, never hold a batch's pages at once
-    val crawlTmp = graft.Pipelines.prepareCrawlStream(spark, sfDir)
-    val nCrawlKept = try
-      graft.Pipelines.replayCrawlStream(spark, sfDir, crawlTmp)
-    finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(crawlTmp)).deleteRecursively(); ()
-    }
-    graft.operators.Dedup.releaseAllCaches()
-    val t5 = System.nanoTime()
-    // round-18 continuation: the streaming CDC dedup door under the
-    // same heap bound — the chunk pass is map-only arrays and the score
-    // joins are delta-probed; nothing may balloon with the stored index
-    val cdcTmp = graft.Pipelines.prepareCdcStream(spark, sfDir)
-    val (nCdcScored, nCdcBaseDup) = try
-      graft.Pipelines.replayCdcStream(spark, sfDir, cdcTmp)
-    finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(cdcTmp)).deleteRecursively(); ()
-    }
-    graft.operators.Dedup.releaseAllCaches()
-    val t6 = System.nanoTime()
-    val line =
-      s"""{"heap_mb":$heapMb,"cpus":$cpus,"sf":"$sfDir","jac":$nJac,""" +
-        s""""mh":$nMh,"keep":$nKeep,"sharded":$sharded,""" +
-        s""""decided":$nDec,"funnel_kept":$nKept,""" +
-        s""""refresh_decided":$nRDec,"refresh_kept":$nRKept,""" +
-        s""""crawl_kept":$nCrawlKept,""" +
-        s""""cdc_scored":$nCdcScored,"cdc_base_dup":$nCdcBaseDup,""" +
-        s""""dedup_shared_sec":${(t1 - t0) / 1e9},""" +
-        s""""full_sec":${(t2 - t1) / 1e9},""" +
-        s""""stream_funnel_sec":${(t3 - t2) / 1e9},""" +
-        s""""stream_refresh_sec":${(t4 - t3) / 1e9},""" +
-        s""""crawl_stream_sec":${(t5 - t4) / 1e9},""" +
-        s""""cdc_stream_sec":${(t6 - t5) / 1e9}}"""
+    val fields = graft.Pipelines.benchEntries.filter(e => Entries.contains(e.name))
+      .map { e =>
+        val (secs, counts) = graft.Pipelines.runEntry(spark, sfDir, e) { body =>
+          val t0 = System.nanoTime()
+          val counts = body
+          ((System.nanoTime() - t0) / 1e9, counts)
+        }
+        s""""${e.name}":{"sec":$secs""" +
+          counts.map { case (k, v) => s""","$k":$v""" }.mkString + "}"
+      }
+    val line = s"""{"heap_mb":$heapMb,"cpus":$cpus,"sf":"$sfDir",""" +
+      fields.mkString(",") + "}"
     spark.stop()
     println(s"MEMFLOOR_JSON $line")
     System.err.println(s"MEMFLOOR_JSON $line")

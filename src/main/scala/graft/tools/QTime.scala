@@ -1,36 +1,39 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Targeted per-query timer: run named SparkEntry.queries entries (all,
-  * if none named) against a data dir without paying the full Bench sweep.
-  * Usage: runMain graft.tools.QTime <sfDir> [queryName ...]
+/** Targeted timer: run named entries — registry queries or Bench's
+  * non-registry entries (graft.Pipelines.benchEntries, prepared untimed
+  * exactly as Bench does) — against a data dir without paying the full
+  * Bench sweep; all registry queries if none named.
+  * Usage: runMain graft.tools.QTime <sfDir> [entryName ...]
   */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     graft.Tables.registerAll(spark, sfDir)
+    val queries = graft.SparkEntry.queries
+    def time(name: String)(run: => String): Unit = {
+      val t0 = System.nanoTime()
+      val out = run
+      println(f"[qtime] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2fs  $out")
+    }
     // run in ARG order (repeats allowed — steady-state timing needs a
     // same-JVM second run); no args = every registry query in map order
-    val selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (args.length <= 1) graft.SparkEntry.queries.toSeq
-      else args.drop(1).toSeq.map(n => n -> graft.SparkEntry.queries(n))
-    selected.foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      graft.operators.Dedup.releaseAllCaches()
-      println(f"[qtime] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2fs  rows=$n")
+    val names = if (args.length <= 1) queries.keys.toSeq else args.drop(1).toSeq
+    names.foreach { name =>
+      queries.get(name) match {
+        case Some(fn) => time(name) {
+          val n = fn(spark, sfDir).count()
+          graft.operators.Dedup.releaseAllCaches()
+          s"rows=$n"
+        }
+        case None =>
+          val e = graft.Pipelines.benchEntries.find(_.name == name).getOrElse(
+            throw new IllegalArgumentException(s"unknown entry $name"))
+          graft.Pipelines.runEntry(spark, sfDir, e) { body =>
+            time(name)(body.map { case (k, v) => s"$k=$v" }.mkString(" "))
+          }
+      }
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1-class scale smoke for the dedup/ANN family (SCALE.md).
@@ -404,16 +404,7 @@ object ScaleSmoke {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft-sf1")
     val replicas = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
     // replica count AND table layout version are part of the directory: a
     // rerun with a different scale or schema must regenerate, not

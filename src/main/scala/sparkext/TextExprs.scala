@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The higher-order-function formulations are interpreted and nest a
   * lambda per (element x hash-family/bit): 64 families over a 50-shingle
-  * doc costs 3200 boxed lambda dispatches per row (~20 s for 5000 docs,
-  * measured with graft.tools.Profile). These expressions do the identical
+  * doc costs 3200 boxed lambda dispatches per row (measured: ~20 s for
+  * 5000 docs). These expressions do the identical
   * O(n x 64) work as one compiled loop — milliseconds at the same scale.
   *
   * Hash family j for element h is XXH64.hashLong(h, seed=j) — Spark's own

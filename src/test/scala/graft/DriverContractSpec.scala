@@ -44,4 +44,15 @@ class DriverContractSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs))
     assert(SparkEntry.oracleSql.size >= 40)
   }
+
+  test("bench entry table keeps the frozen BENCH_SUMMARY keys, in run order") {
+    val names = Pipelines.benchEntries.map(_.name)
+    assert(names === Seq("ewma_stream_replay", "slsh_stream_replay",
+      "pipeline_dedup_shared", "pipeline_full", "pipeline_stream_funnel",
+      "pipeline_stream_refresh", "pipeline_ann_refresh", "pipeline_crawl",
+      "pipeline_crawl_stream", "pipeline_cdc_stream", "pipeline_events",
+      "pipeline_insight", "pipeline_routing", "pipeline_monitor",
+      "pipeline_profile"))
+    assert(names.toSet.intersect(SparkEntry.queries.keySet).isEmpty)
+  }
 }

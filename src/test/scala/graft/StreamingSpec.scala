@@ -16,9 +16,9 @@ class StreamingSpec extends SparkSpec {
       "corpus size") {
     // a 4 GB corpus replays in 512 MB triggers: 512 MB / 16 MB = 32
     // state shards, not 4 GB / 16 MB = 256
-    assert(Bench.replayStatePartitions(4L << 30) === 32)
+    assert(Pipelines.replayStatePartitions(4L << 30) === 32)
     // below the budget the whole corpus is one trigger
-    assert(Bench.replayStatePartitions(64L << 20) === 4)
+    assert(Pipelines.replayStatePartitions(64L << 20) === 4)
   }
 
   test("file-replay windowed EWMA == batch windowed EWMA (complete mode)") {
