@@ -782,78 +782,77 @@ object Dedup {
     * graphs far beyond any conceivable corpus (a path graph needs about
     * log2(diameter) rounds — measured: a 100k-node chain converges in
     * well under 30).
+    *
+    * Graphs of at most [[Graph.DriverMaxEdges]] distinct edges with
+    * `bigint` ids skip the rounds: one bounded collect feeds a driver
+    * union-find whose labels are the same component minimums, replacing
+    * ~4 jobs + 2 checkpoints PER STAR ROUND. Near-dup pair graphs are
+    * pair-thresholded, so this is the common case.
     */
-  /** Star-forest invariant of the large-star/small-star fixpoint: every
-    * edge points node→root, so no node may appear on both sides — the
-    * src and dst node sets must be disjoint. One semi-join + isEmpty over
-    * the already-checkpointed edge frame.
-    */
-  private[graft] def isStarForest(edges: DataFrame): Boolean =
-    edges.select(col("dst").as("n"))
-      .join(edges.select(col("src").as("n")), Seq("n"), "left_semi")
-      .isEmpty
-
-  /** Edge-count gate below which [[connectedComponents]] runs a driver
-    * union-find off one bounded collect instead of the distributed star
-    * rounds. Near-dup pair graphs are pair-THRESHOLDED (only candidates
-    * passing a similarity gate become edges), so the common case is
-    * orders of magnitude below this; 10⁶ distinct edges collect as
-    * ~16 MB of longs (+ a ≤2·10⁶-entry LongMap), bounded driver state.
-    * Labels are the component minimum either way — identical output —
-    * but the driver path replaces ~4 jobs + 2 checkpoints PER STAR ROUND
-    * with one collect. Graphs over the gate (or with non-long ids) take
-    * the distributed loop unchanged — the 100 TB path is untouched.
-    */
-  private[operators] val DriverCcMaxEdges = 1000000L
-
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // nodes whose only edges are self-loops still deserve a label
     val selfOnly = pairs.filter(col("id_a") === col("id_b"))
       .select(col("id_a").as("id"), col("id_a").as("comp")).distinct()
-    var edges = pairs
+    val edges = pairs
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
       .materialize
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && edges.count() <= DriverCcMaxEdges) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val collected = edges.select(col("src"), col("dst")).as[(Long, Long)]
-        .collect()
-      // union-find with path halving; roots resolve to the component MIN
-      // id afterwards, matching the star fixpoint's min-rooted labels
-      val idx = scala.collection.mutable.LongMap.empty[Int]
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
-      def ix(v: Long): Int = idx.getOrElseUpdate(v, {
-        ids += v; parent += ids.length - 1; ids.length - 1
-      })
-      def find(x0: Int): Int = {
-        var x = x0
-        while (parent(x) != x) {
-          parent(x) = parent(parent(x)); x = parent(x)
-        }
-        x
+    val stars =
+      (if (longIds) Graph.collectIfSmall(edges, Graph.LongPairs) else None)
+        .map(unionFindComponents(pairs.sparkSession, _))
+        .getOrElse(starComponents(edges, maxIter))
+    // self-loop-only nodes label themselves; a node with BOTH a self-loop
+    // and real edges must keep only its star label (anti-join, not union —
+    // a blind union would hand it two different label rows)
+    stars.union(selfOnly.join(stars.select(col("id")), Seq("id"), "left_anti"))
+  }
+
+  /** Driver twin of [[starComponents]]: union-find with path halving
+    * over the collected edges, each root resolved to its component's
+    * MIN id afterwards to match the star fixpoint's min-rooted labels.
+    */
+  private def unionFindComponents(
+      spark: org.apache.spark.sql.SparkSession,
+      collected: Array[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    val idx = scala.collection.mutable.LongMap.empty[Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def ix(v: Long): Int = idx.getOrElseUpdate(v, {
+      ids += v; parent += ids.length - 1; ids.length - 1
+    })
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x)); x = parent(x)
       }
-      collected.foreach { case (s, d) =>
-        val rs = find(ix(s)); val rd = find(ix(d))
-        if (rs != rd) parent(rs) = rd
-      }
-      val minOfRoot = scala.collection.mutable.LongMap.empty[Long]
-      var i = 0
-      while (i < ids.length) {
-        val r = find(i).toLong
-        val cur = minOfRoot.getOrElse(r, Long.MaxValue)
-        if (ids(i) < cur) minOfRoot(r) = ids(i)
-        i += 1
-      }
-      val labels = Array.tabulate(ids.length)(j => (ids(j), minOfRoot(find(j).toLong)))
-      val stars = spark.createDataset(labels.toIndexedSeq).toDF("id", "comp")
-      return stars.union(
-        selfOnly.join(stars.select(col("id")), Seq("id"), "left_anti"))
+      x
     }
+    collected.foreach { case (s, d) =>
+      val rs = find(ix(s)); val rd = find(ix(d))
+      if (rs != rd) parent(rs) = rd
+    }
+    val minOfRoot = scala.collection.mutable.LongMap.empty[Long]
+    var i = 0
+    while (i < ids.length) {
+      val r = find(i).toLong
+      val cur = minOfRoot.getOrElse(r, Long.MaxValue)
+      if (ids(i) < cur) minOfRoot(r) = ids(i)
+      i += 1
+    }
+    val labels = Array.tabulate(ids.length)(j => (ids(j), minOfRoot(find(j).toLong)))
+    spark.createDataset(labels.toIndexedSeq).toDF("id", "comp")
+  }
+
+  /** The distributed [[connectedComponents]] rounds over a materialized
+    * `(src, dst)` frame of distinct non-self edges: `(id, comp)` for
+    * every node on an edge.
+    */
+  private[graft] def starComponents(pairEdges: DataFrame, maxIter: Int): DataFrame = {
+    var edges = pairEdges
     var converged = false
     var iter = 0
     var prevSig: (Long, Long) = null
@@ -898,14 +897,20 @@ object Dedup {
     if (!converged && prevSig != null && prevSig._1 > 0) throw new IllegalStateException(
       s"connectedComponents did not converge within $maxIter rounds; see scaladoc")
     // star fixpoint: every non-root node has exactly one edge (node → root)
-    val stars = edges.select(col("src").as("id"), col("dst").as("comp"))
+    edges.select(col("src").as("id"), col("dst").as("comp"))
       .union(edges.select(col("dst").as("id"), col("dst").as("comp")))
       .distinct()
-    // self-loop-only nodes label themselves; a node with BOTH a self-loop
-    // and real edges must keep only its star label (anti-join, not union —
-    // a blind union would hand it two different label rows)
-    stars.union(selfOnly.join(stars.select(col("id")), Seq("id"), "left_anti"))
   }
+
+  /** Star-forest invariant of the large-star/small-star fixpoint: every
+    * edge points node→root, so no node may appear on both sides — the
+    * src and dst node sets must be disjoint. One semi-join + isEmpty over
+    * the already-checkpointed edge frame.
+    */
+  private[graft] def isStarForest(edges: DataFrame): Boolean =
+    edges.select(col("dst").as("n"))
+      .join(edges.select(col("src").as("n")), Seq("n"), "left_semi")
+      .isEmpty
 
   /** Keep one representative (min id) per near-dup cluster: every doc not
     * in any pair keeps itself; clustered docs keep the cluster minimum.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Materialize.MaterializeOps
@@ -37,17 +37,18 @@ object Graph {
     * weights above ~8e12 (per edge!) must be pre-scaled by the caller;
     * Spark's ANSI overflow makes a breach a hard error, not a wrap.
     *
-    * Plan: edges carry their source's out-weight (one join, computed
-    * once); each round joins current ranks onto edges by source
-    * (broadcast when the node table is small), aggregates inflow by
-    * destination, and left-joins back onto the node set for the teleport
-    * base. The routing table and node set are loop-invariant, so both are
-    * eagerly materialized ([[Materialize.checkpoint]]) BEFORE the loop — without that, each
-    * round's `inflow` plan re-derives them from lineage, and when the
-    * edge table is itself an expensive join (q97 builds it from a 4-table
-    * lineitem⋈orders⋈customer⋈supplier join) every iteration re-runs the
-    * fact join. With the checkpoint the fact join runs exactly once and
-    * each round reads the materialized (src, dst, w, outw) blocks — the
+    * Plan: the projected edge frame is materialized once, so an
+    * expensive edge build (q97 joins lineitem⋈orders⋈customer⋈supplier)
+    * runs exactly once. A graph of at most [[DriverMaxEdges]] edges with
+    * no null field runs its rounds driver-side; a larger one runs
+    * [[pageRankDistributed]]: edges carry their source's out-weight (one
+    * join, computed once); each round joins current ranks onto edges by
+    * source (broadcast when the node table is small), aggregates inflow
+    * by destination, and left-joins back onto the node set for the
+    * teleport base. The routing table and node set are loop-invariant, so
+    * both are eagerly materialized ([[Materialize.checkpoint]]) BEFORE
+    * the loop and each round reads the materialized (src, dst, w, outw)
+    * blocks instead of re-deriving them from lineage — the
     * [[Dedup.connectedComponents]] pattern. `pr` itself is checkpointed
     * every 10 rounds so deep iteration counts keep a bounded plan.
     *
@@ -59,32 +60,42 @@ object Graph {
     */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
-      iterations: Int = 3, dampPpm: Long = 850000L): DataFrame = {
+      iterations: Int = 3, dampPpm: Long = 850000L): DataFrame =
+    rank(edges, srcCol, dstCol, weightCol, iterations, dampPpm, seeds = None)
+
+  /** The gate shared by [[pageRank]] and [[personalizedPageRank]]: the
+    * projected `(src, dst, w)` frame is materialized once and feeds
+    * either the driver loop or the distributed one. PageRank keeps
+    * multi-edges, so the frame is not de-duplicated.
+    */
+  private def rank(
+      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
+      iterations: Int, dampPpm: Long, seeds: Option[Seq[Long]]): DataFrame = {
     require(iterations >= 1 && iterations <= 50, "iterations in [1, 50]")
     require(dampPpm >= 0 && dampPpm <= 1000000L, "dampPpm in [0, 1e6]")
     val e = edges.select(
-      col(srcCol).cast("bigint").as("src"),
-      col(dstCol).cast("bigint").as("dst"),
-      col(weightCol).cast("bigint").as("w"))
-    // driver gate (the kCore/labelPropagation pattern): pageRank keeps
-    // multi-edges, so the probe is a limit(gate+1) collect of the raw
-    // weighted edge list — one bounded job that IS the routing table
-    // when it fits, replacing 2 materializations + `iterations` join
-    // rounds of pure scheduling; larger graphs (or null-bearing rows)
-    // run the distributed loop below unchanged.
-    collectWeightedIfSmall(e) match {
-      case Some(arr) =>
-        return pageRankLocal(edges.sparkSession, arr, iterations, dampPpm,
-          seeds = None)
-      case None => ()
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+        col(srcCol).cast("bigint").as("src"),
+        col(dstCol).cast("bigint").as("dst"),
+        col(weightCol).cast("bigint").as("w"))
       .materialize
+    collectIfSmall(e,
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
+      .map(pageRankLocal(e.sparkSession, _, iterations, dampPpm, seeds))
+      .getOrElse(pageRankDistributed(e, iterations, dampPpm, seeds))
+  }
+
+  /** The distributed [[pageRank]] / [[personalizedPageRank]] loop over a
+    * `(src, dst, w)` frame; `seeds = None` is the uniform teleport,
+    * `Some(s)` the personalized base.
+    */
+  private[graft] def pageRankDistributed(
+      e: DataFrame, iterations: Int, dampPpm: Long,
+      seeds: Option[Seq[Long]]): DataFrame = {
+    val nodes = nodesOf(e)
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
     // (src, dst, w, outw): the per-edge routing table. Eagerly
-    // materialized so the (possibly very expensive) edge derivation and
-    // the out-weight aggregation run ONCE, not once per iteration.
+    // materialized so the out-weight aggregation runs ONCE, not once per
+    // iteration.
     val routed = e.join(outw, Seq("src")).materialize
     val n = nodes.count()
     require(n > 0, "graph has no nodes")
@@ -92,8 +103,13 @@ object Graph {
     val minW = routed.agg(min(col("w"))).head.getLong(0)
     require(minW > 0,
       s"pageRank requires strictly positive edge weights; found min(w)=$minW")
-    val base = (1000000L - dampPpm) / n
-    var pr = nodes.select(col("node"), lit(1000000L / n).as("pr_micro"))
+    // `total` spread over all n nodes, or over the seeds (0 elsewhere)
+    def spread(total: Long): Column = seeds match {
+      case None => lit(total / n)
+      case Some(s) => when(col("node").isin(s: _*), lit(total / s.size)).otherwise(lit(0L))
+    }
+    val base = spread(1000000L - dampPpm)
+    var pr = nodes.select(col("node"), spread(1000000L).as("pr_micro"))
     for (i <- 1 to iterations) {
       val inflow = routed
         .join(pr.select(col("node").as("src"), col("pr_micro")), Seq("src"))
@@ -102,7 +118,7 @@ object Graph {
       pr = nodes
         .join(inflow.select(col("dst").as("node"), col("inflow")), Seq("node"), "left")
         .select(col("node"),
-          (lit(base) + expr(s"($dampPpm * coalesce(inflow, 0L)) DIV 1000000")).as("pr_micro"))
+          (base + expr(s"($dampPpm * coalesce(inflow, 0L)) DIV 1000000")).as("pr_micro"))
       if (i % 10 == 0 && i < iterations) pr = pr.materialize
     }
     pr
@@ -186,49 +202,9 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       seeds: Seq[Long], iterations: Int = 3,
       dampPpm: Long = 850000L): DataFrame = {
-    require(iterations >= 1 && iterations <= 50, "iterations in [1, 50]")
-    require(dampPpm >= 0 && dampPpm <= 1000000L, "dampPpm in [0, 1e6]")
     require(seeds.nonEmpty && seeds.size <= 10000,
       "personalizedPageRank: 1..10000 literal seeds")
-    val e = edges.select(
-      col(srcCol).cast("bigint").as("src"),
-      col(dstCol).cast("bigint").as("dst"),
-      col(weightCol).cast("bigint").as("w"))
-    // driver gate — see [[pageRank]]; the twin only changes the teleport
-    // base, exactly like the distributed loop below
-    collectWeightedIfSmall(e) match {
-      case Some(arr) =>
-        return pageRankLocal(edges.sparkSession, arr, iterations, dampPpm,
-          seeds = Some(seeds))
-      case None => ()
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .materialize
-    val outw = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val routed = e.join(outw, Seq("src")).materialize
-    require(nodes.count() > 0, "graph has no nodes")
-    val minW = routed.agg(min(col("w"))).head.getLong(0)
-    require(minW > 0,
-      s"personalizedPageRank requires strictly positive edge weights; found min(w)=$minW")
-    val seedBase = (1000000L - dampPpm) / seeds.size
-    val base = when(col("node").isin(seeds: _*), lit(seedBase)).otherwise(lit(0L))
-    var pr = nodes.select(col("node"),
-      when(col("node").isin(seeds: _*), lit(1000000L / seeds.size))
-        .otherwise(lit(0L)).as("pr_micro"))
-    for (i <- 1 to iterations) {
-      val inflow = routed
-        .join(pr.select(col("node").as("src"), col("pr_micro")), Seq("src"))
-        .select(col("dst"), expr("(pr_micro * w) DIV outw").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      pr = nodes
-        .join(inflow.select(col("dst").as("node"), col("inflow")), Seq("node"), "left")
-        .select(col("node"),
-          (base + expr(s"($dampPpm * coalesce(inflow, 0L)) DIV 1000000"))
-            .as("pr_micro"))
-      if (i % 10 == 0 && i < iterations) pr = pr.materialize
-    }
-    pr
+    rank(edges, srcCol, dstCol, weightCol, iterations, dampPpm, Some(seeds))
   }
 
   /** HITS hubs & authorities in exact integer micro-units, run for a
@@ -261,7 +237,9 @@ object Graph {
     * Plan: per round, TWO join+aggregate passes over the checkpointed
     * edge set (auth then hub) and two 1-row total aggregates crossed back
     * in (broadcast, never collected to the driver) — the [[pageRank]]
-    * loop shape with the same per-5-rounds re-checkpoint.
+    * loop shape with the same per-5-rounds re-checkpoint. A graph of at
+    * most [[DriverMaxEdges]] distinct edges runs the same rounds
+    * driver-side.
     */
   def hits(
       edges: DataFrame, srcCol: String, dstCol: String,
@@ -271,17 +249,14 @@ object Graph {
         col(srcCol).cast("bigint").as("src"),
         col(dstCol).cast("bigint").as("dst"))
       .distinct().materialize
-    // driver gate (the kCore pattern — the distinct edge set is already
-    // materialized, so the probe count is a bounded cached action): the
-    // twin replays the identical BigInt recurrence; larger graphs keep
-    // the per-round join+aggregate loop below.
-    collectIfSmall(e) match {
-      case Some(arr) => return hitsLocal(edges.sparkSession, arr, iterations)
-      case None => ()
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .materialize
+    collectIfSmall(e, LongPairs)
+      .map(hitsLocal(e.sparkSession, _, iterations))
+      .getOrElse(hitsDistributed(e, iterations))
+  }
+
+  /** The distributed [[hits]] loop over a distinct `(src, dst)` frame. */
+  private[graft] def hitsDistributed(e: DataFrame, iterations: Int): DataFrame = {
+    val nodes = nodesOf(e)
     val n = nodes.count()
     require(n > 0, "hits: graph has no nodes")
     def normalized(raw: DataFrame, keyCol: String, rawCol: String,
@@ -338,19 +313,14 @@ object Graph {
     * keys Catalyst picks, no all-pairs anywhere.
     */
   def triangleCounts(
-      edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val raw = edges.select(col(srcCol).cast("bigint").as("x"),
-        col(dstCol).cast("bigint").as("y"))
-      .filter(col("x") =!= col("y"))
-    val undirected = raw.select(
-        least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      // canonical edge set is read 3x (degrees, wedges, closure) — cut
-      // the dedup's lineage once instead of re-running it per consumer
-      .materialize
-    val deg = undirected.select(col("a").as("node")).unionAll(
-        undirected.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
+      edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    triangles(simpleEdges(edges, srcCol, dstCol))
+
+  /** [[triangleCounts]] over a [[simpleEdges]] frame, which it reads 3x
+    * (degrees, wedges, closure).
+    */
+  private def triangles(undirected: DataFrame): DataFrame = {
+    val deg = degrees(undirected, "d")
     // orient by π = (degree, id): u -> v iff (d_u, u) < (d_v, v)
     val withDeg = undirected
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("d", "da"), Seq("a"))
@@ -407,12 +377,7 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       maxDeg: Int = 1000): DataFrame = {
     require(maxDeg >= 2, "adamicAdar: maxDeg >= 2")
-    val undirected = edges
-      .select(col(srcCol).cast("bigint").as("x"), col(dstCol).cast("bigint").as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .materialize
+    val undirected = simpleEdges(edges, srcCol, dstCol)
     val post = undirected.select(col("a").as("z"), col("b").as("n"))
       .unionAll(undirected.select(col("b").as("z"), col("a").as("n")))
     val deg = post.groupBy(col("z")).agg(count(lit(1)).as("d"))
@@ -449,20 +414,8 @@ object Graph {
     */
   def clusteringCoefficient(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // canonicalize ONCE and checkpoint: the degree pass and the triangle
-    // pass both read this frame, and the caller's edge build (often a
-    // self-join) must not run twice
-    val undirected = edges
-      .select(col(srcCol).cast("bigint").as("x"), col(dstCol).cast("bigint").as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .materialize
-    val deg = undirected.select(col("a").as("node")).unionAll(
-        undirected.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-    val tri = triangleCounts(undirected, "a", "b")
-    deg.join(tri, Seq("node"), "left")
+    val undirected = simpleEdges(edges, srcCol, dstCol)
+    degrees(undirected, "degree").join(triangles(undirected), Seq("node"), "left")
       .withColumn("triangles", coalesce(col("triangles"), lit(0L)))
       .withColumn("cc_ppm",
         when(col("degree") < 2L, lit(-1L))
@@ -485,18 +438,8 @@ object Graph {
     */
   def degreeAssortativity(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // canonicalize ONCE and checkpoint: the degree pass and the
-    // endpoint-tagging join both read this frame, and the caller's edge
-    // build (often a self-join) must not run twice
-    val undirected = edges
-      .select(col(srcCol).cast("bigint").as("x"), col(dstCol).cast("bigint").as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .materialize
-    val deg = undirected.select(col("a").as("node")).unionAll(
-        undirected.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
+    val undirected = simpleEdges(edges, srcCol, dstCol)
+    val deg = degrees(undirected, "d")
     val tagged = undirected
       .join(deg.select(col("node").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("d").as("db")), Seq("b"))
@@ -519,65 +462,52 @@ object Graph {
           .as("r_micro"))
   }
 
-  /** k-core pruning: iteratively peel nodes of degree < k (with their
-    * incident edges) from the undirected simple graph until stable or
-    * `maxRounds` rounds — the standard dense-subgraph filter (spam-farm /
-    * bot-ring isolation in link curation; every member of the surviving
-    * subgraph has ≥ k surviving neighbors). Returns the final graph's
-    * `(node, deg)` — all degrees ≥ k iff peeling converged within the
-    * budget.
-    *
-    * Peeling is MONOTONE (a stable graph stays stable), so early-stop on
-    * an unchanged edge count is invisible next to a fixed-round replay —
-    * the oracle unrolls `maxRounds` rounds flat and matches whenever the
-    * graph stabilizes inside the budget; extra replayed rounds are
-    * no-ops. Each round costs one degree aggregation plus one
-    * semi-join-shaped edge filter (two shuffles), with the shrinking edge
-    * set re-checkpointed per round ([[Dedup.connectedComponents]]'s
-    * loop pattern); the convergence probe reads the checkpointed count,
-    * a bounded driver action.
+  /** Edge-count gate of the six iterative graph operators ([[pageRank]],
+    * [[personalizedPageRank]], [[hits]], [[kCore]], [[labelPropagation]]
+    * and [[Dedup.connectedComponents]]): at or below it, their rounds run
+    * driver-side off one bounded collect; 10⁶ edges collect as ~24 MB of
+    * longs. The driver loops replay the exact integer recurrences, so
+    * both paths produce identical results; larger graphs keep the
+    * distributed per-round jobs.
     */
-  /** Gate below which the iterative peel/vote loops run driver-side off
-    * one bounded collect (the [[Dedup.connectedComponents]] union-find
-    * pattern): 10⁶ canonical edges collect as ~16 MB of longs. The loops
-    * are exact integer computations (degree counts, plurality votes), so
-    * driver and distributed rounds produce identical results; larger
-    * graphs keep the distributed per-round jobs unchanged.
-    */
-  // a var only so specs can force the distributed loops on small graphs
-  // (plan-shape pins + driver/distributed parity tests); production code
-  // never writes it
-  private[graft] var DriverGraphMaxEdges = 1000000L
+  private[operators] val DriverMaxEdges = 1000000L
 
-  /** The canonical distinct (a < b) undirected edge list, collected when
-    * it fits the driver gate — None above the gate.
+  /** The rows of the materialized `e` when there are at most
+    * [[DriverMaxEdges]] of them and none has a null field (the driver
+    * loops have no null semantics); None otherwise. One job counts both,
+    * so nothing is collected above the gate.
     */
-  private def collectIfSmall(e: DataFrame): Option[Array[(Long, Long)]] = {
-    if (e.count() > DriverGraphMaxEdges) None
-    else {
-      val spark = e.sparkSession
-      import spark.implicits._
-      Some(e.as[(Long, Long)].collect())
-    }
+  private[operators] def collectIfSmall[T](e: DataFrame, enc: Encoder[T]): Option[Array[T]] = {
+    val anyNull = e.columns.map(col(_).isNull).reduce(_ || _)
+    val probe = e.agg(count(lit(1)), count(when(anyNull, 1))).head()
+    if (probe.getLong(0) > DriverMaxEdges || probe.getLong(1) > 0) None
+    else Some(e.as(enc).collect())
   }
 
-  /** The weighted directed edge list `(src, dst, w)`, collected through a
-    * `limit(gate + 1)` probe: one bounded job that both decides the gate
-    * AND returns the complete edge set when it fits (≤ gate + 1 rows
-    * collected means limit returned everything). None above the gate, or
-    * when any field is null (the driver twin has no null semantics — the
-    * distributed loop keeps them).
+  private[operators] val LongPairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
+  /** The simple undirected graph of `edges` as a materialized `(a, b)`
+    * frame: self-loops dropped, each edge once with a < b. Every caller
+    * reads it more than once, and the caller's edge build (often a
+    * self-join) must not run twice.
     */
-  private def collectWeightedIfSmall(
-      e: DataFrame): Option[Array[(Long, Long, Long)]] = {
-    // clamped so a gate at Int.MaxValue cannot overflow the probe size
-    val probe = math.min(DriverGraphMaxEdges, Int.MaxValue - 1L).toInt + 1
-    val rows = e.limit(probe).collect()
-    if (rows.length > DriverGraphMaxEdges) None
-    else if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-      None
-    else Some(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-  }
+  private[graft] def simpleEdges(
+      edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("bigint").as("x"), col(dstCol).cast("bigint").as("y"))
+      .filter(col("x") =!= col("y"))
+      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
+      .distinct()
+      .materialize
+
+  /** The distinct, materialized `node` ids of a directed `(src, dst)` frame. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
+      .materialize
+
+  /** `(node, <degCol>)` of a [[simpleEdges]] frame. */
+  private def degrees(e: DataFrame, degCol: String): DataFrame =
+    e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as(degCol))
 
   /** Driver twin of the [[pageRank]] / [[personalizedPageRank]] loop:
     * the identical integer recurrence over the collected edge list, with
@@ -603,21 +533,16 @@ object Graph {
     val minW = if (arr.isEmpty) 0L else arr.iterator.map(_._3).min
     require(minW > 0,
       s"pageRank requires strictly positive edge weights; found min(w)=$minW")
-    // divide by seeds.size (with duplicates, as the distributed literal
+    // `total` spread over all n nodes, or over the seeds (0 elsewhere):
+    // divided by seeds.size (with duplicates, as the distributed literal
     // does), membership via the deduplicated set
-    val seedCount = seeds.map(_.size.toLong)
     val seedSet = seeds.map(_.toSet)
-    def base(v: Long): Long = seedSet match {
-      case None => (1000000L - dampPpm) / n
-      case Some(ss) =>
-        if (ss.contains(v)) (1000000L - dampPpm) / seedCount.get else 0L
-    }
-    def init(v: Long): Long = seedSet match {
-      case None => 1000000L / n
-      case Some(ss) => if (ss.contains(v)) 1000000L / seedCount.get else 0L
+    def spread(total: Long, v: Long): Long = seedSet match {
+      case None => total / n
+      case Some(ss) => if (ss.contains(v)) total / seeds.get.size else 0L
     }
     var pr = scala.collection.mutable.LongMap.empty[Long]
-    nodes.foreach(v => pr(v) = init(v))
+    nodes.foreach(v => pr(v) = spread(1000000L, v))
     for (_ <- 1 to iterations) {
       val inflow = scala.collection.mutable.LongMap.empty[Long]
       arr.foreach { case (s, d, w) =>
@@ -626,7 +551,7 @@ object Graph {
       }
       val next = scala.collection.mutable.LongMap.empty[Long]
       nodes.foreach { v =>
-        next(v) = base(v) +
+        next(v) = spread(1000000L - dampPpm, v) +
           Math.multiplyExact(dampPpm, inflow.getOrElse(v, 0L)) / 1000000L
       }
       pr = next
@@ -676,53 +601,73 @@ object Graph {
       .toDF("node", "hub_micro", "auth_micro")
   }
 
+  /** k-core pruning: iteratively peel nodes of degree < k (with their
+    * incident edges) from the undirected simple graph until stable or
+    * `maxRounds` rounds — the standard dense-subgraph filter (spam-farm /
+    * bot-ring isolation in link curation; every member of the surviving
+    * subgraph has ≥ k surviving neighbors). Returns the final graph's
+    * `(node, deg)` — all degrees ≥ k iff peeling converged within the
+    * budget.
+    *
+    * Peeling is MONOTONE (a stable graph stays stable), so early-stop on
+    * an unchanged edge count is invisible next to a fixed-round replay —
+    * the oracle unrolls `maxRounds` rounds flat and matches whenever the
+    * graph stabilizes inside the budget; extra replayed rounds are
+    * no-ops. Each round costs one degree aggregation plus one
+    * semi-join-shaped edge filter (two shuffles), with the shrinking edge
+    * set re-checkpointed per round ([[Dedup.connectedComponents]]'s
+    * loop pattern); the convergence probe reads the checkpointed count,
+    * a bounded driver action. A graph of at most [[DriverMaxEdges]]
+    * canonical edges runs the same rounds driver-side.
+    */
   def kCore(
       edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int = 6): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1 && maxRounds <= 30, "maxRounds in [1, 30]")
-    var e = edges.select(col(srcCol).cast("bigint").as("x"),
-        col(dstCol).cast("bigint").as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .materialize
-    collectIfSmall(e) match {
-      case Some(arr0) =>
-        // driver twin of the loop below: same degree-peel rounds, same
-        // early-stop-on-stable-count, same final (node, deg) output
-        var cur = arr0
-        var stable = false
-        var round = 0
-        while (!stable && round < maxRounds && cur.nonEmpty) {
-          val deg = scala.collection.mutable.LongMap.empty[Long]
-          cur.foreach { case (a, b) =>
-            deg(a) = deg.getOrElse(a, 0L) + 1L
-            deg(b) = deg.getOrElse(b, 0L) + 1L
-          }
-          val next = cur.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
-          stable = next.length == cur.length
-          cur = next
-          round += 1
-        }
-        val deg = scala.collection.mutable.LongMap.empty[Long]
-        cur.foreach { case (a, b) =>
-          deg(a) = deg.getOrElse(a, 0L) + 1L
-          deg(b) = deg.getOrElse(b, 0L) + 1L
-        }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return spark.createDataset(deg.toSeq.map(t => (t._1, t._2)))
-          .toDF("node", "deg")
-      case None => ()
+    val e = simpleEdges(edges, srcCol, dstCol)
+    collectIfSmall(e, LongPairs)
+      .map(kCoreLocal(e.sparkSession, _, k, maxRounds))
+      .getOrElse(kCoreDistributed(e, k, maxRounds))
+  }
+
+  /** Driver twin of [[kCoreDistributed]]: the same degree-peel rounds,
+    * early stop on a stable edge count, and final `(node, deg)` output.
+    */
+  private def kCoreLocal(
+      spark: org.apache.spark.sql.SparkSession,
+      arr: Array[(Long, Long)], k: Int, maxRounds: Int): DataFrame = {
+    import spark.implicits._
+    def degreesOf(es: Array[(Long, Long)]) = {
+      val deg = scala.collection.mutable.LongMap.empty[Long]
+      es.foreach { case (a, b) =>
+        deg(a) = deg.getOrElse(a, 0L) + 1L
+        deg(b) = deg.getOrElse(b, 0L) + 1L
+      }
+      deg
     }
+    var cur = arr
+    var stable = false
+    var round = 0
+    while (!stable && round < maxRounds && cur.nonEmpty) {
+      val deg = degreesOf(cur)
+      val next = cur.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+      stable = next.length == cur.length
+      cur = next
+      round += 1
+    }
+    spark.createDataset(degreesOf(cur).toSeq).toDF("node", "deg")
+  }
+
+  /** The distributed [[kCore]] loop over a [[simpleEdges]] frame. */
+  private[graft] def kCoreDistributed(
+      edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
+    var e = edges
     var n = e.count()
     var stable = false
     var round = 0
     while (!stable && round < maxRounds && n > 0) {
-      val deg = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select(col("node"))
+      val keep = degrees(e, "d").filter(col("d") >= k).select(col("node"))
       e = e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "leftsemi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "leftsemi")
         .select(col("a"), col("b"))
@@ -732,30 +677,9 @@ object Graph {
       n = n2
       round += 1
     }
-    e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    degrees(e, "deg")
   }
 
-  /** Synchronous plurality label propagation (community detection) for a
-    * FIXED number of rounds, fully deterministic: labels start as node
-    * ids; each round every node adopts its neighbors' PLURALITY label,
-    * ties broken to the SMALLEST label (the (count desc, label asc)
-    * rule) — so every round is an exact integer computation any engine
-    * replays (the oracle unrolls the rounds in CTEs, the
-    * kCore/PageRank pattern). Unlike [[Dedup.connectedComponents]]'s
-    * min-label contraction, plurality voting finds DENSE communities
-    * inside a connected component — the co-purchase clustering /
-    * spam-ring grouping primitive. Fixed rounds because sync LPA can
-    * oscillate on bipartite-ish structure; a fixed budget is
-    * deterministic and is how curation pipelines run it.
-    *
-    * Per round: one equi-join of the (loop-invariant, checkpointed)
-    * adjacency onto current labels + two keyed aggregations (vote count,
-    * then per-node argmax via lexicographic struct-min) — 3 shuffles of
-    * the edge set regardless of graph size; labels re-checkpoint every
-    * round, so the plan never deepens. Isolated nodes never appear in
-    * edges and keep their own label by construction of the output join.
-    */
   /** Transitive ancestor closure of a child→parent hierarchy (category
     * trees, org charts, domain hierarchies): returns `(node, ancestor,
     * depth)` for every ancestor within `maxDepth` hops. Doubling
@@ -805,54 +729,82 @@ object Graph {
     closure
   }
 
+  /** Synchronous plurality label propagation (community detection) for a
+    * FIXED number of rounds, fully deterministic: labels start as node
+    * ids; each round every node adopts its neighbors' PLURALITY label,
+    * ties broken to the SMALLEST label (the (count desc, label asc)
+    * rule) — so every round is an exact integer computation any engine
+    * replays (the oracle unrolls the rounds in CTEs, the
+    * kCore/PageRank pattern). Unlike [[Dedup.connectedComponents]]'s
+    * min-label contraction, plurality voting finds DENSE communities
+    * inside a connected component — the co-purchase clustering /
+    * spam-ring grouping primitive. Fixed rounds because sync LPA can
+    * oscillate on bipartite-ish structure; a fixed budget is
+    * deterministic and is how curation pipelines run it.
+    *
+    * Per round: one equi-join of the (loop-invariant, checkpointed)
+    * adjacency onto current labels + two keyed aggregations (vote count,
+    * then per-node argmax via lexicographic struct-min) — 3 shuffles of
+    * the edge set regardless of graph size; labels re-checkpoint every
+    * round, so the plan never deepens. Isolated nodes never appear in
+    * edges and keep their own label by construction of the output join.
+    * A graph of at most [[DriverMaxEdges]] canonical edges runs the same
+    * rounds driver-side.
+    */
   def labelPropagation(
       edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 20, "rounds in [1, 20]")
-    val adj0 = edges.select(col(srcCol).cast("bigint").as("x"),
-        col(dstCol).cast("bigint").as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-    val adjC = adj0.materialize
-    collectIfSmall(adjC) match {
-      case Some(arr) =>
-        // driver twin of the loop below: same synchronous plurality vote
-        // with (votes desc, label asc) ties, same round count
-        val nbrs = scala.collection.mutable.LongMap
-          .empty[scala.collection.mutable.ArrayBuffer[Long]]
-        def add(x: Long, y: Long): Unit =
-          nbrs.getOrElseUpdate(x,
-            scala.collection.mutable.ArrayBuffer.empty[Long]) += y
-        arr.foreach { case (a, b) => add(a, b); add(b, a) }
-        var labels = scala.collection.mutable.LongMap.empty[Long]
-        nbrs.foreachKey(nd => labels(nd) = nd)
-        for (_ <- 1 to rounds) {
-          val next = scala.collection.mutable.LongMap.empty[Long]
-          nbrs.foreach { case (nd, ns) =>
-            val votes = scala.collection.mutable.LongMap.empty[Long]
-            ns.foreach { nb =>
-              val l = labels(nb); votes(l) = votes.getOrElse(l, 0L) + 1L
-            }
-            var bestLabel = Long.MaxValue
-            var bestVotes = -1L
-            votes.foreach { case (l, v) =>
-              if (v > bestVotes || (v == bestVotes && l < bestLabel)) {
-                bestLabel = l; bestVotes = v
-              }
-            }
-            next(nd) = bestLabel
-          }
-          labels = next
+    val e = simpleEdges(edges, srcCol, dstCol)
+    collectIfSmall(e, LongPairs)
+      .map(labelPropagationLocal(e.sparkSession, _, rounds))
+      .getOrElse(labelPropagationDistributed(e, rounds))
+  }
+
+  /** Driver twin of [[labelPropagationDistributed]]: the same synchronous
+    * plurality vote with (votes desc, label asc) ties and the same round
+    * count.
+    */
+  private def labelPropagationLocal(
+      spark: org.apache.spark.sql.SparkSession,
+      arr: Array[(Long, Long)], rounds: Int): DataFrame = {
+    import spark.implicits._
+    val nbrs = scala.collection.mutable.LongMap
+      .empty[scala.collection.mutable.ArrayBuffer[Long]]
+    def add(x: Long, y: Long): Unit =
+      nbrs.getOrElseUpdate(x,
+        scala.collection.mutable.ArrayBuffer.empty[Long]) += y
+    arr.foreach { case (a, b) => add(a, b); add(b, a) }
+    var labels = scala.collection.mutable.LongMap.empty[Long]
+    nbrs.foreachKey(nd => labels(nd) = nd)
+    for (_ <- 1 to rounds) {
+      val next = scala.collection.mutable.LongMap.empty[Long]
+      nbrs.foreach { case (nd, ns) =>
+        val votes = scala.collection.mutable.LongMap.empty[Long]
+        ns.foreach { nb =>
+          val l = labels(nb); votes(l) = votes.getOrElse(l, 0L) + 1L
         }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return spark.createDataset(labels.toSeq.map(t => (t._1, t._2)))
-          .toDF("node", "label")
-      case None => ()
+        var bestLabel = Long.MaxValue
+        var bestVotes = -1L
+        votes.foreach { case (l, v) =>
+          if (v > bestVotes || (v == bestVotes && l < bestLabel)) {
+            bestLabel = l; bestVotes = v
+          }
+        }
+        next(nd) = bestLabel
+      }
+      labels = next
     }
-    val adj = adjC.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(adjC.select(col("b").as("node"), col("a").as("nbr")))
+    spark.createDataset(labels.toSeq).toDF("node", "label")
+  }
+
+  /** The distributed [[labelPropagation]] loop over a [[simpleEdges]]
+    * frame.
+    */
+  private[graft] def labelPropagationDistributed(
+      e: DataFrame, rounds: Int): DataFrame = {
+    val adj = e.select(col("a").as("node"), col("b").as("nbr"))
+      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
       .materialize
     val nodes = adj.select(col("node")).distinct().materialize
     var labels = nodes.withColumn("label", col("node")).materialize

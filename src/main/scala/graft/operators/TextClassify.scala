@@ -39,7 +39,7 @@ object TextClassify {
       gridCells: Long = Long.MaxValue)
 
   /** Grid-size gate for broadcasting the serve join (the
-    * [[Graph.DriverGraphMaxEdges]] bounded-state pattern): 10⁶
+    * [[Graph.DriverMaxEdges]] bounded-state pattern): 10⁶
     * (term, class, weight) rows is tens of MB framed — comfortably
     * inside executor broadcast budgets; larger vocabularies keep the
     * term-keyed shuffle join, so the 100 TB path is untouched.

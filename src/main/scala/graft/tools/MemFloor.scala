@@ -11,8 +11,9 @@ package graft.tools
   * identical to the 8g run demonstrates the plans spill instead of
   * ballooning: in local mode -Xmx bounds driver AND all executor threads
   * together, so this is the harshest memory shape the composition can
-  * meet. Each entry runs as Bench runs it (graft.Pipelines.runEntry:
-  * untimed prepare, timed body). Usage:
+  * meet. Each entry runs as Bench runs it (graft.Pipelines.warmUp
+  * first, then graft.Pipelines.runEntry: untimed prepare, timed body).
+  * Usage:
   *
   *   SPARK_DRIVER_MEM=2g SPARK_GRAFT_CPUS=8 \
   *     sbt "runMain graft.tools.MemFloor /root/testdata/sf0.1"
@@ -35,6 +36,7 @@ object MemFloor {
     val cpus = graft.SparkEntry.localCpus
     val spark = graft.SparkEntry.localSession(cpus)
     val heapMb = Runtime.getRuntime.maxMemory() >> 20
+    graft.Pipelines.warmUp(spark, sfDir)
     val fields = graft.Pipelines.benchEntries.filter(e => Entries.contains(e.name))
       .map { e =>
         val (secs, counts) = graft.Pipelines.runEntry(spark, sfDir, e) { body =>

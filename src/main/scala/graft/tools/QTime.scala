@@ -3,7 +3,8 @@ package graft.tools
 /** Targeted timer: run named entries — registry queries or Bench's
   * non-registry entries (graft.Pipelines.benchEntries, prepared untimed
   * exactly as Bench does) — against a data dir without paying the full
-  * Bench sweep; all registry queries if none named.
+  * Bench sweep; all registry queries if none named. Bench's untimed
+  * warm-up runs first.
   * Usage: runMain graft.tools.QTime <sfDir> [entryName ...]
   */
 object QTime {
@@ -11,6 +12,7 @@ object QTime {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.SparkEntry.localSession()
     graft.Tables.registerAll(spark, sfDir)
+    graft.Pipelines.warmUp(spark, sfDir)
     val queries = graft.SparkEntry.queries
     def time(name: String)(run: => String): Unit = {
       val t0 = System.nanoTime()

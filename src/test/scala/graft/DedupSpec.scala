@@ -179,8 +179,8 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // diameter 49 — min-label propagation needed ~49 rounds and could not
     // converge inside maxIter=20; large-star/small-star is O(log n) rounds
-    val pairs = (1L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs).collect()
+    val edges = (1L until 50L).map(i => (i, i + 1)).toDF("src", "dst")
+    val comps = Dedup.starComponents(edges, maxIter = 50).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps.size === 50)
     assert(comps.values.forall(_ == 1L), "every chain node labels to the minimum")
@@ -217,6 +217,10 @@ class DedupSpec extends SparkSpec {
       val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === want, s"trial $trial with ${edges.size} edges")
+      // the distributed star rounds on the same bigint edges
+      val stars = Dedup.starComponents(edges.distinct.toDF("src", "dst"), maxIter = 50)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(stars === want, s"star rounds, trial $trial")
     }
   }
 

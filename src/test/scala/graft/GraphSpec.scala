@@ -74,14 +74,6 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  /** Run `body` with the driver-twin gate disabled, forcing the
-    * distributed loops regardless of graph size. */
-  private def distributedOnly[A](body: => A): A = {
-    val saved = Graph.DriverGraphMaxEdges
-    Graph.DriverGraphMaxEdges = -1L
-    try body finally Graph.DriverGraphMaxEdges = saved
-  }
-
   test("pageRank/personalizedPageRank/hits: driver twin == distributed loop") {
     // the gated driver rounds must replay the distributed integer
     // recurrences bit-for-bit on an irregular pseudo-random graph
@@ -91,48 +83,33 @@ class GraphSpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val prD = Graph.pageRank(e, "src", "dst", "w", iterations = 4)
       .as[(Long, Long)].collect().toMap
-    val prX = distributedOnly(
-      Graph.pageRank(e, "src", "dst", "w", iterations = 4)
-        .as[(Long, Long)].collect().toMap)
+    val prX = Graph.pageRankDistributed(e, 4, 850000L, seeds = None)
+      .as[(Long, Long)].collect().toMap
     assert(prD === prX)
     val pprD = Graph.personalizedPageRank(
         e, "src", "dst", "w", seeds = Seq(1L, 5L, 9L), iterations = 4)
       .as[(Long, Long)].collect().toMap
-    val pprX = distributedOnly(Graph.personalizedPageRank(
-        e, "src", "dst", "w", seeds = Seq(1L, 5L, 9L), iterations = 4)
-      .as[(Long, Long)].collect().toMap)
+    val pprX = Graph.pageRankDistributed(e, 4, 850000L, Some(Seq(1L, 5L, 9L)))
+      .as[(Long, Long)].collect().toMap
     assert(pprD === pprX)
     val hD = Graph.hits(e, "src", "dst", iterations = 3)
       .as[(Long, Long, Long)].collect().sorted
-    val hX = distributedOnly(Graph.hits(e, "src", "dst", iterations = 3)
-      .as[(Long, Long, Long)].collect().sorted)
+    val hX = Graph.hitsDistributed(e.select("src", "dst").distinct(), 3)
+      .as[(Long, Long, Long)].collect().sorted
     assert(hD === hX)
   }
 
-  test("pageRank with the driver gate at Int.MaxValue keeps the driver path") {
-    val e = (0L until 20L).map(i => (i, (i * 7 + 1) % 20, i % 3 + 1))
-      .toDF("src", "dst", "w")
-    val want = Graph.pageRank(e, "src", "dst", "w", iterations = 3)
-      .as[(Long, Long)].collect().toMap
-    val saved = Graph.DriverGraphMaxEdges
-    Graph.DriverGraphMaxEdges = Int.MaxValue.toLong
-    val got = try Graph.pageRank(e, "src", "dst", "w", iterations = 3)
-      .as[(Long, Long)].collect().toMap
-    finally Graph.DriverGraphMaxEdges = saved
-    assert(got === want)
-  }
-
   test("pageRank derives an expensive edge join ONCE, not once per iteration") {
-    distributedOnly {
     // Build the edge table from a join (the q97 shape: edges are themselves
-    // a fact join). After pageRank's localCheckpoint the returned plan must
-    // read materialized blocks — the edge-derivation join and its source
-    // columns must NOT appear anywhere in the iteration lineage.
+    // a fact join). After the distributed loop's localCheckpoints the
+    // returned plan must read materialized blocks — the edge-derivation
+    // join and its source columns must NOT appear anywhere in the
+    // iteration lineage.
     val pairs = (0L until 30L).map(i => (i, (i * 11 + 3) % 30)).toDF("a_id", "b_id")
     val weights = (0L until 30L).map(i => (i, i % 4 + 1)).toDF("b_id", "edge_build_weight")
     val edges = pairs.join(weights, Seq("b_id"))
-      .select(col("a_id").as("s"), col("b_id").as("d"), col("edge_build_weight").as("wt"))
-    val pr = Graph.pageRank(edges, "s", "d", "wt", iterations = 3)
+      .select(col("a_id").as("src"), col("b_id").as("dst"), col("edge_build_weight").as("w"))
+    val pr = Graph.pageRankDistributed(edges, 3, 850000L, seeds = None)
     val plan = pr.queryExecution.optimizedPlan.toString
     // checkpoint cut the lineage: the derivation join key/weight columns are gone
     assert(!plan.contains("edge_build_weight") && !plan.contains("a_id"),
@@ -143,14 +120,13 @@ class GraphSpec extends SparkSpec {
     assert(joins == 2 * 3, s"expected 6 joins in 3-iteration plan, got $joins:\n$plan")
     // and the values still match the closed recurrence on the same graph
     assert(pr.as[(Long, Long)].collect().toMap.values.sum > 0)
-    }
   }
 
   test("pageRank is deterministic under repartitioning") {
     val e = (0L until 50L).flatMap(i => Seq((i, (i * 3) % 50, i % 4 + 1), (i, (i + 7) % 50, 2L)))
       .toDF("src", "dst", "w")
-    val a = Graph.pageRank(e, "src", "dst", "w", iterations = 3)
-    val b = Graph.pageRank(e.repartition(11), "src", "dst", "w", iterations = 3)
+    val a = Graph.pageRankDistributed(e, 3, 850000L, seeds = None)
+    val b = Graph.pageRankDistributed(e.repartition(11), 3, 850000L, seeds = None)
     assert(a.except(b).count() === 0 && b.except(a).count() === 0)
   }
 
@@ -205,6 +181,25 @@ class GraphSpec extends SparkSpec {
     // peel next round — the documented converged-iff-all-deg>=k contract
     val got = core(2, maxRounds = 1)((1L, 2L), (2L, 3L), (3L, 4L))
     assert(got === Map(2L -> 1L, 3L -> 1L))
+  }
+
+  test("kCore: driver path == distributed loop (multi-round peel, exhausted budget)") {
+    // a pseudo-random 20-node graph plus a 6-node tail, which k = 2 peels
+    // one node per round from its free end
+    val rnd = new scala.util.Random(13)
+    val edges = (1 to 120).map(_ => (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong)) ++
+      (100L until 105L).map(i => (i, i + 1)) :+ ((105L, 0L))
+    val e = Graph.simpleEdges(edges.toDF("s", "d"), "s", "d")
+    // (2, 30) converges after 7 rounds, (2, 3) exhausts its budget, the
+    // higher k peel the core itself
+    for ((k, maxRounds) <- Seq((2, 30), (2, 3), (7, 6), (8, 6))) {
+      val driver = core(k, maxRounds)(edges: _*)
+      val dist = Graph.kCoreDistributed(e, k, maxRounds)
+        .as[(Long, Long)].collect().toMap
+      assert(driver === dist, s"k=$k maxRounds=$maxRounds")
+      assert(driver.contains(104L) === (k == 2 && maxRounds == 3),
+        s"k=$k maxRounds=$maxRounds: the tail outlives only the 3-round budget")
+    }
   }
 
   // -------------------------------------------------------- ancestorClosure
@@ -274,10 +269,10 @@ class GraphSpec extends SparkSpec {
   test("labelPropagation is deterministic under repartitioning") {
     val edges = (0L until 300L).map(i => (i % 29, (i * 11 + 5) % 29))
       .filter(e => e._1 != e._2)
-    val df = edges.toDF("s", "d")
-    val a = Graph.labelPropagation(df, "s", "d", rounds = 3)
+    val e = Graph.simpleEdges(edges.toDF("s", "d"), "s", "d")
+    val a = Graph.labelPropagationDistributed(e, rounds = 3)
       .as[(Long, Long)].collect().toMap
-    val b = Graph.labelPropagation(df.repartition(13), "s", "d", rounds = 3)
+    val b = Graph.labelPropagationDistributed(e.repartition(13), rounds = 3)
       .as[(Long, Long)].collect().toMap
     assert(a === b)
   }
@@ -297,6 +292,21 @@ class GraphSpec extends SparkSpec {
       }
     }
     assert(got === labels)
+  }
+
+  test("labelPropagation: driver path == distributed loop, plurality ties included") {
+    // the star's center and every node of the 31-cycle graph see only
+    // tied votes; the random graph mixes ties with clear pluralities
+    val star = (1L to 4L).map(l => (5L, l))
+    val cycles = (0L until 400L).map(i => (i % 31, (i * 13 + 7) % 31))
+    val rnd = new scala.util.Random(37)
+    val random = (1 to 60).map(_ => (rnd.nextInt(15).toLong, rnd.nextInt(15).toLong))
+    for ((graph, name) <- Seq(star -> "star", cycles -> "cycles", random -> "random")) {
+      val dist = Graph.labelPropagationDistributed(
+          Graph.simpleEdges(graph.toDF("s", "d"), "s", "d"), rounds = 3)
+        .as[(Long, Long)].collect().toMap
+      assert(lpa(3)(graph: _*) === dist, name)
+    }
   }
 
   test("ancestorClosure matches a driver-side BFS on a random forest") {
@@ -481,8 +491,8 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (1L, 2L))
     val a = Graph.hits(edges.toDF("s", "d"), "s", "d", iterations = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val b = Graph.hits(edges.toDF("s", "d").repartition(7), "s", "d",
-        iterations = 2)
+    val b = Graph.hitsDistributed(
+        edges.distinct.toDF("src", "dst").repartition(7), iterations = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(a === b)
     assert(a === hitsRef(edges, 2).map { case (n, (h, au)) => (n, h, au) }.toSet)

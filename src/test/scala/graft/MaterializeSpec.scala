@@ -12,8 +12,8 @@ import graft.operators.{Dedup, Graph, Materialize}
   * is configured (the 100 TB cluster deployment — executor loss
   * mid-iteration becomes a re-read instead of a dead job) and to
   * `localCheckpoint` otherwise (the local fast path). Both modes must be
-  * bit-identical; this spec runs PageRank and connected components in
-  * both and compares row-for-row.
+  * bit-identical; this spec runs the distributed PageRank and connected
+  * components loops in both and compares row-for-row.
   */
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
@@ -62,7 +62,7 @@ class MaterializeSpec extends SparkSpec {
       (4L, 5L, 1L), (5L, 6L, 2L), (6L, 4L, 1L),
       (3L, 4L, 1L), (6L, 7L, 1L), (7L, 8L, 4L))
       .toDF("src", "dst", "w")
-    def run() = Graph.pageRank(edges, "src", "dst", "w", iterations = 12)
+    def run() = Graph.pageRankDistributed(edges, 12, 850000L, seeds = None)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
     val reliable = withCheckpointDir { _ => run() }
@@ -72,18 +72,16 @@ class MaterializeSpec extends SparkSpec {
 
   test("connectedComponents is bit-identical between localCheckpoint " +
       "mode and reliable-checkpoint mode") {
-    // a 12-node path (worst case for alternating stars), a 4-clique, a
-    // self-loop-only node
-    val pairs = ((1L to 11L).map(i => (i, i + 1)) ++
-      Seq((20L, 21L), (20L, 22L), (20L, 23L), (21L, 22L), (22L, 23L),
-        (30L, 30L)))
-      .toDF("id_a", "id_b")
-    def run() = Dedup.connectedComponents(pairs)
+    // a 12-node path (worst case for alternating stars) and a 4-clique
+    val edges = ((1L to 11L).map(i => (i, i + 1)) ++
+      Seq((20L, 21L), (20L, 22L), (20L, 23L), (21L, 22L), (22L, 23L)))
+      .toDF("src", "dst")
+    def run() = Dedup.starComponents(edges, maxIter = 50)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
     val reliable = withCheckpointDir { _ => run() }
     assert(reliable === local)
     assert(local.filterKeys(_ <= 12L).values.toSet === Set(1L))
-    assert(local(30L) === 30L)
+    assert(local.filterKeys(_ >= 20L).values.toSet === Set(20L))
   }
 }
