@@ -25,6 +25,10 @@ import org.apache.spark.sql.graftvec.{FilterExprs, TextExprs, VectorExprs}
   * No custom Rule/SparkStrategy is registered — the reference surface
   * needs none (SURVEY.md §4.2); expression-level extension is the whole
   * crossing.
+  *
+  * Loading the extensions also registers [[graft.fs.LocalFs]] as the
+  * default FileContext binding of `file:`, so the session's streaming
+  * checkpoints are written without a child process per file.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -45,6 +49,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    graft.fs.LocalFs.register()
     ext.injectFunction((
       FunctionIdentifier("minhash_band_keys"),
       info("minhash_band_keys",

@@ -103,81 +103,62 @@ object EwmaPipeline {
     * delivery is actually idempotent, mirroring the Connect sink's pk
     * semantics (raw-pg.json:11):
     *  - within the batch: `dropDuplicates(pk)`;
-    *  - against the TABLE: anti-join on the existing pk values — a batch
-    *    replayed after a crash (JDBC append committed, checkpoint offset
-    *    not) re-runs but inserts nothing, instead of duplicating rows or
-    *    crash-looping on a real pk constraint.
-    * For NUMERIC and TEMPORAL pks the probe is BOUNDED by the batch's pk
-    * [min, max]: the range filter pushes down into the database's WHERE
-    * clause, so probe cost tracks the batch's key span, not the table's
-    * full history — the unbounded whole-column read would grow linearly
-    * with table age at scale. STRING pks deliberately fall back to the
-    * unbounded probe: the database evaluates the pushed range under ITS
-    * collation, and a linguistic or case-insensitive collation (e.g.
-    * Postgres 'en_US' where 'a' < 'B') orders differently from Spark's
-    * binary UTF8 comparison — an existing pk equal to a batch pk could
-    * fall outside the DB-evaluated range, the anti-join would miss it,
-    * and a crash replay would re-insert the row. Numeric/temporal
-    * comparisons have no collation, so the pushdown is always exact for
-    * them. A dialect MERGE would subsume both layers where available.
+    *  - against the TABLE: keys the table already holds are not inserted
+    *    again — a batch replayed after a crash (JDBC append committed,
+    *    checkpoint offset not) or a key redelivered in a later batch
+    *    inserts nothing, instead of duplicating rows or crash-looping on a
+    *    real pk constraint.
+    * The second layer runs inside the one Spark action of a batch
+    * ([[org.apache.spark.sql.graftvec.JdbcAppend]]): the dedup shuffle puts
+    * each key in exactly one task, and each task probes the table for its
+    * own keys on its own connection, drops the ones it finds and inserts
+    * the rest through Spark's `JdbcUtils.savePartition` (the type mapping,
+    * batching, isolation and per-partition transaction of `write.jdbc`).
+    * For NUMERIC and TEMPORAL pks the probe reads only the task's pk
+    * [min, max] range, so its cost tracks the batch's key span, not the
+    * table's history. Other pks (strings) read the whole pk column: the
+    * database would compare them under ITS collation (e.g. Postgres
+    * 'en_US', where 'a' < 'B'), which can disagree with Spark's, and a
+    * replayed row would be re-inserted. Spark compares the keys in every
+    * case, as the anti-join it replaces did. A dialect MERGE would
+    * subsume both layers where available.
     *
-    * Table absence (the first-batch case) is detected explicitly through
-    * `DatabaseMetaData.getTables`, NOT by catching the probe's exception:
-    * a transient JDBC failure during the anti-join probe — exactly the
-    * crash-replay window this dedup exists for — must fail the batch so
-    * the trigger retries, never silently degrade to a blind append.
+    * While the table is absent (the first batch), Spark's writer creates
+    * and fills it. Absence is decided by `DatabaseMetaData.getTables`
+    * ([[jdbcTableExists]]), NOT by catching a probe's exception: a
+    * transient JDBC failure during the probe — exactly the crash-replay
+    * window this dedup exists for — fails the batch so the trigger
+    * retries, never silently degrading to a blind append. Within one
+    * query run the table's presence and read schema are remembered, so a
+    * batch plans one query and runs one action; if the table is dropped
+    * later, the next probe fails the batch. Absence is never remembered.
     */
   def jdbcSink(
       df: DataFrame, url: String, table: String,
       props: java.util.Properties, pkCol: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+    // the table's read schema, per query run (a run's batches share its session)
+    var seen: Option[(SparkSession, StructType)] = None
     df.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        val spark = batch.sparkSession
         val fresh = batch.dropDuplicates(pkCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val bounds = fresh.agg(min(col(pkCol)), max(col(pkCol))).head()
-          val toInsert =
-            if (bounds.isNullAt(0)) fresh // empty batch: nothing to probe
-            else if (jdbcTableExists(url, table, props)) {
-              val existing =
-                if (collationFreePkType(fresh.schema(pkCol).dataType))
-                  boundedPkProbe(
-                    batch.sparkSession, url, table, props, pkCol, bounds.get(0), bounds.get(1))
-                else // string pk: DB collation may disagree with Spark's
-                  batch.sparkSession.read.jdbc(url, table, props).select(col(pkCol))
-              fresh.join(existing, Seq(pkCol), "left_anti")
-            } else fresh // genuinely absent: first batch auto-creates it
-          toInsert.write.mode("append").jdbc(url, table, props)
-        } finally fresh.unpersist()
+        val tableSchema = seen.collect { case (s, t) if s eq spark => t }.orElse(
+          Option.when(jdbcTableExists(url, table, props))(
+            spark.read.jdbc(url, table, props).schema))
+        seen = tableSchema.map(spark -> _)
+        tableSchema match {
+          case None => fresh.write.mode("append").jdbc(url, table, props)
+          case Some(t) =>
+            val append = org.apache.spark.sql.graftvec.JdbcAppend.forTable(
+              spark, url, table, props, fresh.schema, pkCol, t)
+            fresh.foreachPartition((rows: Iterator[org.apache.spark.sql.Row]) =>
+              append.insertAbsent(rows))
+        }
       }
-
-  /** The existing-pk read behind [[jdbcSink]]'s anti-join, bounded to the
-    * replaying batch's pk range. Both comparisons are JDBC-pushdown-able
-    * filters (`PushedFilters: [GreaterThanOrEqual, LessThanOrEqual]` on
-    * the scan — asserted by JdbcSinkSpec), so the database answers from
-    * its pk index instead of shipping the whole column.
-    */
-  /** True iff range comparisons on this pk type mean the same thing in
-    * Spark and in any JDBC database: numeric and temporal orderings are
-    * collation-free, string ordering is NOT (see [[jdbcSink]] scaladoc).
-    */
-  private[graft] def collationFreePkType(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case _: NumericType | DateType | TimestampType | TimestampNTZType => true
-      case _ => false
-    }
   }
-
-  private[graft] def boundedPkProbe(
-      spark: SparkSession, url: String, table: String,
-      props: java.util.Properties, pkCol: String, lo: Any, hi: Any): DataFrame =
-    spark.read.jdbc(url, table, props)
-      .select(col(pkCol))
-      .filter(col(pkCol) >= lit(lo) && col(pkCol) <= lit(hi))
 
   /** True iff `table` exists per JDBC catalog metadata. Matches the table
     * name case-insensitively (Derby/Postgres fold unquoted identifiers in

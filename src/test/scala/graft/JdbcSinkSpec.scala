@@ -3,7 +3,10 @@ package graft
 import java.nio.file.Files
 import java.util.Properties
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftvec.JdbcAppend
 
 import graft.streaming.EwmaPipeline
 
@@ -90,17 +93,41 @@ class JdbcSinkSpec extends SparkSpec {
     }
   }
 
-  test("bounded probe is used only for collation-free pk types") {
+  test("task probe bounds its read to the pk range only for collation-free pk types") {
+    import java.sql.{Date, Timestamp}
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    // numeric/temporal orderings mean the same thing in Spark and any DB
-    for (dt <- Seq(LongType, IntegerType, DoubleType, DecimalType(10, 2),
-        DateType, TimestampType, TimestampNTZType))
-      assert(EwmaPipeline.collationFreePkType(dt), s"$dt should allow the bounded probe")
-    // string ordering is collation-dependent (e.g. Postgres 'a' < 'B'):
-    // a pushed [lo,hi] range evaluated under the DB's collation can
-    // exclude an existing pk Spark considers in-range -> replay dup
-    for (dt <- Seq(StringType, BinaryType, BooleanType))
-      assert(!EwmaPipeline.collationFreePkType(dt), s"$dt must use the unbounded probe")
+    val props = new Properties()
+    props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    def sql(dt: DataType, keys: Any*): String = {
+      val schema = StructType(Seq(StructField("pk", dt), StructField("v", DoubleType)))
+      JdbcAppend.forTable(spark, url, "t", props, schema, "pk", schema)
+        .probeSql(keys.map(k => Row(k, 1.0)).toArray)
+    }
+    // numeric/temporal orderings mean the same thing in Spark and any DB:
+    // the read is bounded by the task's own [min, max], both inclusive
+    val bounded = Seq(
+      (LongType, Seq(150L, 100L, 200L), "100", "200"),
+      (IntegerType, Seq(150, 100, 200), "100", "200"),
+      (DoubleType, Seq(1.5, 1.0, 2.0), "1.0", "2.0"),
+      (DecimalType(10, 2), Seq("1.50", "1.00", "2.00").map(new java.math.BigDecimal(_)),
+        "1.00", "2.00"),
+      (DateType, Seq("2024-01-02", "2024-01-01", "2024-01-03").map(Date.valueOf),
+        "'2024-01-01'", "'2024-01-03'"),
+      (TimestampType, Seq("01", "00", "02").map(s => Timestamp.valueOf(s"2024-01-01 00:00:$s")),
+        "'2024-01-01 00:00:00.0'", "'2024-01-01 00:00:02.0'"),
+      (TimestampNTZType, Seq("01", "00", "02").map(s =>
+        java.time.LocalDateTime.parse(s"2024-01-01T00:00:$s")),
+        "'2024-01-01 00:00:00'", "'2024-01-01 00:00:02'"))
+    for ((dt, keys, lo, hi) <- bounded)
+      assert(sql(dt, (keys :+ null): _*) ===
+        s"""SELECT "pk" FROM t WHERE "pk" >= $lo AND "pk" <= $hi""", s"$dt")
+    assert(sql(LongType, 7L).endsWith(""""pk" >= 7 AND "pk" <= 7"""))
+    // string ordering is collation-dependent (e.g. Postgres 'a' < 'B'), and
+    // non-finite doubles have no SQL literal: the whole column is read
+    for ((dt, k) <- Seq(StringType -> "a", BinaryType -> Array[Byte](1),
+        BooleanType -> true, DoubleType -> Double.NaN))
+      assert(sql(dt, k) === """SELECT "pk" FROM t""", s"$dt must read the whole column")
   }
 
   test("string-pk sink stays replay-idempotent via the unbounded probe") {
@@ -125,22 +152,87 @@ class JdbcSinkSpec extends SparkSpec {
       "string-pk replay must not re-insert rows")
   }
 
-  test("idempotency probe pushes the batch pk range down to the database") {
+  test("task probe drops keys held at both range bounds and inside it") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val props = new Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
-    val probe = EwmaPipeline.boundedPkProbe(
-      spark, url, "raw_events", props, "event_id", 100L, 200L)
-    val scan = probe.queryExecution.executedPlan.toString
-    assert(scan.contains("GreaterThanOrEqual(EVENT_ID,100)") ||
-      scan.contains("GreaterThanOrEqual(event_id,100)"),
-      s"pk lower bound not pushed to JDBC:\n$scan")
-    assert(scan.contains("LessThanOrEqual(EVENT_ID,200)") ||
-      scan.contains("LessThanOrEqual(event_id,200)"),
-      s"pk upper bound not pushed to JDBC:\n$scan")
-    // and the bounded read is still correct
-    val n = probe.count()
-    val want = spark.read.jdbc(url, "raw_events", props)
-      .filter(col("event_id").between(100L, 200L)).count()
-    assert(n === want)
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      // an INTEGER column under a bigint stream pk: keys compare as bigint,
+      // the wider of the two types, as the anti-join coerced them
+      conn.createStatement().execute("CREATE TABLE probe_keys (id INTEGER PRIMARY KEY, v DOUBLE)")
+      conn.createStatement().execute(
+        "INSERT INTO probe_keys VALUES (100, 0), (150, 0), (200, 0), (300, 0)")
+      val schema = StructType(Seq(StructField("id", LongType), StructField("v", DoubleType)))
+      val append = JdbcAppend.forTable(spark, url, "probe_keys", props, schema, "id",
+        spark.read.jdbc(url, "probe_keys", props).schema)
+      val batch = Array[Row](Row(200L, 1.0), Row(125L, 1.0), Row(100L, 1.0),
+        Row(null, 1.0), Row(150L, 1.0), Row(175L, 1.0))
+      // 300 lies outside the task's range: the probe never reads it
+      assert(append.probeSql(batch).endsWith(""""ID" >= 100 AND "ID" <= 200"""))
+      // held at the min bound, at the max bound and inside: dropped; a
+      // null key matches nothing, as in the anti-join
+      assert(append.absent(conn, batch).map(r => Option(r.get(0))).toSeq ===
+        Seq(Some(125L), None, Some(175L)))
+    } finally {
+      try conn.createStatement().execute("DROP TABLE probe_keys") finally conn.close()
+    }
+  }
+
+  test("cross-batch redelivery lands once; later batches run at most 2 jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.Encoder
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val props = new Properties()
+    props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    // (query id, batch id) of every streaming job, plus the marker job that
+    // shows every earlier job start has been delivered
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        Option(p.getProperty("sql.streaming.queryId")).foreach(q =>
+          started.add(q -> p.getProperty("streaming.sql.batchId")))
+        Option(p.getProperty("graft.spec.marker")).foreach(m => started.add("marker" -> m))
+      }
+    }
+    def settle(tag: String): Unit = {
+      spark.sparkContext.setLocalProperty("graft.spec.marker", tag)
+      try spark.range(1).collect() finally spark.sparkContext.setLocalProperty("graft.spec.marker", null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.contains("marker" -> tag) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(started.contains("marker" -> tag), "listener events not delivered")
+    }
+    def redeliver[K: Encoder](table: String, batches: Seq[Seq[K]]): Unit = {
+      implicit val enc: Encoder[(K, Double)] =
+        org.apache.spark.sql.Encoders.tuple(implicitly[Encoder[K]], org.apache.spark.sql.Encoders.scalaDouble)
+      val src = MemoryStream[(K, Double)](spark)
+      val ckpt = Files.createTempDirectory("graft-jdbc-redeliver-").toString
+      val q = EwmaPipeline.jdbcSink(src.toDF().toDF("pk", "v"), url, table, props, "pk", ckpt)
+        .start()
+      try batches.foreach { keys =>
+        src.addData(keys.map(_ -> 1.0): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val want = batches.flatten.distinct
+      val back = spark.read.jdbc(url, table, props)
+      assert(back.count() === want.size, s"$table: a redelivered key was inserted twice")
+      assert(back.select("pk").as[K].collect().toSet === want.toSet)
+      settle(table)
+      val jobs = started.asScala.toSeq.collect { case (id, b) if id == q.id.toString => b.toLong }
+        .groupBy(identity).view.mapValues(_.size).toMap
+      val later = q.recentProgress.filter(p => p.batchId > 0 && p.numInputRows > 0).map(_.batchId)
+      assert(later.length === batches.length - 1, s"$table: one batch per addData")
+      for (b <- later)
+        assert(jobs.get(b).exists(n => n >= 1 && n <= 2),
+          s"$table: batch $b ran ${jobs.getOrElse(b, 0)} Spark jobs; want 1-2")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      redeliver("redeliver_long", Seq(Seq(1L, 1L, 2L, 3L), Seq(3L, 4L, 5L), Seq(5L, 6L, 1L)))
+      redeliver("redeliver_str", Seq(Seq("a", "a", "b", "c"), Seq("c", "d", "e"), Seq("e", "f", "a")))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
