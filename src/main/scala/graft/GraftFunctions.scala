@@ -23,7 +23,7 @@ import graft.functions.{EwmaFunctions, VectorAggregates}
   */
 object GraftFunctions {
   def registerAggregates(spark: SparkSession): Unit = {
-    spark.udf.register("ewma_agg", EwmaFunctions.ewmaSqlUdaf)
+    spark.udf.register("ewma_agg", EwmaFunctions.ewmaUdaf)
     spark.udf.register("vec_sum_agg",
       udaf(new VectorAggregates.VecSumAgg,
         Encoders.product[VectorAggregates.VecRow]))

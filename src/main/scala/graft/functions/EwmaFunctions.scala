@@ -6,8 +6,6 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-import graft.model.PricePoint
-
 /** The reference's EWMA fold, re-expressed Spark-first.
   *
   * Exact semantics (reference indicators.rs:13-26 + agg-producer
@@ -59,66 +57,35 @@ object EwmaFunctions {
         s => s.getField("v")),
       alphaVal)
 
-  /** Scala-side oracle of the fold — the 6-line truth every test pins to. */
+  /** One fold step, `alpha * x + (1 - alpha) * acc` — the Scala folds
+    * below all call this, so they stay bit-identical to each other and to
+    * [[ewmaFold]]'s `lit(alpha) * x + lit(1 - alpha) * acc`.
+    */
+  def step(acc: Double, x: Double, alphaVal: Double): Double =
+    alphaVal * x + (1.0 - alphaVal) * acc
+
+  /** Scala-side oracle of the fold — the truth every test pins to. */
   def foldOracle(prices: Seq[Double], alphaVal: Double): Double =
-    prices.foldLeft(0.0)((acc, x) => alphaVal * x + (1.0 - alphaVal) * acc)
+    prices.foldLeft(0.0)(step(_, _, alphaVal))
 
-  /** Typed order-sensitive EWMA aggregator (scale path).
-    *
-    * Buffer = unsorted growable array of (ts, seq, price); `merge` is a
-    * concat (commutative w.r.t. the final sorted fold), `finish` sorts by
-    * (ts, seq) and left-folds. State per group is O(window size) — at the
-    * 100 TB design point windows are bounded by (key x window length), the
-    * same bound the built-in collect_list path has, but with cheaper
-    * per-row appends and a single sort per group.
-    */
-  class EwmaAggregator(alphaVal: Double)
-      extends Aggregator[PricePoint, ArrayBuffer[PricePoint], Double] {
-    override def zero: ArrayBuffer[PricePoint] = ArrayBuffer.empty
-    override def reduce(b: ArrayBuffer[PricePoint], a: PricePoint): ArrayBuffer[PricePoint] = {
-      b += a; b
-    }
-    override def merge(b1: ArrayBuffer[PricePoint], b2: ArrayBuffer[PricePoint]): ArrayBuffer[PricePoint] = {
-      b1 ++= b2; b1
-    }
-    override def finish(b: ArrayBuffer[PricePoint]): Double = {
-      // full-tuple order including price: ties on (ts, seq) must fold
-      // deterministically regardless of partition merge order, matching
-      // array_sort's lexicographic struct order in the built-in path
-      val sorted = b.sortBy(p => (p.ts, p.seq, p.price))
-      var cur = 0.0
-      var i = 0
-      while (i < sorted.length) {
-        cur = alphaVal * sorted(i).price + (1.0 - alphaVal) * cur
-        i += 1
-      }
-      cur
-    }
-    override def bufferEncoder: Encoder[ArrayBuffer[PricePoint]] =
-      implicitly[Encoder[ArrayBuffer[PricePoint]]](
-        org.apache.spark.sql.Encoders.kryo[ArrayBuffer[PricePoint]])
-    override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
-  /** Untyped (Column) form of [[EwmaAggregator]]: call with the three flat
-    * columns `(ts, seq, price)` — the product encoder maps one arg per field.
-    */
-  def ewmaUdaf(alphaVal: Double): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new EwmaAggregator(alphaVal), Encoders.product[PricePoint])
-
-  /** Row shape for the SQL-registered form: alpha rides as a fourth
-    * (constant) argument because `spark.udf.register` binds one function
-    * object — a pure-SQL caller has no closure to carry alpha in.
+  /** Input row of [[EwmaAggregator]]: alpha rides as a fourth (constant)
+    * argument because `spark.udf.register` binds one function object — a
+    * pure-SQL caller has no closure to carry alpha in.
     */
   case class PricePointA(ts: Long, seq: Long, price: Double, alpha: Double)
 
-  /** SQL-callable EWMA aggregate: `ewma_agg(ts, seq, price, alpha)` after
-    * [[graft.GraftFunctions.registerAggregates]]. Same pinned fold as
-    * [[EwmaAggregator]] ((ts, seq, price) order, zero seed, IEEE-754 left
-    * fold); alpha must be the SAME literal on every row of a group —
-    * mixed values raise rather than silently folding with one of them.
+  /** Typed order-sensitive EWMA aggregator (scale path).
+    *
+    * Buffer = unsorted growable array of (ts, seq, price, alpha); `merge`
+    * is a concat (commutative w.r.t. the final sorted fold), `finish`
+    * sorts by (ts, seq, price) and left-folds. State per group is
+    * O(window size) — at the 100 TB design point windows are bounded by
+    * (key x window length), the same bound the built-in collect_list path
+    * has, but with cheaper per-row appends and a single sort per group.
+    * Alpha must be the SAME value on every row of a group — mixed values
+    * raise rather than silently folding with one of them.
     */
-  class EwmaSqlAggregator
+  class EwmaAggregator
       extends Aggregator[PricePointA, ArrayBuffer[PricePointA], Double] {
     override def zero: ArrayBuffer[PricePointA] = ArrayBuffer.empty
     override def reduce(b: ArrayBuffer[PricePointA], a: PricePointA): ArrayBuffer[PricePointA] = {
@@ -133,22 +100,21 @@ object EwmaFunctions {
         val a = b.head.alpha
         require(b.forall(_.alpha == a),
           "ewma_agg: alpha must be constant within a group")
-        val sorted = b.sortBy(p => (p.ts, p.seq, p.price))
-        var cur = 0.0
-        var i = 0
-        while (i < sorted.length) {
-          cur = a * sorted(i).price + (1.0 - a) * cur
-          i += 1
-        }
-        cur
+        // full-tuple order including price: ties on (ts, seq) must fold
+        // deterministically regardless of partition merge order, matching
+        // array_sort's lexicographic struct order in the built-in path
+        b.sortBy(p => (p.ts, p.seq, p.price)).foldLeft(0.0)((acc, p) => step(acc, p.price, a))
       }
     override def bufferEncoder: Encoder[ArrayBuffer[PricePointA]] =
-      implicitly[Encoder[ArrayBuffer[PricePointA]]](
-        org.apache.spark.sql.Encoders.kryo[ArrayBuffer[PricePointA]])
+      Encoders.kryo[ArrayBuffer[PricePointA]]
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** The [[EwmaSqlAggregator]] as a registrable UDF object. */
-  def ewmaSqlUdaf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new EwmaSqlAggregator, Encoders.product[PricePointA])
+  /** [[EwmaAggregator]] as one UDAF for both APIs: Column callers pass
+    * `ewmaUdaf(ts, seq, price, lit(alpha))`, and
+    * [[graft.GraftFunctions.registerAggregates]] registers it as SQL
+    * `ewma_agg(ts, seq, price, alpha)`.
+    */
+  def ewmaUdaf: org.apache.spark.sql.expressions.UserDefinedFunction =
+    udaf(new EwmaAggregator, Encoders.product[PricePointA])
 }

@@ -30,11 +30,11 @@ import graft.model.PricePoint
   * |value|·10⁶ below ~10¹² for head-room — ANSI overflow makes a breach
   * a hard error, not a wrap.
   *
-  * Same scale shape as [[EwmaFunctions.EwmaAggregator]]: buffer = the
-  * group's (ts, seq, price) points, merge = concat (commutative w.r.t.
-  * the final sorted fold), one sort + one linear fold per group at
-  * finish. State per group is O(window size) — bounded by key × window
-  * design, exactly the EWMA contract.
+  * Same scale shape as [[EwmaFunctions.EwmaAggregator]] (which also
+  * buffers alpha): buffer = the group's (ts, seq, price) points,
+  * merge = concat (commutative w.r.t. the final sorted fold), one sort +
+  * one linear fold per group at finish. State per group is O(window
+  * size) — bounded by key × window design, exactly the EWMA contract.
   */
 object HoltFunctions {
 

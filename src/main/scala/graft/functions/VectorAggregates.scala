@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions.udaf
   */
 object VectorAggregates {
 
-  /** Flat-call input wrapper (the EwmaAggregator udaf pattern). */
+  /** Flat-call input wrapper (the [[EwmaFunctions.ewmaUdaf]] pattern). */
   case class VecRow(vq: Seq[Double])
 
   /** Row-major upper-triangle index order: (0,0),(0,1)..(0,d-1),(1,1)..

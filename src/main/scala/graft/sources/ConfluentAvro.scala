@@ -26,7 +26,8 @@ import org.apache.spark.sql.types._
   *  - the codec is a per-row narrow map — no shuffle, no state;
   *  - the Avro `Schema` and datum reader/writer are built once per
   *    executor (transient lazy in the serialized closure), never per row;
-  *  - binary en/decoders are reused via DecoderFactory buffer reuse.
+  *  - the binary encoder/decoder is NOT reused: each row gets a fresh
+  *    one (`binaryEncoder`/`binaryDecoder` are called with `reuse = null`).
   *
   * Coverage: flat record schemas of the primitive types the reference
   * uses — string/long/int/double/float/boolean/bytes plus nullable unions
@@ -119,134 +120,72 @@ object ConfluentAvro {
     * The frame's schema id is CHECKED, not ignored: decoding a payload
     * written under an evolved writer schema with a stale reader schema
     * silently misdecodes field-by-field (the corruption mode the Confluent
-    * frame exists to prevent). With `expectedSchemaId = Some(id)` any other
-    * id is rejected (strict: throws; safe: nulls). With `None` the id is
-    * accepted as-is — callers outside a registry deployment opt into
-    * trusting their single schema. For real schema EVOLUTION — payloads
-    * written under several registered schema versions — use
-    * [[fromConfluentAvroRegistry]], which resolves each id against an
-    * injected registry snapshot with zero network.
-    */
-  private final class Decoder(json: String, st: StructType,
-      expectedSchemaId: Option[Int])
-      extends UDF1[Array[Byte], Row] with Serializable {
-    @transient private lazy val schema = new Schema.Parser().parse(json)
-    @transient private lazy val reader = new GenericDatumReader[GenericRecord](schema)
-    override def call(payload: Array[Byte]): Row = {
-      if (payload == null) return null
-      val (id, body) = unframe(payload)
-      expectedSchemaId.foreach { want =>
-        if (id != want) throw new IllegalArgumentException(
-          s"Confluent schema id mismatch: payload written with id=$id, " +
-            s"decoder expects id=$want (use fromConfluentAvroRegistry for evolved schemas)")
-      }
-      val dec = DecoderFactory.get().binaryDecoder(body, null)
-      val rec = reader.read(null, dec)
-      recordToRow(rec, st)
-    }
-  }
-
-  /** Registry-aware decoder: resolves each payload's writer schema by the
-    * frame's id from an injected id -> schema-JSON snapshot and reads it
-    * through Avro reader/writer RESOLUTION (GenericDatumReader with
-    * distinct writer and reader schemas — ResolvingDecoder underneath).
-    * This is the reference consumer's semantics (the registry client
-    * resolves the writer schema per message id before decoding) minus the
-    * network: renamed-with-alias, added-with-default and dropped fields
-    * all decode correctly under the reader schema, and an id absent from
-    * the snapshot is REJECTED rather than misdecoded.
+    * frame exists to prevent). Each id in `writerSchemasById` (a registry
+    * snapshot: id -> writer-schema JSON) is read through Avro reader/writer
+    * RESOLUTION (GenericDatumReader with distinct writer and reader
+    * schemas — ResolvingDecoder underneath). This is the reference
+    * consumer's semantics (the registry client resolves the writer schema
+    * per message id before decoding) minus the network: renamed-with-alias,
+    * added-with-default and dropped fields all decode correctly under the
+    * reader schema, and an id absent from the snapshot is REJECTED rather
+    * than misdecoded. An EMPTY map trusts every id and reads it with the
+    * reader schema — callers outside a registry deployment opt into
+    * trusting their single schema.
+    *
+    * Strict (`permissive = false`): an unknown id, a missing magic byte, a
+    * frame under 5 bytes or a bad body throws. Permissive: each of those
+    * decodes to a null row, like from_json's PERMISSIVE mode — one poisoned
+    * Kafka message must not kill a whole job at scale.
     *
     * One resolving reader is built per distinct id per executor (lazy
     * transient map), never per row.
     */
-  private final class RegistryDecoder(readerJson: String, st: StructType,
-      writerSchemasById: Map[Int, String])
+  private final class Decoder(readerJson: String, st: StructType,
+      writerSchemasById: Map[Int, String], permissive: Boolean)
       extends UDF1[Array[Byte], Row] with Serializable {
-    @transient private lazy val readers: Map[Int, GenericDatumReader[GenericRecord]] = {
-      // one Parser per parse: versions share the record fullname, which a
-      // single Parser would reject as a redefinition
-      val readerSchema = new Schema.Parser().parse(readerJson)
+    @transient private lazy val readerSchema = new Schema.Parser().parse(readerJson)
+    @transient private lazy val anyId = new GenericDatumReader[GenericRecord](readerSchema)
+    // one Parser per parse: versions share the record fullname, which a
+    // single Parser would reject as a redefinition
+    @transient private lazy val readers: Map[Int, GenericDatumReader[GenericRecord]] =
       writerSchemasById.map { case (id, wj) =>
-        id -> new GenericDatumReader[GenericRecord](
-          new Schema.Parser().parse(wj), readerSchema)
+        id -> new GenericDatumReader[GenericRecord](new Schema.Parser().parse(wj), readerSchema)
       }
-    }
-    override def call(payload: Array[Byte]): Row = {
-      if (payload == null) return null
+    private def decode(payload: Array[Byte]): Row = {
       val (id, body) = unframe(payload)
-      val reader = readers.getOrElse(id, throw new IllegalArgumentException(
-        s"unknown Confluent schema id=$id: not in the injected registry " +
-          s"snapshot (known ids: ${readers.keys.toSeq.sorted.mkString(", ")})"))
-      val dec = DecoderFactory.get().binaryDecoder(body, null)
-      recordToRow(reader.read(null, dec), st)
+      val reader =
+        if (writerSchemasById.isEmpty) anyId
+        else readers.getOrElse(id, throw new IllegalArgumentException(
+          s"unknown Confluent schema id=$id: not in the decoder's schema " +
+            s"snapshot (known ids: ${readers.keys.toSeq.sorted.mkString(", ")})"))
+      recordToRow(reader.read(null, DecoderFactory.get().binaryDecoder(body, null)), st)
     }
+    override def call(payload: Array[Byte]): Row =
+      if (payload == null) null
+      else if (permissive) try decode(payload) catch { case _: Exception => null }
+      else decode(payload)
   }
 
-  /** UDF: struct column -> Confluent-framed Avro binary. */
-  def toConfluentAvro(st: StructType, schemaId: Int, recordName: String): UserDefinedFunction =
-    udf(new Encoder(avroSchemaJson(st, recordName), schemaId), BinaryType)
+  private def encoder(json: String, schemaId: Int): UserDefinedFunction =
+    udf(new Encoder(json, schemaId), BinaryType)
+
+  private def decoder(st: StructType, recordName: String,
+      writerSchemasById: Map[Int, String], permissive: Boolean): UserDefinedFunction =
+    udf(new Decoder(avroSchemaJson(st, recordName), st, writerSchemasById, permissive), st)
+
+  /** id -> reader schema for `expectedSchemaId = Some(id)`; empty for `None`. */
+  private def singleSchema(st: StructType, recordName: String,
+      expectedSchemaId: Option[Int]): Map[Int, String] =
+    expectedSchemaId.map(_ -> avroSchemaJson(st, recordName)).toMap
 
   /** UDF: encode under an EXPLICIT writer-schema JSON (field names must
     * exist in the input struct) framed with `schemaId` — the evolved-
     * producer path: a v2 writer emits v2-ordered bytes under the
     * registry id the v2 registration returned, while v1 consumers keep
-    * resolving through [[fromConfluentAvroRegistry]].
+    * resolving through [[decodeColRegistry]].
     */
   def toConfluentAvroJson(writerSchemaJson: String, schemaId: Int): UserDefinedFunction =
-    udf(new Encoder(writerSchemaJson, schemaId), BinaryType)
-
-  /** Serializable permissive decoder: null row on any malformed payload
-    * (frame or body), like from_json's PERMISSIVE mode — one poisoned
-    * Kafka message must not kill a whole job at scale.
-    */
-  private final class SafeDecoder(json: String, st: StructType,
-      expectedSchemaId: Option[Int])
-      extends UDF1[Array[Byte], Row] with Serializable {
-    private val strict = new Decoder(json, st, expectedSchemaId)
-    override def call(payload: Array[Byte]): Row =
-      try strict.call(payload)
-      catch { case _: Exception => null }
-  }
-
-  /** UDF: Confluent-framed Avro binary -> struct column. Pass
-    * `expectedSchemaId` to reject payloads framed under any other schema
-    * id (see [[Decoder]]).
-    */
-  def fromConfluentAvro(st: StructType, recordName: String,
-      expectedSchemaId: Option[Int] = None): UserDefinedFunction =
-    udf(new Decoder(avroSchemaJson(st, recordName), st, expectedSchemaId), st)
-
-  /** UDF: permissive decode — null instead of failing on bad payloads
-    * (including schema-id mismatches when `expectedSchemaId` is set).
-    */
-  def fromConfluentAvroSafe(st: StructType, recordName: String,
-      expectedSchemaId: Option[Int] = None): UserDefinedFunction =
-    udf(new SafeDecoder(avroSchemaJson(st, recordName), st, expectedSchemaId), st)
-
-  /** UDF: registry-aware decode with per-id writer-schema resolution.
-    * `writerSchemasById` is the registry snapshot (id -> Avro schema JSON);
-    * the reader schema is derived from `st` as usual. Payloads written
-    * under any snapshot id decode through Avro schema resolution (added
-    * fields with defaults, dropped fields, alias renames); unknown ids
-    * throw.
-    */
-  def fromConfluentAvroRegistry(st: StructType, recordName: String,
-      writerSchemasById: Map[Int, String]): UserDefinedFunction = {
-    require(writerSchemasById.nonEmpty, "registry snapshot must contain at least one schema id")
-    udf(new RegistryDecoder(avroSchemaJson(st, recordName), st, writerSchemasById), st)
-  }
-
-  /** Client-backed variant of [[fromConfluentAvroRegistry]]: resolve the
-    * id -> writer-schema snapshot through a [[SchemaRegistry.Client]] at
-    * PLAN time (driver-side; registry size is control-plane-bounded) and
-    * decode through the same RegistryDecoder. Executors never touch the
-    * registry — unlike the reference's per-message fetch + cache
-    * (consumer.rs:76), a 1000-executor job issues zero registry requests
-    * from the decode hot path. Restrict with `subjects` (empty = all).
-    */
-  def fromConfluentAvroRegistry(st: StructType, recordName: String,
-      client: SchemaRegistry.Client, subjects: Seq[String]): UserDefinedFunction =
-    fromConfluentAvroRegistry(st, recordName, client.snapshot(subjects))
+    encoder(writerSchemaJson, schemaId)
 
   /** The reference producer's encode path (producer.rs:43-56): register
     * the frame schema under the TopicNameStrategy value subject, take the
@@ -258,50 +197,57 @@ object ConfluentAvro {
       st: StructType, recordName: String): (Int, UserDefinedFunction) = {
     val json = avroSchemaJson(st, recordName)
     val id = client.register(SchemaRegistry.valueSubject(topic), json)
-    (id, toConfluentAvro(st, id, recordName))
+    (id, encoder(json, id))
   }
 
   /** Encode convenience: `encodeCol(struct(cols...), schema, id, name)`. */
   def encodeCol(structCol: Column, st: StructType, schemaId: Int, recordName: String): Column =
-    toConfluentAvro(st, schemaId, recordName)(structCol)
+    encoder(avroSchemaJson(st, recordName), schemaId)(structCol)
 
+  /** Confluent-framed Avro binary -> struct column. Pass
+    * `expectedSchemaId` to reject payloads framed under any other schema
+    * id (see [[Decoder]]); with `None` every id is read with the schema
+    * derived from `st`. For real schema EVOLUTION use [[decodeColRegistry]].
+    */
   def decodeCol(payload: Column, st: StructType, recordName: String,
       expectedSchemaId: Option[Int] = None): Column =
-    fromConfluentAvro(st, recordName, expectedSchemaId)(payload)
+    decoder(st, recordName, singleSchema(st, recordName, expectedSchemaId), permissive = false)(payload)
 
+  /** Permissive [[decodeCol]]: null instead of failing on bad payloads
+    * (including schema-id mismatches when `expectedSchemaId` is set).
+    */
   def decodeColSafe(payload: Column, st: StructType, recordName: String,
       expectedSchemaId: Option[Int] = None): Column =
-    fromConfluentAvroSafe(st, recordName, expectedSchemaId)(payload)
+    decoder(st, recordName, singleSchema(st, recordName, expectedSchemaId), permissive = true)(payload)
 
+  /** Registry-aware decode with per-id writer-schema resolution.
+    * `writerSchemasById` is the registry snapshot (id -> Avro schema JSON,
+    * e.g. [[SchemaRegistry.Client.snapshot]], taken driver-side at plan
+    * time so executors issue zero registry requests); the reader schema is
+    * derived from `st`. Payloads written under any snapshot id decode
+    * through Avro schema resolution (added fields with defaults, dropped
+    * fields, alias renames); unknown ids throw.
+    */
   def decodeColRegistry(payload: Column, st: StructType, recordName: String,
-      writerSchemasById: Map[Int, String]): Column =
-    fromConfluentAvroRegistry(st, recordName, writerSchemasById)(payload)
+      writerSchemasById: Map[Int, String]): Column = {
+    require(writerSchemasById.nonEmpty, "registry snapshot must contain at least one schema id")
+    decoder(st, recordName, writerSchemasById, permissive = false)(payload)
+  }
 
   /** Permissive registry decode: null row on malformed payloads AND on
     * schema ids outside the snapshot — for LONG-RUNNING streaming queries
     * where the snapshot is frozen at plan time: a producer registering a
     * NEW schema version mid-stream (or one poisoned message) must not
-    * kill the query (the [[fromConfluentAvroSafe]] principle). The
-    * operational model: count the nulls (a StreamingQueryListener metric),
-    * and when they appear, restart the query — the checkpoint makes the
-    * restart cheap and the fresh plan re-snapshots the registry. Strict
+    * kill the query (the [[decodeColSafe]] principle). The operational
+    * model: count the nulls (a StreamingQueryListener metric), and when
+    * they appear, restart the query — the checkpoint makes the restart
+    * cheap and the fresh plan re-snapshots the registry. Strict
     * [[decodeColRegistry]] stays the default for bounded/batch reads,
     * where failing fast beats silently dropping rows.
     */
-  private final class SafeRegistryDecoder(readerJson: String, st: StructType,
-      writerSchemasById: Map[Int, String])
-      extends UDF1[Array[Byte], Row] with Serializable {
-    private val strict = new RegistryDecoder(readerJson, st, writerSchemasById)
-    override def call(payload: Array[Byte]): Row =
-      try strict.call(payload)
-      catch { case _: Exception => null }
-  }
-
   def decodeColRegistrySafe(payload: Column, st: StructType, recordName: String,
       writerSchemasById: Map[Int, String]): Column = {
-    require(writerSchemasById.nonEmpty,
-      "registry snapshot must contain at least one schema id")
-    udf(new SafeRegistryDecoder(
-      avroSchemaJson(st, recordName), st, writerSchemasById), st)(payload)
+    require(writerSchemasById.nonEmpty, "registry snapshot must contain at least one schema id")
+    decoder(st, recordName, writerSchemasById, permissive = true)(payload)
   }
 }

@@ -25,7 +25,7 @@ import org.apache.avro.SchemaCompatibility.SchemaCompatibilityType
   * schemas, NOT data-plane). Every client call is DRIVER-side; executors
   * never talk to the registry. The decode path materializes a bounded
   * id -> schema snapshot once at plan time and broadcasts it inside the
-  * decoder closure ([[ConfluentAvro.fromConfluentAvroRegistry]]) — unlike
+  * decoder closure ([[ConfluentAvro.decodeColRegistry]]) — unlike
   * the reference's per-message async fetch + cache, a 1000-executor job
   * issues ZERO registry requests from the hot path.
   */
@@ -140,7 +140,7 @@ object SchemaRegistry {
 
     /** The bounded id -> writer-schema-JSON snapshot across the given
       * subjects (all subjects when empty) — the exact input
-      * [[ConfluentAvro.fromConfluentAvroRegistry]] consumes. Registry
+      * [[ConfluentAvro.decodeColRegistry]] consumes. Registry
       * size is control-plane-bounded, so this is a driver-side map of at
       * most a few thousand entries.
       */

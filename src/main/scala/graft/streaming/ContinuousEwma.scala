@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.model.PricePoint
+import graft.functions.EwmaFunctions
 
 /** Cross-window CONTINUOUS EWMA — the semantic extension beyond the
   * reference (whose state resets every window, reference main.rs:111;
@@ -45,7 +45,7 @@ object ContinuousEwma {
       // ignore out-of-order stragglers older than what we already folded —
       // a continuous EMA cannot retract (documented semantic)
       if (s.ts > lastTs || (s.ts == lastTs && s.seq > lastSeq)) {
-        cur = alpha * s.price + (1.0 - alpha) * cur
+        cur = EwmaFunctions.step(cur, s.price, alpha)
         n += 1
         lastTs = s.ts
         lastSeq = s.seq
@@ -81,7 +81,6 @@ object ContinuousEwma {
   /** Batch oracle for tests: the same fold as one pass per key. */
   def batchOracle(samples: Seq[Sample], alpha: Double): Map[String, Double] =
     samples.groupBy(_.key).map { case (k, rows) =>
-      k -> rows.sortBy(s => (s.ts, s.seq))
-        .foldLeft(0.0)((acc, s) => alpha * s.price + (1.0 - alpha) * acc)
+      k -> EwmaFunctions.foldOracle(rows.sortBy(s => (s.ts, s.seq)).map(_.price), alpha)
     }
 }

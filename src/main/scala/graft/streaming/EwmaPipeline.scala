@@ -50,26 +50,9 @@ object EwmaPipeline {
       keyCol: String, eventTimeCol: String,
       tsCol: String, seqCol: String, valueCol: String,
       periodSeconds: Long,
-      watermark: String = "10 minutes"): DataFrame = {
-    val alpha = EwmaFunctions.alpha(periodSeconds)
-    events
-      .withWatermark(eventTimeCol, watermark)
-      .groupBy(
-        window(col(eventTimeCol), s"$periodSeconds seconds").as("win"),
-        col(keyCol))
-      .agg(
-        EwmaFunctions.ewmaOrdered(col(tsCol), col(seqCol), col(valueCol), alpha).as("current"),
-        count(lit(1)).as("n_events"))
-      .filter(col("current") > 0) // reference main.rs:118 suppression
-      .select(
-        col("win.start").as("window_start"),
-        col("win.end").as("window_end"),
-        col(keyCol),
-        lit(periodSeconds).as("period"),
-        lit(alpha).as("alpha"),
-        col("current"),
-        col("n_events"))
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowedEwmaPlan(events, keyCol, eventTimeCol, tsCol, seqCol, valueCol,
+      periodSeconds, Some(watermark))
 
   /** Batch form of [[windowedEwma]] — identical plan minus the watermark;
     * the streaming replay is pinned to equal this on the same data.
@@ -78,16 +61,24 @@ object EwmaPipeline {
       events: DataFrame,
       keyCol: String, eventTimeCol: String,
       tsCol: String, seqCol: String, valueCol: String,
-      periodSeconds: Long): DataFrame = {
+      periodSeconds: Long): DataFrame =
+    windowedEwmaPlan(events, keyCol, eventTimeCol, tsCol, seqCol, valueCol,
+      periodSeconds, None)
+
+  private def windowedEwmaPlan(
+      events: DataFrame,
+      keyCol: String, eventTimeCol: String,
+      tsCol: String, seqCol: String, valueCol: String,
+      periodSeconds: Long, watermark: Option[String]): DataFrame = {
     val alpha = EwmaFunctions.alpha(periodSeconds)
-    events
+    watermark.fold(events)(events.withWatermark(eventTimeCol, _))
       .groupBy(
         window(col(eventTimeCol), s"$periodSeconds seconds").as("win"),
         col(keyCol))
       .agg(
         EwmaFunctions.ewmaOrdered(col(tsCol), col(seqCol), col(valueCol), alpha).as("current"),
         count(lit(1)).as("n_events"))
-      .filter(col("current") > 0)
+      .filter(col("current") > 0) // reference main.rs:118 suppression
       .select(
         col("win.start").as("window_start"),
         col("win.end").as("window_end"),
@@ -247,52 +238,18 @@ object EwmaPipeline {
     kafkaSink(frameForTopic(df, topic, recordName, client),
       bootstrap, topic, checkpoint)
 
-  /** Kafka source wiring (entry point B's input), Confluent-framed Avro
-    * payloads decoded via [[graft.sources.ConfluentAvro]]. Pass
-    * `writerSchemas` (a registry snapshot: schema id -> Avro schema JSON)
-    * to decode messages written under ANY of those versions through real
-    * reader/writer resolution — the reference consumer's per-message
-    * registry lookup, minus the network hop. With the default empty map
-    * the single-schema decoder is used as before.
-    */
-  /** The ONE Kafka reader + key/decode projection both source variants
-    * share — any reader option added here applies to strict and safe
-    * streams alike (they must read the topic identically; only the value
-    * decoder differs).
-    */
-  private def kafkaDecoded(
-      spark: SparkSession, bootstrap: String, topic: String,
-      startingOffsets: String)(decoded: org.apache.spark.sql.Column): DataFrame =
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsets)
-      .load()
-      .select(col("key").cast("string").as("key"), decoded.as("t"))
-      .select(col("key"), col("t.*"))
-
-  def kafkaSource(
-      spark: SparkSession, bootstrap: String, topic: String,
-      valueSchema: StructType, recordName: String,
-      startingOffsets: String = "latest",
-      writerSchemas: Map[Int, String] = Map.empty): DataFrame =
-    kafkaDecoded(spark, bootstrap, topic, startingOffsets)(
-      if (writerSchemas.nonEmpty)
-        graft.sources.ConfluentAvro.decodeColRegistry(
-          col("value"), valueSchema, recordName, writerSchemas)
-      else
-        graft.sources.ConfluentAvro.decodeCol(col("value"), valueSchema, recordName))
-
-  /** [[kafkaSource]] with the writer-schema snapshot resolved through a
-    * live [[graft.sources.SchemaRegistry.Client]] at PLAN time: the
-    * topic's value subject is walked once on the driver (registry size
-    * is control-plane-bounded) and the id -> schema map rides the
-    * decoder closure — executors issue ZERO registry requests, unlike
-    * the reference consumer's per-message fetch + cache
-    * (consumer.rs:47-48,76). RegistryPipelineFidelitySpec drives the
-    * identical decode path on file streams end-to-end into the windowed
-    * EWMA.
+  /** Kafka source wiring (entry point B's input): Confluent-framed Avro
+    * payloads decoded via [[graft.sources.ConfluentAvro]], with the
+    * writer-schema snapshot resolved through a live
+    * [[graft.sources.SchemaRegistry.Client]] at PLAN time: the topic's
+    * value subject is walked once on the driver (registry size is
+    * control-plane-bounded) and the id -> schema map rides the decoder
+    * closure — every message decodes through reader/writer resolution
+    * against the version it was written under, yet executors issue ZERO
+    * registry requests, unlike the reference consumer's per-message
+    * fetch + cache (consumer.rs:47-48,76). RegistryPipelineFidelitySpec
+    * drives the identical decode path on file streams end-to-end into the
+    * windowed EWMA.
     *
     * The snapshot is FROZEN at plan time, so a schema version registered
     * mid-stream arrives with an unknown id. `strict = true` (default)
@@ -312,13 +269,21 @@ object EwmaPipeline {
       strict: Boolean = true): DataFrame = {
     val snapshot =
       client.snapshot(Seq(graft.sources.SchemaRegistry.valueSubject(topic)))
-    kafkaDecoded(spark, bootstrap, topic, startingOffsets)(
+    val decoded =
       if (strict)
         graft.sources.ConfluentAvro.decodeColRegistry(
           col("value"), valueSchema, recordName, snapshot)
       else
         graft.sources.ConfluentAvro.decodeColRegistrySafe(
-          col("value"), valueSchema, recordName, snapshot))
+          col("value"), valueSchema, recordName, snapshot)
+    spark.readStream
+      .format("kafka")
+      .option("kafka.bootstrap.servers", bootstrap)
+      .option("subscribe", topic)
+      .option("startingOffsets", startingOffsets)
+      .load()
+      .select(col("key").cast("string").as("key"), decoded.as("t"))
+      .select(col("key"), col("t.*"))
   }
 
   /** Processing-time trigger mirroring the reference's wall-clock tick

@@ -149,4 +149,34 @@ class ConfluentAvroSpec extends SparkSpec {
     val ok = decoded.filter(col("t").isNotNull).select("t.*").as[Trade].collect()
     assert(ok.toSet === trades.toSet)
   }
+
+  test("error table: strict decoders throw and permissive ones null on every bad frame") {
+    import spark.implicits._
+    val good = spark.createDataset(trades).toDF()
+      .select(ConfluentAvro.encodeCol(
+        struct(Trade.schema.fieldNames.map(col): _*), Trade.schema, 7, "TradesDataAvro").as("value"))
+    val goodBytes = good.collect().map(_.getAs[Array[Byte]](0)).toSeq
+    val bad = Seq(
+      "unknown id" -> ConfluentAvro.frame(8, ConfluentAvro.unframe(goodBytes.head)._2),
+      "no magic byte" -> Array[Byte](1, 0, 0, 0, 7, 99, 99),
+      "under 5 bytes" -> Array[Byte](0, 0, 0),
+      "garbage body" -> Array[Byte](0, 0, 0, 0, 7, 99, 99))
+    val snapshot = Map(7 -> ConfluentAvro.avroSchemaJson(Trade.schema, "TradesDataAvro"))
+    val decoders = Seq[(String, Boolean, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      ("decodeCol", true, ConfluentAvro.decodeCol(_, Trade.schema, "TradesDataAvro", Some(7))),
+      ("decodeColSafe", false, ConfluentAvro.decodeColSafe(_, Trade.schema, "TradesDataAvro", Some(7))),
+      ("decodeColRegistry", true, ConfluentAvro.decodeColRegistry(_, Trade.schema, "TradesDataAvro", snapshot)),
+      ("decodeColRegistrySafe", false,
+        ConfluentAvro.decodeColRegistrySafe(_, Trade.schema, "TradesDataAvro", snapshot)))
+    for ((name, strict, decode) <- decoders) {
+      val ok = goodBytes.toDF("value").select(decode(col("value")).as("t"))
+        .select("t.*").as[Trade].collect()
+      assert(ok.toSeq === trades, s"$name: good frames")
+      for ((what, payload) <- bad) {
+        val out = Seq(payload).toDF("value").select(decode(col("value")).as("t"))
+        if (strict) intercept[Exception](out.collect())
+        else assert(out.head().isNullAt(0), s"$name: $what must decode to null")
+      }
+    }
+  }
 }

@@ -44,7 +44,7 @@ class EwmaSpec extends SparkSpec {
     val viaBuiltins = df.agg(
       EwmaFunctions.ewmaOrdered(col("ts"), col("seq"), col("price"), alpha)).head().getDouble(0)
     val viaUdaf = df.agg(
-      EwmaFunctions.ewmaUdaf(alpha)(col("ts"), col("seq"), col("price"))).head().getDouble(0)
+      EwmaFunctions.ewmaUdaf(col("ts"), col("seq"), col("price"), lit(alpha))).head().getDouble(0)
     val oracle = EwmaFunctions.foldOracle(
       pts.sortBy(p => (p.ts, p.seq)).map(_.price), alpha)
     assert(viaBuiltins === oracle)
@@ -59,7 +59,7 @@ class EwmaSpec extends SparkSpec {
       PricePoint(2L, 1L, 5.0), PricePoint(2L, 1L, 1.0))
     val df = spark.createDataset(pts).repartition(4).toDF()
     val a = df.agg(EwmaFunctions.ewmaOrdered(col("ts"), col("seq"), col("price"), 0.5)).head().getDouble(0)
-    val b = df.agg(EwmaFunctions.ewmaUdaf(0.5)(col("ts"), col("seq"), col("price"))).head().getDouble(0)
+    val b = df.agg(EwmaFunctions.ewmaUdaf(col("ts"), col("seq"), col("price"), lit(0.5))).head().getDouble(0)
     val want = EwmaFunctions.foldOracle(Seq(10.0, 20.0, 30.0, 1.0, 5.0), 0.5) // price tiebreak
     assert(a === want)
     assert(b === want)

@@ -226,8 +226,8 @@ class ExtensionsSpec extends SparkSpec {
       s"SELECT g, ewma_agg(ts, seq, p, ${alpha}D) AS e FROM ewma_in GROUP BY g")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val viaCol = df.groupBy(col("g"))
-      .agg(graft.functions.EwmaFunctions.ewmaUdaf(alpha)(
-        col("ts"), col("seq"), col("p")).as("e"))
+      .agg(graft.functions.EwmaFunctions.ewmaUdaf(
+        col("ts"), col("seq"), col("p"), lit(alpha)).as("e"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(viaSql === viaCol)
     val oracleA = graft.functions.EwmaFunctions.foldOracle(

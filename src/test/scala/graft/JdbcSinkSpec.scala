@@ -65,8 +65,11 @@ class JdbcSinkSpec extends SparkSpec {
   test("table-absence probe: metadata check, not exception swallowing") {
     val props = new Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
-    // present after the sink test created it; absent name answers false
-    assert(EwmaPipeline.jdbcTableExists(url, "raw_events", props))
+    // a table this test creates answers true; an absent name answers false
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try conn.createStatement().execute("CREATE TABLE probe_present (id INT)")
+    finally conn.close()
+    assert(EwmaPipeline.jdbcTableExists(url, "probe_present", props))
     assert(!EwmaPipeline.jdbcTableExists(url, "no_such_table_here", props))
     // a broken connection PROPAGATES (would previously degrade to a blind
     // append exactly when the dedup probe mattered most)

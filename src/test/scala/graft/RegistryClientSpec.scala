@@ -190,9 +190,9 @@ class RegistryClientSpec extends SparkSpec {
         struct(df.columns.map(col): _*)).as("value"))
       // consumer path: snapshot via the protocol client, decode BOTH
       val mixed = framedV1.union(framedV2)
-      val decoded = mixed.select(ConfluentAvro.fromConfluentAvroRegistry(
-          Trade.schema, "TradesDataAvro", c, Seq("raw-trades-value"))(col("value"))
-          .as("t"))
+      val decoded = mixed.select(ConfluentAvro.decodeColRegistry(
+          col("value"), Trade.schema, "TradesDataAvro",
+          c.snapshot(Seq("raw-trades-value"))).as("t"))
         .select("t.*").as[Trade].collect().toSeq
       assert(decoded.sortBy(_.trade_seq) ===
         (trades ++ trades).sortBy(_.trade_seq))
@@ -201,9 +201,9 @@ class RegistryClientSpec extends SparkSpec {
         struct(df.columns.map(col): _*), Trade.schema, 777, "TradesDataAvro")
         .as("value"))
       val ex = intercept[Exception] {
-        rogue.select(ConfluentAvro.fromConfluentAvroRegistry(
-            Trade.schema, "TradesDataAvro", c, Seq("raw-trades-value"))(col("value"))
-            .as("t")).collect()
+        rogue.select(ConfluentAvro.decodeColRegistry(
+            col("value"), Trade.schema, "TradesDataAvro",
+            c.snapshot(Seq("raw-trades-value"))).as("t")).collect()
       }
       assert(ex.getMessage != null)
       // the PERMISSIVE registry decoder nulls the unknown-id row instead —
