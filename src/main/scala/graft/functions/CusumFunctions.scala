@@ -1,9 +1,6 @@
 package graft.functions
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions.udaf
 
 /** ONLINE (tabular) CUSUM — Page's sequential changepoint detector, the
@@ -24,7 +21,8 @@ import org.apache.spark.sql.functions.udaf
   * micro-quantized, the fold is max/add/compare on Longs — so the oracle
   * replays it bit-for-bit with a recursive CTE, and the batch and
   * streaming forms step with this same literal function, so they cannot
-  * drift. Strict (ord, seq) fold order; alarms fire on STRICT h
+  * drift. Strict (ord, seq, dev_micro) fold order (the full tuple, so
+  * points that tie on (ord, seq) fold in one order); alarms fire on STRICT h
   * crossing; `first_alarm` keeps the ord key of the earliest alarm of
   * either side ('' = never alarmed).
   */
@@ -68,30 +66,25 @@ object CusumFunctions {
     */
   final case class CusumPoint(ord: String, seq: Long, dev_micro: Long)
 
-  class CusumAggregator(slackMicro: Long, hMicro: Long)
-      extends Aggregator[CusumPoint, ArrayBuffer[CusumPoint], CusumState] {
+  /** Online CUSUM as an [[OrderedFold]] over (ord, seq, dev_micro). */
+  private[graft] def fold(
+      slackMicro: Long, hMicro: Long): OrderedFold[CusumPoint, (String, Long), CusumState, CusumState] = {
     require(slackMicro >= 0, "slackMicro >= 0")
     require(hMicro > 0, "hMicro > 0")
-    override def zero: ArrayBuffer[CusumPoint] = ArrayBuffer.empty
-    override def reduce(b: ArrayBuffer[CusumPoint], a: CusumPoint): ArrayBuffer[CusumPoint] = {
-      b += a; b
+    new OrderedFold[CusumPoint, (String, Long), CusumState, CusumState] {
+      def zero: CusumState = zeroState
+      def step(s: CusumState, p: CusumPoint): CusumState =
+        CusumFunctions.step(s, p.dev_micro, p.ord, slackMicro, hMicro)
+      def readout(s: CusumState): CusumState = s
+      def key(p: CusumPoint): (String, Long) = (p.ord, p.seq)
+      val order: Ordering[CusumPoint] = Ordering.by(p => (p.ord, p.seq, p.dev_micro))
     }
-    override def merge(b1: ArrayBuffer[CusumPoint], b2: ArrayBuffer[CusumPoint]): ArrayBuffer[CusumPoint] = {
-      b1 ++= b2; b1
-    }
-    override def finish(buf: ArrayBuffer[CusumPoint]): CusumState = {
-      val sorted = buf.sortBy(p => (p.ord, p.seq))
-      sorted.foldLeft(zeroState)((st, p) =>
-        step(st, p.dev_micro, p.ord, slackMicro, hMicro))
-    }
-    override def bufferEncoder: Encoder[ArrayBuffer[CusumPoint]] =
-      Encoders.kryo[ArrayBuffer[CusumPoint]]
-    override def outputEncoder: Encoder[CusumState] = Encoders.product[CusumState]
   }
 
   /** Untyped (Column) form: call with `(ord, seq, dev_micro)`; returns a
     * struct (s_hi_micro, s_lo_micro, alarms_hi, alarms_lo, first_alarm).
     */
   def cusumUdaf(slackMicro: Long, hMicro: Long): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new CusumAggregator(slackMicro, hMicro), Encoders.product[CusumPoint])
+    udaf(new OrderedFold.Agg(fold(slackMicro, hMicro), Encoders.product[CusumState]),
+      Encoders.product[CusumPoint])
 }

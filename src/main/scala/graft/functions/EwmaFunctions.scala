@@ -1,9 +1,6 @@
 package graft.functions
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, Encoders}
 import org.apache.spark.sql.functions._
 
 /** The reference's EWMA fold, re-expressed Spark-first.
@@ -16,17 +13,18 @@ import org.apache.spark.sql.functions._
   *   for x in window (ts, seq) order: current = alpha*x + (1-alpha)*current
   *   emit iff current > 0                // (main.rs:118)
   *
-  * Two implementations with identical, test-pinned results:
+  * Two forms with identical, test-pinned results:
   *
   *  1. [[ewmaOrdered]] — pure built-ins (collect_list + array_sort +
   *     higher-order aggregate). Fully codegen'd, oracle-checkable in any
   *     SQL engine, and the partial-aggregation (map-side collect) comes
   *     from Catalyst for free.
-  *  2. [[EwmaAggregator]] — a typed `Aggregator` with a mutable buffer,
-  *     sorted once at `finish`. Avoids the per-row Catalyst array copy of
-  *     collect_list at very large windows; the merge is a buffer concat so
-  *     it parallelizes across partitions, with the O(n log n) sort deferred
-  *     to the single finish call per group.
+  *  2. [[ewmaUdaf]] — [[fold]] run by the [[OrderedFold.Agg]] kernel: a
+  *     typed `Aggregator` with a mutable buffer, sorted once at `finish`.
+  *     Avoids the per-row Catalyst array copy of collect_list at very
+  *     large windows; the merge is a buffer concat so it parallelizes
+  *     across partitions, with the O(n log n) sort deferred to the single
+  *     finish call per group.
   *
   * Both keep the fold strictly sequential (left fold in IEEE-754 double) —
   * EWMA is order-sensitive and MUST NOT be computed as a parallel
@@ -68,53 +66,40 @@ object EwmaFunctions {
   def foldOracle(prices: Seq[Double], alphaVal: Double): Double =
     prices.foldLeft(0.0)(step(_, _, alphaVal))
 
-  /** Input row of [[EwmaAggregator]]: alpha rides as a fourth (constant)
+  /** Input row of [[ewmaUdaf]]: alpha rides as a fourth (constant)
     * argument because `spark.udf.register` binds one function object — a
     * pure-SQL caller has no closure to carry alpha in.
     */
   case class PricePointA(ts: Long, seq: Long, price: Double, alpha: Double)
 
-  /** Typed order-sensitive EWMA aggregator (scale path).
-    *
-    * Buffer = unsorted growable array of (ts, seq, price, alpha); `merge`
-    * is a concat (commutative w.r.t. the final sorted fold), `finish`
-    * sorts by (ts, seq, price) and left-folds. State per group is
-    * O(window size) — at the 100 TB design point windows are bounded by
-    * (key x window length), the same bound the built-in collect_list path
-    * has, but with cheaper per-row appends and a single sort per group.
-    * Alpha must be the SAME value on every row of a group — mixed values
-    * raise rather than silently folding with one of them.
+  /** Fold state: the running value and the alpha it folds with (NaN
+    * before the first point).
     */
-  class EwmaAggregator
-      extends Aggregator[PricePointA, ArrayBuffer[PricePointA], Double] {
-    override def zero: ArrayBuffer[PricePointA] = ArrayBuffer.empty
-    override def reduce(b: ArrayBuffer[PricePointA], a: PricePointA): ArrayBuffer[PricePointA] = {
-      b += a; b
-    }
-    override def merge(b1: ArrayBuffer[PricePointA], b2: ArrayBuffer[PricePointA]): ArrayBuffer[PricePointA] = {
-      b1 ++= b2; b1
-    }
-    override def finish(b: ArrayBuffer[PricePointA]): Double =
-      if (b.isEmpty) 0.0
-      else {
-        val a = b.head.alpha
-        require(b.forall(_.alpha == a),
-          "ewma_agg: alpha must be constant within a group")
-        // full-tuple order including price: ties on (ts, seq) must fold
-        // deterministically regardless of partition merge order, matching
-        // array_sort's lexicographic struct order in the built-in path
-        b.sortBy(p => (p.ts, p.seq, p.price)).foldLeft(0.0)((acc, p) => step(acc, p.price, a))
-      }
-    override def bufferEncoder: Encoder[ArrayBuffer[PricePointA]] =
-      Encoders.kryo[ArrayBuffer[PricePointA]]
-    override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
+  final case class EwmaAcc(current: Double, alpha: Double)
 
-  /** [[EwmaAggregator]] as one UDAF for both APIs: Column callers pass
-    * `ewmaUdaf(ts, seq, price, lit(alpha))`, and
+  /** The EWMA as an [[OrderedFold]] over (ts, seq, price). Alpha must be
+    * the SAME value on every point — mixed values raise rather than
+    * silently folding with one of them. The first point compares its
+    * alpha with itself, so a NaN alpha raises too.
+    */
+  private[graft] val fold: OrderedFold[PricePointA, (Long, Long), EwmaAcc, Double] =
+    new OrderedFold[PricePointA, (Long, Long), EwmaAcc, Double] {
+      def zero: EwmaAcc = EwmaAcc(0.0, Double.NaN)
+      def step(s: EwmaAcc, p: PricePointA): EwmaAcc = {
+        require(p.alpha == (if (s.alpha.isNaN) p.alpha else s.alpha),
+          "ewma_agg: alpha must be constant within a group")
+        EwmaAcc(EwmaFunctions.step(s.current, p.price, p.alpha), p.alpha)
+      }
+      def readout(s: EwmaAcc): Double = s.current
+      def key(p: PricePointA): (Long, Long) = (p.ts, p.seq)
+      val order: Ordering[PricePointA] = Ordering.by(p => (p.ts, p.seq, p.price))
+    }
+
+  /** The EWMA's [[OrderedFold.Agg]] as one UDAF for both APIs: Column
+    * callers pass `ewmaUdaf(ts, seq, price, lit(alpha))`, and
     * [[graft.GraftFunctions.registerAggregates]] registers it as SQL
     * `ewma_agg(ts, seq, price, alpha)`.
     */
   def ewmaUdaf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new EwmaAggregator, Encoders.product[PricePointA])
+    udaf(new OrderedFold.Agg(fold, Encoders.scalaDouble), Encoders.product[PricePointA])
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions.udaf
 
 import graft.model.PricePoint
@@ -30,47 +27,50 @@ import graft.model.PricePoint
   * |value|·10⁶ below ~10¹² for head-room — ANSI overflow makes a breach
   * a hard error, not a wrap.
   *
-  * Same scale shape as [[EwmaFunctions.EwmaAggregator]] (which also
-  * buffers alpha): buffer = the group's (ts, seq, price) points,
-  * merge = concat (commutative w.r.t. the final sorted fold), one sort +
-  * one linear fold per group at finish. State per group is O(window
-  * size) — bounded by key × window design, exactly the EWMA contract.
+  * Both smoothers are [[OrderedFold]]s over (ts, seq, price) points, so
+  * the UDAFs and the continuous streaming doors run the same step
+  * through the same kernel the EWMA uses: concat-merge buffers, one
+  * sort + one linear fold per group. State per group is O(window size) —
+  * bounded by key × window design, exactly the EWMA contract.
   */
 object HoltFunctions {
 
   final case class HoltOut(level_micro: Long, trend_micro: Long, forecast_micro: Long)
 
-  /** Scala-side reference of the fold — what every test pins to. */
-  def foldOracle(xs: Seq[Double], alphaPpm: Long, betaPpm: Long): HoltOut = {
-    var l = 0L
-    var b = 0L
-    xs.foreach { x =>
-      val xm = math.round(x * 1e6)
-      val lNew = (alphaPpm * xm + (1000000L - alphaPpm) * (l + b)) / 1000000L
-      b = (betaPpm * (lNew - l) + (1000000L - betaPpm) * b) / 1000000L
-      l = lNew
-    }
+  private val zeroHolt = HoltOut(0L, 0L, 0L)
+
+  /** ONE Holt step over a micro-quantized value — the only copy of the
+    * level/trend arithmetic; Holt-Winters steps through it on the
+    * deseasonalised value.
+    */
+  def step(s: HoltOut, xm: Long, alphaPpm: Long, betaPpm: Long): HoltOut = {
+    val l = (alphaPpm * xm + (1000000L - alphaPpm) * (s.level_micro + s.trend_micro)) / 1000000L
+    val b = (betaPpm * (l - s.level_micro) + (1000000L - betaPpm) * s.trend_micro) / 1000000L
     HoltOut(l, b, l + b)
   }
 
-  class HoltAggregator(alphaPpm: Long, betaPpm: Long)
-      extends Aggregator[PricePoint, ArrayBuffer[PricePoint], HoltOut] {
-    require(alphaPpm >= 0 && alphaPpm <= 1000000L, "alphaPpm in [0, 1e6]")
-    require(betaPpm >= 0 && betaPpm <= 1000000L, "betaPpm in [0, 1e6]")
-    override def zero: ArrayBuffer[PricePoint] = ArrayBuffer.empty
-    override def reduce(b: ArrayBuffer[PricePoint], a: PricePoint): ArrayBuffer[PricePoint] = {
-      b += a; b
+  /** Scala-side reference of the fold — what every test pins to. */
+  def foldOracle(xs: Seq[Double], alphaPpm: Long, betaPpm: Long): HoltOut =
+    xs.foldLeft(zeroHolt)((s, x) => step(s, math.round(x * 1e6), alphaPpm, betaPpm))
+
+  private def checkPpm(name: String, ppm: Long): Unit =
+    require(ppm >= 0 && ppm <= 1000000L, s"$name in [0, 1e6]")
+
+  private val pointOrder: Ordering[PricePoint] = Ordering.by(p => (p.ts, p.seq, p.price))
+
+  /** Holt as an [[OrderedFold]] over (ts, seq, price). */
+  private[graft] def holtFold(
+      alphaPpm: Long, betaPpm: Long): OrderedFold[PricePoint, (Long, Long), HoltOut, HoltOut] = {
+    checkPpm("alphaPpm", alphaPpm)
+    checkPpm("betaPpm", betaPpm)
+    new OrderedFold[PricePoint, (Long, Long), HoltOut, HoltOut] {
+      def zero: HoltOut = zeroHolt
+      def step(s: HoltOut, p: PricePoint): HoltOut =
+        HoltFunctions.step(s, math.round(p.price * 1e6), alphaPpm, betaPpm)
+      def readout(s: HoltOut): HoltOut = s
+      def key(p: PricePoint): (Long, Long) = (p.ts, p.seq)
+      def order: Ordering[PricePoint] = pointOrder
     }
-    override def merge(b1: ArrayBuffer[PricePoint], b2: ArrayBuffer[PricePoint]): ArrayBuffer[PricePoint] = {
-      b1 ++= b2; b1
-    }
-    override def finish(buf: ArrayBuffer[PricePoint]): HoltOut = {
-      val sorted = buf.sortBy(p => (p.ts, p.seq, p.price))
-      foldOracle(sorted.toSeq.map(_.price), alphaPpm, betaPpm)
-    }
-    override def bufferEncoder: Encoder[ArrayBuffer[PricePoint]] =
-      Encoders.kryo[ArrayBuffer[PricePoint]]
-    override def outputEncoder: Encoder[HoltOut] = Encoders.product[HoltOut]
   }
 
   /** Untyped (Column) form: call with the three flat columns
@@ -78,7 +78,8 @@ object HoltFunctions {
     * micro values.
     */
   def holtUdaf(alphaPpm: Long, betaPpm: Long): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new HoltAggregator(alphaPpm, betaPpm), Encoders.product[PricePoint])
+    udaf(new OrderedFold.Agg(holtFold(alphaPpm, betaPpm), Encoders.product[HoltOut]),
+      Encoders.product[PricePoint])
 
   // ------------------------------------------------------ Holt-Winters
 
@@ -86,88 +87,78 @@ object HoltFunctions {
       level_micro: Long, trend_micro: Long, season_micro: Long,
       forecast_micro: Long)
 
-  /** Scala-side reference of the ADDITIVE Holt-Winters fold — the
-    * seasonal completion of the EWMA → Holt ladder. Zero-seeded
-    * (l₀ = b₀ = 0 and an all-zero season ring of `period` slots, the
-    * §2.3 convention), position t (1-based) reads ring slot
-    * (t−1) mod period:
+  /** Holt-Winters fold state: level and trend, the season ring and the
+    * number of points folded. `ring` is updated in place by
+    * [[wintersStep]].
+    */
+  final case class WintersState(holt: HoltOut, ring: Array[Long], t: Long)
+
+  /** ONE Holt-Winters step of the ADDITIVE fold — the seasonal
+    * completion of the EWMA → Holt ladder. Zero-seeded (l₀ = b₀ = 0 and
+    * an all-zero season ring of `period` slots, the §2.3 convention),
+    * position t (0-based) reads ring slot t mod period:
     *
     *   l' = (α(x − s_old) + (10⁶ − α)(l + b))  div 10⁶
     *   b' = (β(l' − l)    + (10⁶ − β) b)       div 10⁶
     *   s' = (γ(x − l')    + (10⁶ − γ) s_old)   div 10⁶   (written back)
     *
-    * emitting, after the last point n: the level, trend, the NEXT
-    * position's season `s_next = ring[n mod period]`, and the one-step
-    * forecast `l + b + s_next`. All Long arithmetic truncating toward
-    * zero (Scala `/` ≡ DuckDB `//`), so the oracle replays the fold
-    * with a recursive CTE carrying the ring as a list — bit-identical.
-    * γ = 0 keeps the ring at its zero seed, collapsing EXACTLY to
-    * [[foldOracle]] (HoltSpec pins this).
-    */
-  /** ONE Holt-Winters step: the batch aggregator and the continuous
-    * streaming form step with this same literal function, so the two
-    * forms cannot drift. Mutates `ring` slot `t mod period`,
-    * returns (l', b').
+    * i.e. the Holt [[step]] on x − s_old, then the season update. All
+    * Long arithmetic truncating toward zero (Scala `/` ≡ DuckDB `//`),
+    * so the oracle replays the fold with a recursive CTE carrying the
+    * ring as a list — bit-identical. γ = 0 keeps the ring at its zero
+    * seed, collapsing EXACTLY to [[foldOracle]] (HoltSpec pins this).
     */
   def wintersStep(
-      l: Long, b: Long, ring: Array[Long], t: Long, xm: Long,
-      alphaPpm: Long, betaPpm: Long, gammaPpm: Long): (Long, Long) = {
-    val idx = (t % ring.length).toInt
-    val sOld = ring(idx)
-    val lNew = (alphaPpm * (xm - sOld) + (1000000L - alphaPpm) * (l + b)) / 1000000L
-    val bNew = (betaPpm * (lNew - l) + (1000000L - betaPpm) * b) / 1000000L
-    ring(idx) = (gammaPpm * (xm - lNew) + (1000000L - gammaPpm) * sOld) / 1000000L
-    (lNew, bNew)
+      s: WintersState, xm: Long,
+      alphaPpm: Long, betaPpm: Long, gammaPpm: Long): WintersState = {
+    val idx = (s.t % s.ring.length).toInt
+    val sOld = s.ring(idx)
+    val h = step(s.holt, xm - sOld, alphaPpm, betaPpm)
+    s.ring(idx) = (gammaPpm * (xm - h.level_micro) + (1000000L - gammaPpm) * sOld) / 1000000L
+    WintersState(h, s.ring, s.t + 1)
   }
 
+  private def wintersZero(period: Int): WintersState =
+    WintersState(zeroHolt, Array.fill(period)(0L), 0L)
+
+  /** After the last point n: the level, trend, the NEXT position's
+    * season `s_next = ring[n mod period]`, and the one-step forecast
+    * `l + b + s_next`.
+    */
+  private def wintersOut(s: WintersState): HoltWintersOut = {
+    val sNext = s.ring((s.t % s.ring.length).toInt)
+    HoltWintersOut(s.holt.level_micro, s.holt.trend_micro, sNext,
+      s.holt.level_micro + s.holt.trend_micro + sNext)
+  }
+
+  /** Scala-side reference of the Holt-Winters fold. */
   def foldWintersOracle(
       xs: Seq[Double], alphaPpm: Long, betaPpm: Long, gammaPpm: Long,
-      period: Int): HoltWintersOut = {
-    var l = 0L
-    var b = 0L
-    val ring = Array.fill(period)(0L)
-    var t = 0L
-    xs.foreach { x =>
-      val (l2, b2) = wintersStep(l, b, ring, t, math.round(x * 1e6),
-        alphaPpm, betaPpm, gammaPpm)
-      l = l2; b = b2; t += 1
-    }
-    val sNext = ring((t % period).toInt)
-    HoltWintersOut(l, b, sNext, l + b + sNext)
-  }
+      period: Int): HoltWintersOut =
+    wintersOut(xs.foldLeft(wintersZero(period))((s, x) =>
+      wintersStep(s, math.round(x * 1e6), alphaPpm, betaPpm, gammaPpm)))
 
-  /** Same scale shape as [[HoltAggregator]]: concat-merge buffers, one
-    * sorted linear fold per group at finish — state O(group window),
-    * the EWMA contract.
-    */
-  class HoltWintersAggregator(
-      alphaPpm: Long, betaPpm: Long, gammaPpm: Long, period: Int)
-      extends Aggregator[PricePoint, ArrayBuffer[PricePoint], HoltWintersOut] {
-    require(alphaPpm >= 0 && alphaPpm <= 1000000L, "alphaPpm in [0, 1e6]")
-    require(betaPpm >= 0 && betaPpm <= 1000000L, "betaPpm in [0, 1e6]")
-    require(gammaPpm >= 0 && gammaPpm <= 1000000L, "gammaPpm in [0, 1e6]")
+  /** Holt-Winters as an [[OrderedFold]] over (ts, seq, price). */
+  private[graft] def wintersFold(
+      alphaPpm: Long, betaPpm: Long, gammaPpm: Long,
+      period: Int): OrderedFold[PricePoint, (Long, Long), WintersState, HoltWintersOut] = {
+    checkPpm("alphaPpm", alphaPpm)
+    checkPpm("betaPpm", betaPpm)
+    checkPpm("gammaPpm", gammaPpm)
     require(period >= 1 && period <= 366, "period in [1, 366]")
-    override def zero: ArrayBuffer[PricePoint] = ArrayBuffer.empty
-    override def reduce(b: ArrayBuffer[PricePoint], a: PricePoint): ArrayBuffer[PricePoint] = {
-      b += a; b
+    new OrderedFold[PricePoint, (Long, Long), WintersState, HoltWintersOut] {
+      def zero: WintersState = wintersZero(period)
+      def step(s: WintersState, p: PricePoint): WintersState =
+        wintersStep(s, math.round(p.price * 1e6), alphaPpm, betaPpm, gammaPpm)
+      def readout(s: WintersState): HoltWintersOut = wintersOut(s)
+      def key(p: PricePoint): (Long, Long) = (p.ts, p.seq)
+      def order: Ordering[PricePoint] = pointOrder
     }
-    override def merge(b1: ArrayBuffer[PricePoint], b2: ArrayBuffer[PricePoint]): ArrayBuffer[PricePoint] = {
-      b1 ++= b2; b1
-    }
-    override def finish(buf: ArrayBuffer[PricePoint]): HoltWintersOut = {
-      val sorted = buf.sortBy(p => (p.ts, p.seq, p.price))
-      foldWintersOracle(sorted.toSeq.map(_.price), alphaPpm, betaPpm,
-        gammaPpm, period)
-    }
-    override def bufferEncoder: Encoder[ArrayBuffer[PricePoint]] =
-      Encoders.kryo[ArrayBuffer[PricePoint]]
-    override def outputEncoder: Encoder[HoltWintersOut] =
-      Encoders.product[HoltWintersOut]
   }
 
   def holtWintersUdaf(
       alphaPpm: Long, betaPpm: Long, gammaPpm: Long,
       period: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new HoltWintersAggregator(alphaPpm, betaPpm, gammaPpm, period),
-      Encoders.product[PricePoint])
+    udaf(new OrderedFold.Agg(wintersFold(alphaPpm, betaPpm, gammaPpm, period),
+      Encoders.product[HoltWintersOut]), Encoders.product[PricePoint])
 }

@@ -38,9 +38,6 @@ final case class Ewma(period: Long, alpha: Double, current: Double)
 
 object Ewma {
   val schema: StructType = Encoders.product[Ewma].schema
-
-  /** alpha = 2 / (periodSeconds + 1), reference indicators.rs:17. */
-  def alphaFor(periodSeconds: Long): Double = 2.0 / (periodSeconds + 1)
 }
 
 /** One observation of the price series inside a window: the deterministic

@@ -1,86 +1,41 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
-import graft.functions.HoltFunctions
+import graft.functions.{HoltFunctions, OrderedFold}
+import graft.functions.HoltFunctions.HoltOut
+import graft.model.PricePoint
 
-/** Cross-batch CONTINUOUS Holt level+trend — [[ContinuousEwma]]'s shape
-  * carrying [[HoltFunctions]]' exact integer fold: one running
-  * (level, trend) pair per key survives across micro-batches via the
-  * state store, so the stream's state after any replay prefix equals the
-  * batch fold of that prefix (spec-pinned).
+/** Cross-batch CONTINUOUS Holt level+trend — [[HoltFunctions.holtFold]]
+  * run by the [[OrderedFold.stream]] door ([[ContinuousEwma]]'s shape
+  * carrying the exact integer fold): one running (level, trend) pair per
+  * key survives across micro-batches via the state store, so the
+  * stream's state after any replay prefix equals the batch fold of that
+  * prefix (spec-pinned).
   *
-  * Scale design mirrors ContinuousEwma exactly: O(1) state per key
-  * (two Longs + the high-water mark), key cardinality the only scaling
-  * bound, out-of-order stragglers below the high-water mark ignored (a
-  * continuous smoother cannot retract; documented semantic).
+  * O(1) state per key (two Longs + the high-water mark), key cardinality
+  * the only scaling bound, out-of-order stragglers at or below the
+  * high-water mark ignored (a continuous smoother cannot retract;
+  * documented semantic).
   */
 object ContinuousHolt {
 
   final case class Sample(key: String, ts: Long, seq: Long, price: Double)
-  final case class HoltState(l: Long, b: Long, lastTs: Long, lastSeq: Long, n: Long)
   final case class HoltUpdate(
       key: String, level_micro: Long, trend_micro: Long, forecast_micro: Long,
       n: Long, lastTs: Long)
 
-  val zeroState: HoltState = HoltState(0L, 0L, Long.MinValue, Long.MinValue, 0L)
-
-  /** Shared batch fold: sort (ts, seq), fold rows above the high-water
-    * mark with the [[HoltFunctions.foldOracle]] step, return the new
-    * state iff anything folded.
-    */
-  def foldBatch(
-      prev: HoltState, rows: Iterator[Sample],
-      alphaPpm: Long, betaPpm: Long): Option[HoltState] = {
-    val sorted = rows.toArray.sortBy(s => (s.ts, s.seq))
-    var l = prev.l
-    var b = prev.b
-    var lastTs = prev.lastTs
-    var lastSeq = prev.lastSeq
-    var n = prev.n
-    var folded = false
-    sorted.foreach { s =>
-      if (s.ts > lastTs || (s.ts == lastTs && s.seq > lastSeq)) {
-        val xm = math.round(s.price * 1e6)
-        val lNew = (alphaPpm * xm + (1000000L - alphaPpm) * (l + b)) / 1000000L
-        b = (betaPpm * (lNew - l) + (1000000L - betaPpm) * b) / 1000000L
-        l = lNew
-        n += 1
-        lastTs = s.ts
-        lastSeq = s.seq
-        folded = true
-      }
-    }
-    if (folded) Some(HoltState(l, b, lastTs, lastSeq, n)) else None
-  }
-
-  def update(alphaPpm: Long, betaPpm: Long)(
-      key: String,
-      rows: Iterator[Sample],
-      state: GroupState[HoltState]): Iterator[HoltUpdate] = {
-    foldBatch(state.getOption.getOrElse(zeroState), rows, alphaPpm, betaPpm) match {
-      case Some(next) =>
-        state.update(next)
-        Iterator.single(HoltUpdate(
-          key, next.l, next.b, next.l + next.b, next.n, next.lastTs))
-      case None => Iterator.empty
-    }
-  }
-
   /** Wire the stateful op over a streaming Dataset[Sample]. */
-  def run(samples: Dataset[Sample], alphaPpm: Long, betaPpm: Long): Dataset[HoltUpdate] = {
-    implicit val stateEnc = Encoders.product[HoltState]
-    implicit val outEnc = Encoders.product[HoltUpdate]
-    samples
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        update(alphaPpm, betaPpm))
-  }
+  def run(samples: Dataset[Sample], alphaPpm: Long, betaPpm: Long): Dataset[HoltUpdate] =
+    OrderedFold.stream(samples, HoltFunctions.holtFold(alphaPpm, betaPpm),
+      (s: Sample) => s.key, (s: Sample) => PricePoint(s.ts, s.seq, s.price)) {
+      (key, h: HoltOut, n, mark) =>
+        HoltUpdate(key, h.level_micro, h.trend_micro, h.forecast_micro, n, mark._1)
+    }
 
   /** Batch reference for tests: [[HoltFunctions.foldOracle]] per key. */
   def batchOracle(
-      samples: Seq[Sample], alphaPpm: Long, betaPpm: Long): Map[String, HoltFunctions.HoltOut] =
+      samples: Seq[Sample], alphaPpm: Long, betaPpm: Long): Map[String, HoltOut] =
     samples.groupBy(_.key).map { case (k, rows) =>
       k -> HoltFunctions.foldOracle(
         rows.sortBy(s => (s.ts, s.seq)).map(_.price), alphaPpm, betaPpm)

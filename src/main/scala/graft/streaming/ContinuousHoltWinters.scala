@@ -1,103 +1,49 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
-import graft.functions.HoltFunctions
+import graft.functions.{HoltFunctions, OrderedFold}
+import graft.functions.HoltFunctions.HoltWintersOut
+import graft.model.PricePoint
 import graft.streaming.ContinuousHolt.Sample
 
-/** Cross-batch CONTINUOUS Holt-Winters — [[ContinuousHolt]]'s shape
-  * carrying the seasonal triple fold: one running (level, trend, season
+/** Cross-batch CONTINUOUS Holt-Winters — [[HoltFunctions.wintersFold]]
+  * run by the [[OrderedFold.stream]] door ([[ContinuousHolt]]'s shape
+  * carrying the seasonal triple fold): one running (level, trend, season
   * ring, position) per key survives across micro-batches via the state
   * store, stepping with the LITERAL [[HoltFunctions.wintersStep]] the
   * batch aggregator uses, so the stream's state after any replay prefix
   * equals the batch fold of that prefix bit-for-bit (spec-pinned).
   *
-  * Scale design mirrors ContinuousHolt: O(period) state per key (the
-  * ring + three Longs + the high-water mark), key cardinality the only
-  * scaling bound, out-of-order stragglers below the high-water mark
-  * ignored (a continuous smoother cannot retract; documented semantic).
+  * O(period) state per key (the ring + three Longs + the high-water
+  * mark), key cardinality the only scaling bound, out-of-order
+  * stragglers at or below the high-water mark ignored (a continuous
+  * smoother cannot retract; documented semantic).
   */
 object ContinuousHoltWinters {
 
-  final case class HwState(
-      l: Long, b: Long, ring: Seq[Long], t: Long,
-      lastTs: Long, lastSeq: Long)
   final case class HwUpdate(
       key: String, level_micro: Long, trend_micro: Long, season_micro: Long,
       forecast_micro: Long, n: Long, lastTs: Long)
 
-  def zeroState(period: Int): HwState =
-    HwState(0L, 0L, Seq.fill(period)(0L), 0L, Long.MinValue, Long.MinValue)
-
-  /** Shared batch fold: sort (ts, seq), step rows above the high-water
-    * mark with the SHARED [[HoltFunctions.wintersStep]], return the new
-    * state iff anything folded.
-    *
-    * CONTRACT: (ts, seq) must be UNIQUE per key — the high-water mark is
-    * strict, so a duplicate (ts, seq) in one micro-batch folds once here
-    * but twice in the batch fold (same contract as
-    * [[ContinuousCusum.foldBatch]]; the specs assert uniqueness on their
-    * generated corpora).
-    */
-  def foldBatch(
-      prev: HwState, rows: Iterator[Sample],
-      alphaPpm: Long, betaPpm: Long, gammaPpm: Long): Option[HwState] = {
-    val sorted = rows.toArray.sortBy(s => (s.ts, s.seq))
-    var l = prev.l
-    var b = prev.b
-    val ring = prev.ring.toArray
-    var t = prev.t
-    var lastTs = prev.lastTs
-    var lastSeq = prev.lastSeq
-    var folded = false
-    sorted.foreach { s =>
-      if (s.ts > lastTs || (s.ts == lastTs && s.seq > lastSeq)) {
-        val (l2, b2) = HoltFunctions.wintersStep(l, b, ring, t,
-          math.round(s.price * 1e6), alphaPpm, betaPpm, gammaPpm)
-        l = l2; b = b2; t += 1
-        lastTs = s.ts
-        lastSeq = s.seq
-        folded = true
-      }
-    }
-    if (folded) Some(HwState(l, b, ring.toSeq, t, lastTs, lastSeq)) else None
-  }
-
-  def update(alphaPpm: Long, betaPpm: Long, gammaPpm: Long, period: Int)(
-      key: String,
-      rows: Iterator[Sample],
-      state: GroupState[HwState]): Iterator[HwUpdate] = {
-    foldBatch(state.getOption.getOrElse(zeroState(period)), rows,
-      alphaPpm, betaPpm, gammaPpm) match {
-      case Some(next) =>
-        state.update(next)
-        val sNext = next.ring((next.t % period).toInt)
-        Iterator.single(HwUpdate(key, next.l, next.b, sNext,
-          next.l + next.b + sNext, next.t, next.lastTs))
-      case None => Iterator.empty
-    }
-  }
-
   /** Wire the stateful op over a streaming Dataset[Sample]. */
   def run(
       samples: Dataset[Sample], alphaPpm: Long, betaPpm: Long,
-      gammaPpm: Long, period: Int): Dataset[HwUpdate] = {
-    require(period >= 1 && period <= 366, "period in [1, 366]")
-    implicit val stateEnc = Encoders.product[HwState]
-    implicit val outEnc = Encoders.product[HwUpdate]
-    samples
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        update(alphaPpm, betaPpm, gammaPpm, period))
-  }
+      gammaPpm: Long, period: Int): Dataset[HwUpdate] =
+    OrderedFold.stream(samples,
+      HoltFunctions.wintersFold(alphaPpm, betaPpm, gammaPpm, period),
+      (s: Sample) => s.key, (s: Sample) => PricePoint(s.ts, s.seq, s.price)) {
+      (key, o: HoltWintersOut, n, mark) =>
+        HwUpdate(key, o.level_micro, o.trend_micro, o.season_micro,
+          o.forecast_micro, n, mark._1)
+    }
 
   /** Batch reference for tests: [[HoltFunctions.foldWintersOracle]] per
     * key.
     */
   def batchOracle(
       samples: Seq[Sample], alphaPpm: Long, betaPpm: Long, gammaPpm: Long,
-      period: Int): Map[String, HoltFunctions.HoltWintersOut] =
+      period: Int): Map[String, HoltWintersOut] =
     samples.groupBy(_.key).map { case (k, rows) =>
       k -> HoltFunctions.foldWintersOracle(
         rows.sortBy(s => (s.ts, s.seq)).map(_.price),

@@ -1,58 +1,23 @@
 package graft
 
-import java.nio.file.Files
+import graft.functions.{EwmaFunctions, OrderedFold}
+import graft.functions.EwmaFunctions.PricePointA
 
-import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.functions._
-
-import graft.streaming.ContinuousEwma
-import graft.streaming.ContinuousEwma.Sample
-
-/** The continuous (cross-batch) EWMA must equal a single global fold per
-  * key no matter how the stream is chopped into micro-batches.
+/** Hand-computed straggler pins for the EWMA's continuous fold; the
+  * replay through the stream is pinned by [[ContinuousFoldSpec]].
   */
 class ContinuousEwmaSpec extends SparkSpec {
 
   test("a batch of only out-of-order stragglers emits nothing and leaves state unchanged") {
-    import graft.streaming.ContinuousEwma._
-    val s0 = foldBatch(zeroState, Iterator(Sample("k", 10L, 1L, 5.0)), 0.5).get
+    def fold(prev: Option[OrderedFold.Door[EwmaFunctions.EwmaAcc, (Long, Long)]],
+        pts: (Long, Long, Double)*) =
+      OrderedFold.foldBatch(EwmaFunctions.fold, prev,
+        pts.iterator.map { case (ts, seq, p) => PricePointA(ts, seq, p, 0.5) })
+    val s0 = fold(None, (10L, 1L, 5.0)).get
     // all rows at-or-before the high-water mark -> None (no duplicate emit)
-    assert(foldBatch(s0, Iterator(Sample("k", 9L, 1L, 7.0), Sample("k", 10L, 1L, 7.0)), 0.5).isEmpty)
+    assert(fold(Some(s0), (9L, 1L, 7.0), (10L, 1L, 7.0)).isEmpty)
     // a mixed batch folds only the newer rows
-    val s1 = foldBatch(s0, Iterator(Sample("k", 9L, 9L, 100.0), Sample("k", 11L, 1L, 3.0)), 0.5).get
-    assert(s1.n === 2 && s1.current === 0.5 * 3.0 + 0.5 * s0.current)
-  }
-
-  test("stateful streaming EWMA == one global fold per key, across micro-batches") {
-    import spark.implicits._
-    val alpha = 0.1
-    val samples = (1 to 300).map { i =>
-      Sample(key = s"k${i % 3}", ts = i.toLong, seq = i.toLong, price = (i % 17) * 1.0 + 1)
-    }
-    val dir = Files.createTempDirectory("graft-cont-").toString
-    // time-ordered file chunks => deterministic batch boundaries
-    samples.grouped(100).zipWithIndex.foreach { case (chunk, i) =>
-      spark.createDataset(chunk).coalesce(1).write.parquet(s"$dir/part_$i")
-    }
-    val paths = (0 until 3).map(i => s"$dir/part_$i")
-    val schema = Encoders.product[Sample].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/part_*")
-    val out = ContinuousEwma.run(stream.as[Sample], alpha)
-    val q = out.writeStream.format("memory").queryName("cont_ewma").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // last update per key is the final running value
-      val got = spark.table("cont_ewma")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("key").orderBy(col("n").desc)))
-        .filter(col("rn") === 1)
-        .select("key", "current").collect()
-        .map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val want = ContinuousEwma.batchOracle(samples, alpha)
-      assert(got.keySet === want.keySet)
-      got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-12, s"key $k") }
-    } finally q.stop()
+    val s1 = fold(Some(s0), (9L, 9L, 100.0), (11L, 1L, 3.0)).get
+    assert(s1.n === 2 && s1.state.current === 0.5 * 3.0 + 0.5 * s0.state.current)
   }
 }

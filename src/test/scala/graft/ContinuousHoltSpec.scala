@@ -1,73 +1,21 @@
 package graft
 
-import java.nio.file.Files
+import graft.functions.{HoltFunctions, OrderedFold}
+import graft.model.PricePoint
 
-import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.functions._
-
-import graft.streaming.ContinuousHolt
-import graft.streaming.ContinuousHolt.Sample
-
-/** The continuous (cross-batch) Holt fold must equal a single global
-  * integer fold per key no matter how the stream is chopped into
-  * micro-batches — EXACT equality, no float tolerance (integer fixed
-  * point end-to-end).
+/** Hand-computed straggler pins for Holt's continuous fold; the replay
+  * through the stream is pinned by [[ContinuousFoldSpec]].
   */
 class ContinuousHoltSpec extends SparkSpec {
 
   test("straggler batches emit nothing; mixed batches fold only newer rows") {
-    import graft.streaming.ContinuousHolt._
-    val s0 = foldBatch(zeroState, Iterator(Sample("k", 10L, 1L, 8.0)), 500000L, 500000L).get
-    assert((s0.l, s0.b) === ((4000000L, 2000000L)))
-    assert(foldBatch(s0, Iterator(Sample("k", 10L, 0L, 7.0)), 500000L, 500000L).isEmpty)
-    val s1 = foldBatch(s0,
-      Iterator(Sample("k", 9L, 9L, 100.0), Sample("k", 11L, 1L, 8.0)), 500000L, 500000L).get
+    val f = HoltFunctions.holtFold(500000L, 500000L)
+    val s0 = OrderedFold.foldBatch(f, None, Iterator(PricePoint(10L, 1L, 8.0))).get
+    assert((s0.state.level_micro, s0.state.trend_micro) === ((4000000L, 2000000L)))
+    assert(OrderedFold.foldBatch(f, Some(s0), Iterator(PricePoint(10L, 0L, 7.0))).isEmpty)
+    val s1 = OrderedFold.foldBatch(f, Some(s0),
+      Iterator(PricePoint(9L, 9L, 100.0), PricePoint(11L, 1L, 8.0))).get
     // only the ts=11 row folds: the hand-computed second step of HoltSpec
-    assert((s1.l, s1.b, s1.n) === ((7000000L, 2500000L, 2L)))
-  }
-
-  test("stateful streaming Holt == one global integer fold per key, across micro-batches") {
-    import spark.implicits._
-    val samples = (1 to 300).map { i =>
-      Sample(key = s"k${i % 3}", ts = i.toLong, seq = i.toLong, price = (i % 17) * 1.25 + 1)
-    }
-    // foldBatch contract: (ts, seq) unique per key (strict high-water mark)
-    assert(samples.map(s => (s.key, s.ts, s.seq)).distinct.size ===
-      samples.size)
-    val dir = Files.createTempDirectory("graft-holt-").toString
-    samples.grouped(100).zipWithIndex.foreach { case (chunk, i) =>
-      spark.createDataset(chunk).coalesce(1).write.parquet(s"$dir/part_$i")
-    }
-    val schema = Encoders.product[Sample].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/part_*")
-    val out = ContinuousHolt.run(stream.as[Sample], 300000L, 100000L)
-    val q = out.writeStream.format("memory").queryName("cont_holt").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("cont_holt")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("key").orderBy(col("n").desc)))
-        .filter(col("rn") === 1)
-        .select("key", "level_micro", "trend_micro", "forecast_micro").collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      val want = ContinuousHolt.batchOracle(samples, 300000L, 100000L)
-      assert(got.keySet === want.keySet)
-      got.foreach { case (k, (l, b, f)) =>
-        val w = want(k)
-        assert((l, b, f) === ((w.level_micro, w.trend_micro, w.forecast_micro)),
-          s"key $k diverged from the global fold")
-      }
-      // every intermediate update is the fold of its replay prefix
-      val updates = spark.table("cont_holt")
-        .select("key", "n", "level_micro").collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-      updates.foreach { case ((k, n), l) =>
-        val prefix = samples.filter(_.key == k).sortBy(s => (s.ts, s.seq)).take(n.toInt)
-        assert(l === ContinuousHolt.batchOracle(prefix, 300000L, 100000L)(k).level_micro,
-          s"prefix fold mismatch at ($k, $n)")
-      }
-    } finally q.stop()
+    assert((s1.state.level_micro, s1.state.trend_micro, s1.n) === ((7000000L, 2500000L, 2L)))
   }
 }

@@ -1,80 +1,22 @@
 package graft
 
-import java.nio.file.Files
+import graft.functions.{HoltFunctions, OrderedFold}
+import graft.model.PricePoint
 
-import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.functions._
-
-import graft.streaming.ContinuousHolt.Sample
-import graft.streaming.ContinuousHoltWinters
-
-/** The continuous (cross-batch) Holt-Winters fold must equal a single
-  * global integer fold per key no matter how the stream is chopped into
-  * micro-batches — EXACT equality (shared wintersStep, integer fixed
-  * point end-to-end), and stragglers below the high-water mark are
-  * ignored without disturbing the ring position.
+/** Straggler pins for Holt-Winters' continuous fold: rows below the
+  * high-water mark must not disturb the ring position. The replay
+  * through the stream is pinned by [[ContinuousFoldSpec]].
   */
 class ContinuousHwSpec extends SparkSpec {
 
   test("straggler rows below the high-water mark fold nothing") {
-    import graft.streaming.ContinuousHoltWinters._
-    val s0 = foldBatch(zeroState(3),
-      Iterator(Sample("k", 10L, 1L, 8.0)), 500000L, 500000L, 500000L).get
-    assert(s0.t === 1L)
-    assert(foldBatch(s0, Iterator(Sample("k", 10L, 0L, 7.0)),
-      500000L, 500000L, 500000L).isEmpty)
+    val f = HoltFunctions.wintersFold(500000L, 500000L, 500000L, 3)
+    val s0 = OrderedFold.foldBatch(f, None, Iterator(PricePoint(10L, 1L, 8.0))).get
+    assert(s0.state.t === 1L)
+    assert(OrderedFold.foldBatch(f, Some(s0), Iterator(PricePoint(10L, 0L, 7.0))).isEmpty)
     // mixed batch: only the newer row folds, ring advances exactly once
-    val s1 = foldBatch(s0,
-      Iterator(Sample("k", 9L, 9L, 100.0), Sample("k", 11L, 1L, 8.0)),
-      500000L, 500000L, 500000L).get
-    assert(s1.t === 2L, "straggler must not advance the ring position")
-  }
-
-  test("stateful streaming Holt-Winters == one global fold per key, across micro-batches") {
-    val period = 4
-    val samples = (1 to 240).map { i =>
-      Sample(key = s"k${i % 3}", ts = i.toLong, seq = i.toLong,
-        price = Seq(5.0, 20.0, 10.0, 40.0)(i % period) + i * 0.05)
-    }
-    val dir = Files.createTempDirectory("graft-hw-").toString
-    samples.grouped(80).zipWithIndex.foreach { case (chunk, i) =>
-      spark.createDataset(chunk)(Encoders.product[Sample])
-        .coalesce(1).write.parquet(s"$dir/part_$i")
-    }
-    val schema = Encoders.product[Sample].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/part_*")
-    val out = ContinuousHoltWinters.run(
-      stream.as[Sample](Encoders.product[Sample]),
-      300000L, 100000L, 200000L, period)
-    val q = out.writeStream.format("memory").queryName("cont_hw")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("cont_hw")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("key").orderBy(col("n").desc)))
-        .filter(col("rn") === 1)
-        .select("key", "level_micro", "trend_micro", "season_micro",
-          "forecast_micro")
-        .collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-      val want = ContinuousHoltWinters.batchOracle(
-        samples, 300000L, 100000L, 200000L, period)
-      assert(got.keySet === want.keySet)
-      got.foreach { case (k, (l, b, sn, f)) =>
-        val w = want(k)
-        assert((l, b, sn, f) === ((w.level_micro, w.trend_micro,
-          w.season_micro, w.forecast_micro)),
-          s"key $k diverged from the global fold")
-      }
-      // multiple micro-batches actually ran (cross-batch state was used)
-      assert(spark.table("cont_hw").groupBy("key").count()
-        .collect().forall(_.getLong(1) > 1L),
-        "the replay must exercise more than one micro-batch per key")
-    } finally q.stop()
+    val s1 = OrderedFold.foldBatch(f, Some(s0),
+      Iterator(PricePoint(9L, 9L, 100.0), PricePoint(11L, 1L, 8.0))).get
+    assert(s1.state.t === 2L, "straggler must not advance the ring position")
   }
 }

@@ -1,19 +1,19 @@
 package graft
 
-import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
-import graft.functions.CusumFunctions
+import graft.functions.{CusumFunctions, OrderedFold}
+import graft.functions.CusumFunctions.CusumPoint
 import graft.operators.EventAnalytics
-import graft.streaming.ContinuousCusum
-import graft.streaming.ContinuousCusum.Sample
 
 /** Ground-truth pins for the online CUSUM fold: hand-computed alarm /
   * restart / first-alarm semantics, UDAF ≡ foldOracle, the batch operator
-  * end-to-end, and the continuous twin's cross-batch equality (EXACT —
-  * integer fixed point end-to-end).
+  * end-to-end, the continuous fold's straggler rule and the tie order.
+  * The continuous twin's cross-batch equality is pinned by
+  * [[ContinuousFoldSpec]].
   */
 class CusumSpec extends SparkSpec {
   import spark.implicits._
@@ -70,70 +70,27 @@ class CusumSpec extends SparkSpec {
   }
 
   test("straggler batches emit nothing; mixed batches fold only newer rows") {
-    import ContinuousCusum._
-    val s0 = foldBatch(zeroState,
-      Iterator(Sample("k", "d2", 1L, 9L)), 1L, 5L).get
+    val f = CusumFunctions.fold(1L, 5L)
+    val s0 = OrderedFold.foldBatch(f, None, Iterator(CusumPoint("d2", 1L, 9L))).get
     // 9 - 1 = 8 > 5 -> alarm + restart
-    assert((s0.s_hi_micro, s0.alarms_hi, s0.first_alarm) === ((0L, 1L, "d2")))
-    assert(foldBatch(s0, Iterator(Sample("k", "d1", 0L, 100L)), 1L, 5L).isEmpty)
-    val s1 = foldBatch(s0,
-      Iterator(Sample("k", "d1", 9L, 100L), Sample("k", "d3", 1L, 3L)), 1L, 5L).get
-    assert((s1.s_hi_micro, s1.alarms_hi, s1.n) === ((2L, 1L, 2L)))
+    assert((s0.state.s_hi_micro, s0.state.alarms_hi, s0.state.first_alarm) === ((0L, 1L, "d2")))
+    assert(OrderedFold.foldBatch(f, Some(s0), Iterator(CusumPoint("d1", 0L, 100L))).isEmpty)
+    val s1 = OrderedFold.foldBatch(f, Some(s0),
+      Iterator(CusumPoint("d1", 9L, 100L), CusumPoint("d3", 1L, 3L))).get
+    assert((s1.state.s_hi_micro, s1.state.alarms_hi, s1.n) === ((2L, 1L, 2L)))
   }
 
-  test("stateful streaming CUSUM == one global fold per key, across " +
-      "micro-batches") {
-    val samples = (1 to 300).map { i =>
-      Sample(key = s"k${i % 3}", ord = f"t$i%04d", seq = i.toLong,
-        dev_micro = ((i % 23) - 11).toLong * 1000000L)
-    }
-    // foldBatch contract: (ord, seq) unique per key (strict high-water mark)
-    assert(samples.map(s => (s.key, s.ord, s.seq)).distinct.size ===
-      samples.size)
-    val dir = Files.createTempDirectory("graft-cusum-").toString
-    samples.grouped(100).zipWithIndex.foreach { case (chunk, i) =>
-      spark.createDataset(chunk).coalesce(1).write.parquet(s"$dir/part_$i")
-    }
-    val schema = Encoders.product[Sample].schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/part_*")
-    val out = ContinuousCusum.run(stream.as[Sample], 1000000L, 5000000L)
-    val q = out.writeStream.format("memory").queryName("cont_cusum")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("cont_cusum")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("key")
-            .orderBy(col("n").desc)))
-        .filter(col("rn") === 1)
-        .select("key", "s_hi_micro", "s_lo_micro", "alarms_hi", "alarms_lo",
-          "first_alarm")
-        .collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getString(5)))).toMap
-      val want = ContinuousCusum.batchOracle(samples, 1000000L, 5000000L)
-      assert(got.keySet === want.keySet)
-      got.foreach { case (k, g) =>
-        val w = want(k)
-        assert(g === ((w.s_hi_micro, w.s_lo_micro, w.alarms_hi, w.alarms_lo,
-          w.first_alarm)), s"key $k diverged from the global fold")
-      }
-      // alarms actually fired somewhere (the harness is not vacuous)
-      assert(want.values.map(w => w.alarms_hi + w.alarms_lo).sum > 0)
-      // every intermediate update is the fold of its replay prefix
-      val updates = spark.table("cont_cusum")
-        .select("key", "n", "s_hi_micro", "s_lo_micro").collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3))))
-        .toMap
-      updates.foreach { case ((k, n), g) =>
-        val prefix = samples.filter(_.key == k)
-          .sortBy(s => (s.ord, s.seq)).take(n.toInt)
-        val w = ContinuousCusum.batchOracle(prefix, 1000000L, 5000000L)(k)
-        assert(g === ((w.s_hi_micro, w.s_lo_micro)),
-          s"prefix n=$n of $k diverged")
-      }
-    } finally q.stop()
+  test("points that tie on (ord, seq) fold in full-tuple order whatever the " +
+      "merge order") {
+    val pts = Seq(CusumPoint("d1", 0L, 5L), CusumPoint("d2", 0L, 8L),
+      CusumPoint("d2", 0L, -8L))
+    val agg = new OrderedFold.Agg(CusumFunctions.fold(0L, 10L),
+      Encoders.product[CusumFunctions.CusumState])
+    val want = CusumFunctions.foldOracle(
+      pts.sortBy(p => (p.ord, p.seq, p.dev_micro)).map(p => (p.ord, p.dev_micro)),
+      slackMicro = 0L, hMicro = 10L)
+    assert(want === CusumFunctions.CusumState(8L, 0L, 0L, 0L, ""))
+    assert(agg.finish(ArrayBuffer.from(pts)) === want)
+    assert(agg.finish(ArrayBuffer.from(pts.reverse)) === want)
   }
 }

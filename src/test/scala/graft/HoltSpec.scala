@@ -119,10 +119,10 @@ class HoltSpec extends SparkSpec {
 
   test("HoltWintersAggregator guards its parameter ranges") {
     intercept[IllegalArgumentException] {
-      new HoltFunctions.HoltWintersAggregator(300000L, 100000L, 1000001L, 7)
+      HoltFunctions.holtWintersUdaf(300000L, 100000L, 1000001L, 7)
     }
     intercept[IllegalArgumentException] {
-      new HoltFunctions.HoltWintersAggregator(300000L, 100000L, 200000L, 0)
+      HoltFunctions.holtWintersUdaf(300000L, 100000L, 200000L, 0)
     }
   }
 }
