@@ -26,9 +26,18 @@ import org.apache.spark.sql.graftvec.{FilterExprs, TextExprs, VectorExprs}
   * needs none (SURVEY.md §4.2); expression-level extension is the whole
   * crossing.
   *
-  * Loading the extensions also registers [[graft.fs.LocalFs]] as the
-  * default FileContext binding of `file:`, so the session's streaming
-  * checkpoints are written without a child process per file.
+  * Loading the extensions also sets up two library-wide settings for every
+  * session that loads them (Bench, Verify, the tools, the specs, perfbench,
+  * and sessions built outside the engine with this `spark.sql.extensions`
+  * value):
+  *  - [[graft.fs.LocalFs]] becomes the default FileContext binding of
+  *    `file:`, so the session's streaming checkpoints are written without
+  *    a child process per file;
+  *  - Spark's generated-class cache is sized to
+  *    [[org.apache.spark.sql.graftvec.CodegenCache.MaxEntries]] unless the
+  *    session sets `spark.sql.codegen.cache.maxEntries` itself. That key
+  *    is static, so a session cannot change it once built; the extension
+  *    runs early enough to set it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -50,6 +59,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.fs.LocalFs.register()
+    org.apache.spark.sql.graftvec.CodegenCache.sizeActive()
     ext.injectFunction((
       FunctionIdentifier("minhash_band_keys"),
       info("minhash_band_keys",

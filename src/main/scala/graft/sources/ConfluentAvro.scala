@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.io.{BinaryDecoder, DecoderFactory, EncoderFactory}
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.expressions.UserDefinedFunction
@@ -25,9 +25,12 @@ import org.apache.spark.sql.types._
   * Scale notes:
   *  - the codec is a per-row narrow map — no shuffle, no state;
   *  - the Avro `Schema` and datum reader/writer are built once per
-  *    executor (transient lazy in the serialized closure), never per row;
-  *  - the binary encoder/decoder is NOT reused: each row gets a fresh
-  *    one (`binaryEncoder`/`binaryDecoder` are called with `reuse = null`).
+  *    UDF instance (transient lazy in the serialized closure), never per
+  *    row;
+  *  - the encoder writes header and body into one output buffer and the
+  *    decoder reads the body in place; both reuse one Avro binary
+  *    encoder/decoder per UDF instance. Spark deserializes a UDF per
+  *    task, and a task calls it from one thread.
   *
   * Coverage: flat record schemas of the primitive types the reference
   * uses — string/long/int/double/float/boolean/bytes plus nullable unions
@@ -66,19 +69,26 @@ object ConfluentAvro {
     bb.array()
   }
 
-  /** Split a Confluent-framed payload into (schemaId, body). */
-  def unframe(payload: Array[Byte]): (Int, Array[Byte]) = {
+  /** Schema id of a Confluent-framed payload; the body starts at byte 5. */
+  private def schemaIdOf(payload: Array[Byte]): Int = {
     require(payload.length >= 5 && payload(0) == MagicByte,
       s"not Confluent-framed: len=${payload.length}")
-    val bb = ByteBuffer.wrap(payload, 1, 4)
-    (bb.getInt, java.util.Arrays.copyOfRange(payload, 5, payload.length))
+    ByteBuffer.wrap(payload, 1, 4).getInt
   }
 
+  /** Split a Confluent-framed payload into (schemaId, body). */
+  def unframe(payload: Array[Byte]): (Int, Array[Byte]) =
+    (schemaIdOf(payload), java.util.Arrays.copyOfRange(payload, 5, payload.length))
+
   /** Serializable encoder closure: Spark Row -> framed bytes. */
-  private final class Encoder(json: String, schemaId: Int)
+  private[graft] final class Encoder(json: String, schemaId: Int)
       extends UDF1[Row, Array[Byte]] with Serializable {
     @transient private lazy val schema = new Schema.Parser().parse(json)
     @transient private lazy val writer = new GenericDatumWriter[GenericRecord](schema)
+    @transient private lazy val out = new ByteArrayOutputStream()
+    // unbuffered, so a row that fails half-written leaves nothing behind
+    // for the next row but the bytes `out.reset()` discards
+    @transient private lazy val enc = EncoderFactory.get().directBinaryEncoder(out, null)
     override def call(row: Row): Array[Byte] = {
       if (row == null) return null
       val rec = new GenericData.Record(schema)
@@ -95,11 +105,12 @@ object ConfluentAvro {
           }
         rec.put(f.name, v)
       }
-      val out = new ByteArrayOutputStream()
-      val enc = EncoderFactory.get().binaryEncoder(out, null)
+      out.reset()
+      out.write(MagicByte)
+      out.write(schemaId >>> 24); out.write(schemaId >>> 16)
+      out.write(schemaId >>> 8); out.write(schemaId)
       writer.write(rec, enc)
-      enc.flush()
-      frame(schemaId, out.toByteArray)
+      out.toByteArray
     }
   }
 
@@ -137,10 +148,10 @@ object ConfluentAvro {
     * decodes to a null row, like from_json's PERMISSIVE mode — one poisoned
     * Kafka message must not kill a whole job at scale.
     *
-    * One resolving reader is built per distinct id per executor (lazy
+    * One resolving reader is built per distinct id per UDF instance (lazy
     * transient map), never per row.
     */
-  private final class Decoder(readerJson: String, st: StructType,
+  private[graft] final class Decoder(readerJson: String, st: StructType,
       writerSchemasById: Map[Int, String], permissive: Boolean)
       extends UDF1[Array[Byte], Row] with Serializable {
     @transient private lazy val readerSchema = new Schema.Parser().parse(readerJson)
@@ -151,14 +162,18 @@ object ConfluentAvro {
       writerSchemasById.map { case (id, wj) =>
         id -> new GenericDatumReader[GenericRecord](new Schema.Parser().parse(wj), readerSchema)
       }
+    // re-pointed at each payload by `binaryDecoder`, so a frame that failed
+    // half-read leaves no state for the next one
+    @transient private var in: BinaryDecoder = _
     private def decode(payload: Array[Byte]): Row = {
-      val (id, body) = unframe(payload)
+      val id = schemaIdOf(payload)
       val reader =
         if (writerSchemasById.isEmpty) anyId
         else readers.getOrElse(id, throw new IllegalArgumentException(
           s"unknown Confluent schema id=$id: not in the decoder's schema " +
             s"snapshot (known ids: ${readers.keys.toSeq.sorted.mkString(", ")})"))
-      recordToRow(reader.read(null, DecoderFactory.get().binaryDecoder(body, null)), st)
+      in = DecoderFactory.get().binaryDecoder(payload, 5, payload.length - 5, in)
+      recordToRow(reader.read(null, in), st)
     }
     override def call(payload: Array[Byte]): Row =
       if (payload == null) null

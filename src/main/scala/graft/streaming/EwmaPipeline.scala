@@ -105,9 +105,13 @@ object EwmaPipeline {
     * own keys on its own connection, drops the ones it finds and inserts
     * the rest through Spark's `JdbcUtils.savePartition` (the type mapping,
     * batching, isolation and per-partition transaction of `write.jdbc`).
-    * For NUMERIC and TEMPORAL pks the probe reads only the task's pk
-    * [min, max] range, so its cost tracks the batch's key span, not the
-    * table's history. Other pks (strings) read the whole pk column: the
+    * For NUMERIC and TEMPORAL pks the probe asks only for the task's pk
+    * [min, max] range. The table Spark's writer creates has no key and no
+    * index, so the database still scans every row to answer it and the
+    * probe's cost grows with the table's history (Derby, 120k rows: 15–22
+    * ms per probe, 4 ms once the column is a PRIMARY KEY); create the
+    * table beforehand with a key or index on the pk column to bound it by
+    * the batch's key span. Other pks (strings) read the whole pk column: the
     * database would compare them under ITS collation (e.g. Postgres
     * 'en_US', where 'a' < 'B'), which can disagree with Spark's, and a
     * replayed row would be re-inserted. Spark compares the keys in every

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class BucketedJoinSpec extends SparkSpec {
 
   test("join of two tables bucketed on the key plans without a shuffle") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucket-").toString
+    val wh = tempDir("graft-bucket-")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
     try {
       val o = Tables.table(spark, sfDir, "orders")

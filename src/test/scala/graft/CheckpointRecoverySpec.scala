@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
@@ -22,9 +22,9 @@ class CheckpointRecoverySpec extends SparkSpec {
     val samples = (1 to 300).map { i =>
       Sample(key = s"k${i % 3}", ts = i.toLong, seq = i.toLong, price = (i % 11) + 1.0)
     }
-    val in = Files.createTempDirectory("graft-ckpt-in-").toString
-    val out = Files.createTempDirectory("graft-ckpt-out-").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val in = tempDir("graft-ckpt-in-")
+    val out = tempDir("graft-ckpt-out-")
+    val ckpt = tempDir("graft-ckpt-")
 
     def startQuery(): org.apache.spark.sql.streaming.StreamingQuery = {
       val stream = spark.readStream.schema(Encoders.product[Sample].schema)

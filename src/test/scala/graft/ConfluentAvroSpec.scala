@@ -179,4 +179,28 @@ class ConfluentAvroSpec extends SparkSpec {
       }
     }
   }
+
+  test("one codec instance: frames of different lengths, a malformed one between them") {
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    val json = ConfluentAvro.avroSchemaJson(Trade.schema, "TradesDataAvro")
+    def row(id: String, iv: java.lang.Double, liq: String, seq: Long) =
+      new GenericRowWithSchema(Array[Any](1.5, "buy", 100.0, "BTC-PERP", iv, liq,
+        99.5, 1L, 1700000000000L + seq, id, seq), Trade.schema)
+    val rows = Seq(
+      row("t-" + "x" * 200, 0.6, "MT", 1L),
+      row("t", null, null, 2L),
+      row("t-" + "y" * 40, 0.25, "M", Long.MaxValue))
+    val enc = new ConfluentAvro.Encoder(json, 7)
+    val framed = rows.map(enc.call)
+    assert(framed.map(_.length).distinct.size === 3)
+    assert(framed.forall(f => f.take(5).toSeq === Seq[Byte](0, 0, 0, 0, 7)))
+    val truncated = framed.head.dropRight(3)
+    val payloads = Seq(framed(0), framed(1), truncated,
+      Array[Byte](0, 0, 0, 0, 7, 99, 99), framed(2), framed(1), framed(0))
+    val dec = new ConfluentAvro.Decoder(json, Trade.schema, Map.empty, permissive = true)
+    val decoded = payloads.map(p => Option(dec.call(p)).map(_.toSeq))
+    val want = Seq(rows(0), rows(1), null, null, rows(2), rows(1), rows(0))
+      .map(r => Option(r).map(_.toSeq))
+    assert(decoded === want)
+  }
 }

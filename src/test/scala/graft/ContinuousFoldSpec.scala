@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 
 import graft.streaming.{ContinuousCusum, ContinuousEwma, ContinuousHolt, ContinuousHoltWinters}
@@ -56,26 +53,24 @@ class ContinuousFoldSpec extends SparkSpec {
   /** Stage each chunk as one parquet file, replay them one per
     * micro-batch through `d.run` into a memory sink, and return every
     * update as (key, n, compared columns) with the number of batches that
-    * read rows. The staged files are deleted whatever happens.
+    * read rows.
     */
   private def replay[A](d: Smoother[A], chunks: Seq[Seq[A]]): (Seq[(String, Long, Seq[Any])], Int) = {
-    val dir = Files.createTempDirectory(s"graft-${d.name}-")
+    val dir = tempDir(s"graft-${d.name}-")
+    chunks.zipWithIndex.foreach { case (c, i) =>
+      spark.createDataset(c)(d.enc).coalesce(1).write.parquet(s"$dir/part_$i")
+    }
+    val stream = spark.readStream.schema(d.enc.schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(s"$dir/part_*")
+    val q = d.run(stream.as[A](d.enc)).writeStream.format("memory")
+      .queryName(s"cont_${d.name}").outputMode("append").start()
     try {
-      chunks.zipWithIndex.foreach { case (c, i) =>
-        spark.createDataset(c)(d.enc).coalesce(1).write.parquet(s"$dir/part_$i")
-      }
-      val stream = spark.readStream.schema(d.enc.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dir/part_*")
-      val q = d.run(stream.as[A](d.enc)).writeStream.format("memory")
-        .queryName(s"cont_${d.name}").outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        val updates = spark.table(s"cont_${d.name}").select("key", ("n" +: d.cols): _*)
-          .collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.toSeq.drop(2)))
-        (updates, q.recentProgress.count(_.numInputRows > 0))
-      } finally q.stop()
-    } finally FileUtils.deleteDirectory(dir.toFile)
+      q.processAllAvailable()
+      val updates = spark.table(s"cont_${d.name}").select("key", ("n" +: d.cols): _*)
+        .collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.toSeq.drop(2)))
+      (updates, q.recentProgress.count(_.numInputRows > 0))
+    } finally q.stop()
   }
 
   private def check[A](d: Smoother[A]): Unit = {

@@ -109,7 +109,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("corpusShards writer path: repartition by shard yields shard-pure sorted files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards-").toString + "/out"
+    val dir = tempDir("graft-shards-") + "/out"
     Curation.corpusShards(docs, "doc_id", nShards = 4)
       .repartition(col("shard"))
       .sortWithinPartitions(col("pos"))

@@ -384,7 +384,7 @@ class DedupSpec extends SparkSpec {
     // the documented production shape: materialize the index as a TABLE
     // (new scan plan — immune to the plan-based cache identity that lets
     // releaseCaches drop a same-plan persisted frame)
-    val dir = java.nio.file.Files.createTempDirectory("graft-shidx-").toString
+    val dir = tempDir("graft-shidx-")
     Dedup.buildShingleIndex(docs, "text", "doc_id", shingleK = 5)
       .write.parquet(s"$dir/index")
     val index = spark.read.parquet(s"$dir/index")

@@ -326,4 +326,31 @@ class ExtensionsSpec extends SparkSpec {
     assert(viaSql("a")._2 === Seq(101L, 202L, 303L, 404L, 606L, 909L))
     assert(viaSql("b")._1 === Seq(-4L, 0L, 5L))
   }
+
+  test("codegen cache size: 1024 where unset, an explicit value kept, the suite session sized") {
+    import org.apache.spark.SparkConf
+    import org.apache.spark.sql.graftvec.CodegenCache
+    val key = "spark.sql.codegen.cache.maxEntries"
+    assert(CodegenCache.size(new SparkConf(false)).get(key) === "1024")
+    assert(CodegenCache.size(new SparkConf(false).set(key, "64")).get(key) === "64")
+    assert(spark.conf.get(key) === CodegenCache.MaxEntries.toString)
+  }
+
+  test("codegen cache: 150 distinct projections compiled twice are compiled once") {
+    import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, GenerateUnsafeProjection}
+    import org.apache.spark.sql.types.LongType
+    // the cache is sized from the session's conf when CodeGenerator is first used
+    spark
+    // the nonce makes the 150 classes new to this JVM, whatever ran before
+    val nonce = System.nanoTime()
+    def pass(): Unit = (0 until 150).foreach { i =>
+      GenerateUnsafeProjection.generate(
+        Seq(Add(BoundReference(0, LongType, nullable = false), Literal(nonce + i))))
+    }
+    pass()
+    val compiled = CodeGenerator.compileTime
+    pass()
+    assert(CodeGenerator.compileTime === compiled)
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.Properties
 
 import scala.jdk.CollectionConverters._
@@ -26,7 +25,7 @@ class JdbcSinkSpec extends SparkSpec {
     // duplicate every row to prove pk-dedup (the reference JDBC sink
     // upserts on pk.fields=timestamp; we dedup-before-insert per batch)
     val withDups = ev.union(ev)
-    val dir = Files.createTempDirectory("graft-jdbc-").toString
+    val dir = tempDir("graft-jdbc-")
     withDups.coalesce(1).write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream
@@ -36,7 +35,7 @@ class JdbcSinkSpec extends SparkSpec {
 
     val props = new Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
-    val checkpoint = Files.createTempDirectory("graft-jdbc-ckpt-").toString
+    val checkpoint = tempDir("graft-jdbc-ckpt-")
     val q = EwmaPipeline.jdbcSink(stream, url, "raw_events", props, "event_id", checkpoint)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -52,7 +51,7 @@ class JdbcSinkSpec extends SparkSpec {
     // crash-replay: a FRESH checkpoint re-delivers every batch (the
     // worst-case at-least-once retry); the table-level anti-join must
     // keep the table unchanged instead of duplicating or crash-looping
-    val ckpt2 = Files.createTempDirectory("graft-jdbc-ckpt2-").toString
+    val ckpt2 = tempDir("graft-jdbc-ckpt2-")
     val q2 = EwmaPipeline.jdbcSink(
       spark.readStream.schema(spark.read.parquet(dir).schema)
         .option("maxFilesPerTrigger", 1).parquet(dir),
@@ -137,12 +136,12 @@ class JdbcSinkSpec extends SparkSpec {
     val docs = Tables.table(spark, sfDir, "documents")
       .select(concat(lit("doc-"), col("doc_id")).as("pk"), col("n_chars"))
       .limit(200)
-    val dir = Files.createTempDirectory("graft-jdbc-str-").toString
+    val dir = tempDir("graft-jdbc-str-")
     docs.union(docs).coalesce(1).write.mode("overwrite").parquet(dir)
     val props = new Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
     def run(): Unit = {
-      val ckpt = Files.createTempDirectory("graft-jdbc-str-ckpt-").toString
+      val ckpt = tempDir("graft-jdbc-str-ckpt-")
       val q = EwmaPipeline.jdbcSink(
         spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir),
         url, "raw_docs", props, "pk", ckpt).start()
@@ -212,7 +211,7 @@ class JdbcSinkSpec extends SparkSpec {
       implicit val enc: Encoder[(K, Double)] =
         org.apache.spark.sql.Encoders.tuple(implicitly[Encoder[K]], org.apache.spark.sql.Encoders.scalaDouble)
       val src = MemoryStream[(K, Double)](spark)
-      val ckpt = Files.createTempDirectory("graft-jdbc-redeliver-").toString
+      val ckpt = tempDir("graft-jdbc-redeliver-")
       val q = EwmaPipeline.jdbcSink(src.toDF().toDF("pk", "v"), url, table, props, "pk", ckpt)
         .start()
       try batches.foreach { keys =>

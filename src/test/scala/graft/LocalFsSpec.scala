@@ -26,7 +26,7 @@ class LocalFsSpec extends SparkSpec {
     val conf = new Configuration()
     conf.set(Key, impl)
     (FileContext.getFileContext(new URI("file:///"), conf),
-      Files.createTempDirectory("graft-localfs-").toString)
+      tempDir("graft-localfs-"))
   }
 
   private def perms(p: String): String =

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph, Materialize}
@@ -19,7 +17,7 @@ class MaterializeSpec extends SparkSpec {
   import spark.implicits._
 
   private def withCheckpointDir[A](body: String => A): A = {
-    val dir = Files.createTempDirectory("graft-reliable-ckpt").toString
+    val dir = tempDir("graft-reliable-ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     try body(dir)
     finally {

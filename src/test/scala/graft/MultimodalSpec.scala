@@ -739,7 +739,7 @@ class MultimodalSpec extends SparkSpec {
     val payload = Seq((5L, "hello tar wörld")).toDF("doc_id", "text")
       .select(graft.operators.Multimodal.tarBytes(col("doc_id"), col("text")))
       .collect()(0).getAs[Array[Byte]](0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-tar-")
+    val dir = java.nio.file.Paths.get(tempDir("graft-tar-"))
     val tf = dir.resolve("a.tar")
     java.nio.file.Files.write(tf, payload)
     val listed = Seq("tar", "-tf", tf.toString).!!.trim.split("\n").toSeq

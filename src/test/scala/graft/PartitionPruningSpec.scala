@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Hive-style partitioned writes + partition pruning: the layout tool
@@ -12,7 +10,7 @@ class PartitionPruningSpec extends SparkSpec {
 
   test("write partitioned by event_type; a type predicate prunes partitions") {
     val ev = Tables.events(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-part-").toString
+    val dir = tempDir("graft-part-")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(dir)
 
     val pruned = spark.read.parquet(dir).filter(col("event_type") === "purchase")

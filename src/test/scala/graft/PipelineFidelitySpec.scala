@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.functions.EwmaFunctions
@@ -48,7 +46,7 @@ class PipelineFidelitySpec extends SparkSpec {
 
     val trades = (1 to 600).map(mkTrade)
     // produce framed payloads (R3) into parquet "topic partitions"
-    val dir = Files.createTempDirectory("graft-fid-").toString
+    val dir = tempDir("graft-fid-")
     spark.createDataset(trades).toDF()
       .select(ConfluentAvro.encodeCol(
         struct(Trade.schema.fieldNames.map(col): _*), Trade.schema, 11, "TradesDataAvro").as("value"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.model.Trade
@@ -66,7 +64,7 @@ class RegistryPipelineFidelitySpec extends SparkSpec {
         when(col("trade_seq") % 2 === 0, enc1(allCols))
           .otherwise(ConfluentAvro.toConfluentAvroJson(v2Json, id2)(allCols)))
       .select(col("value"))
-    val dir = Files.createTempDirectory("graft-rpf-").toString
+    val dir = tempDir("graft-rpf-")
     framed.filter(rand(7) >= 0).coalesce(2).write.parquet(s"$dir/wire")
 
     // consumer path: stream the binary payloads, resolve writer schemas

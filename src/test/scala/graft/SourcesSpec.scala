@@ -14,7 +14,7 @@ class SourcesSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("ts").cast("long").as("ts_us"))
-    val base = Files.createTempDirectory("graft-src-").toString
+    val base = tempDir("graft-src-")
     ev.coalesce(2).write.json(s"$base/json")
     ev.coalesce(2).write.option("header", "true").csv(s"$base/csv")
 
@@ -30,7 +30,7 @@ class SourcesSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("ts").cast("long").as("ts_us"))
-    val dir = Files.createTempDirectory("graft-orc-").toString
+    val dir = tempDir("graft-orc-")
     ev.coalesce(2).write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
     assert(back.collect().map(_.toSeq).toSet === ev.collect().map(_.toSeq).toSet)
@@ -43,7 +43,7 @@ class SourcesSpec extends SparkSpec {
   test("text source reads raw lines; documents written one per line read back") {
     val docs = Tables.table(spark, sfDir, "documents")
       .select(regexp_replace(col("text"), "[\\r\\n]", " ").as("value"))
-    val dir = Files.createTempDirectory("graft-text-").toString
+    val dir = tempDir("graft-text-")
     docs.coalesce(1).write.mode("overwrite").text(dir)
     val back = spark.read.text(dir)
     assert(back.count() === docs.count())
@@ -56,7 +56,7 @@ class SourcesSpec extends SparkSpec {
     // (path, modificationTime, length, content) rows; downstream decode /
     // frame-sampling (Multimodal.*) then operates on the binary column.
     // pathGlobFilter prunes at the LISTING, before any bytes are read.
-    val dir = java.nio.file.Files.createTempDirectory("graft-binsrc-").toString
+    val dir = tempDir("graft-binsrc-")
     val payloads = Seq("fake-jpeg-bytes-1", "fake-jpeg-bytes-two", "not-an-image")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.jpg"),
       payloads(0).getBytes("UTF-8"))
@@ -79,7 +79,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("binaryFile STREAMS: raw media files arriving over time feed the multimodal pipeline") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-binstream-").toString
+    val dir = tempDir("graft-binstream-")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/x.bin"),
       ("a" * 20).getBytes("UTF-8"))
     val stream = spark.readStream.format("binaryFile")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Stream-stream equi-join with watermarks and a time-bound condition —
@@ -11,7 +9,7 @@ class StreamJoinSpec extends SparkSpec {
 
   test("watermarked stream-stream join == batch join on the same replay") {
     val ev = Tables.events(spark, sfDir).cache()
-    val dir = Files.createTempDirectory("graft-ssj-").toString
+    val dir = tempDir("graft-ssj-")
     ev.repartition(4).write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
 
@@ -53,7 +51,7 @@ class StreamJoinSpec extends SparkSpec {
     // side never ages), and the small dim broadcasts so the stream side
     // stays shuffle-free per micro-batch
     val ev = Tables.events(spark, sfDir).cache()
-    val dir = Files.createTempDirectory("graft-ssj2-").toString
+    val dir = tempDir("graft-ssj2-")
     ev.repartition(4).write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -49,7 +47,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
   test("trigger-driven retrain: batch 0 (6000 bps > 5000 max-safe) fires " +
       "and hot-swaps; batch 1 (5000 bps, not >) does not; ledger matches " +
       "the composition arithmetic") {
-    val tmp = Files.createTempDirectory("graft-sann-").toString
+    val tmp = tempDir("graft-sann-")
     val ledger = runStream(tmp)
     val nSeed = emb.filter(h < lit(g80)).count()
     val nB0 = emb.filter(h >= lit(g80) && h < lit(g50)).count()
@@ -84,7 +82,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
 
   test("stream ≡ batch composition at the retrain boundary: stored coded " +
       "rows and probe answers equal the inline train/encode twin") {
-    val tmp = Files.createTempDirectory("graft-sann2-").toString
+    val tmp = tempDir("graft-sann2-")
     runStream(tmp)
     // batch twin of the post-retrain state: epoch 1 trains on the 50%
     // gate, encodes everything (ingested ≤ batch 1 = the full corpus)
@@ -121,7 +119,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
   test("retried batch is idempotent: re-running batch 0 after its retrain " +
       "reproduces the SAME ledger row, epoch, and coded rows (the stored " +
       "boundary=1 is invisible to a retry of batch 0)") {
-    val tmp = Files.createTempDirectory("graft-sann3-").toString
+    val tmp = tempDir("graft-sann3-")
     val first = runStream(tmp)
     val csBefore = spark.read.parquet(s"$tmp/coded/boundary=1")
       .agg(sum(col("bucket").cast("long")).as("s")).collect()(0).getLong(0)
@@ -142,7 +140,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
   test("retireEpochs GCs superseded model/coded epochs through the " +
       "manifest-GC discipline: the serving surface answers identically, " +
       "a crash mid-retire leaves unread garbage, the rerun is idempotent") {
-    val tmp = Files.createTempDirectory("graft-sann6-").toString
+    val tmp = tempDir("graft-sann6-")
     runStream(tmp) // batch 0 fires a retrain -> boundary 1 supersedes 0
     val (servedModel, servedIndex) =
       StreamingAnnIndex.current(spark, s"$tmp/model", s"$tmp/coded", 1L)
@@ -186,7 +184,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
 
   test("runWithRetrain wiring: the foreachBatch stream replays the same " +
       "ledger state from real checkpointed batches") {
-    val tmp = Files.createTempDirectory("graft-sann4-").toString
+    val tmp = tempDir("graft-sann4-")
     StreamingAnnIndex.clearModelMemo()
     StreamingAnnIndex.seed(emb.filter(h < lit(g80)), "embedding", "vec_id", p,
       s"$tmp/vec", s"$tmp/model", s"$tmp/coded")
@@ -202,7 +200,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
     // the stream produced the same epochs + stored rows as the direct run
     assert(StreamingAnnIndex.boundaryAt(s"$tmp/model", 2L) === 1L)
-    val direct = Files.createTempDirectory("graft-sann5-").toString
+    val direct = tempDir("graft-sann5-")
     runStream(direct)
     def codedSet(root: String) = spark.read.parquet(s"$root/coded/boundary=1")
       .select(col("neighbor_id"), col("bucket"), col("code"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventAnalytics
@@ -20,7 +18,7 @@ class StreamingAttributionSpec extends SparkSpec {
   private val dayUs = 86400000000L
 
   test("aggregated stream credit == batch attributeConversions on the corpus") {
-    val dir = Files.createTempDirectory("graft-sattr-").toString
+    val dir = tempDir("graft-sattr-")
     val ev = Tables.events(spark, sfDir)
       .withColumn("tsu", unix_micros(col("ts")))
       .select("user_id", "event_type", "tsu", "event_id", "value")
@@ -65,7 +63,7 @@ class StreamingAttributionSpec extends SparkSpec {
 
   private def replay(rows: Seq[(Long, String, Long, Long, Double)], batches: Seq[Range])(
       window: Long): Map[(Long, Long), (String, Long, Long, Long)] = {
-    val dir = Files.createTempDirectory("graft-sattr-h-").toString
+    val dir = tempDir("graft-sattr-h-")
     val df = rows.toDF("user_id", "event_type", "tsu", "event_id", "value")
     batches.foreach { r =>
       df.filter(col("event_id").isin(r.map(_.toLong): _*))
@@ -112,9 +110,9 @@ class StreamingAttributionSpec extends SparkSpec {
   }
 
   test("touch state survives a stop/restart from checkpoint") {
-    val in = Files.createTempDirectory("graft-sattr-ckpt-in-").toString
-    val out = Files.createTempDirectory("graft-sattr-ckpt-out-").toString
-    val ckpt = Files.createTempDirectory("graft-sattr-ckpt-").toString
+    val in = tempDir("graft-sattr-ckpt-in-")
+    val out = tempDir("graft-sattr-ckpt-out-")
+    val ckpt = tempDir("graft-sattr-ckpt-")
     val schema = Seq((0L, "", 0L, 0L, 0.0))
       .toDF("user_id", "event_type", "tsu", "event_id", "value").schema
 

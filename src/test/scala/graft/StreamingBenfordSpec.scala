@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingBenford
@@ -18,7 +16,7 @@ class StreamingBenfordSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
     val probe = ev.select(col("event_id"), col("value"), col("ts"))
 
-    val dir = Files.createTempDirectory("graft-sbf-").toString
+    val dir = tempDir("graft-sbf-")
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
     probe.filter(unix_micros(col("ts")) < cut).coalesce(1)
       .write.parquet(s"$dir/in")

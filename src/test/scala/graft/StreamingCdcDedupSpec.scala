@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -58,7 +56,7 @@ class StreamingCdcDedupSpec extends SparkSpec {
     assert(twin(2000055L)(3).asInstanceOf[Long] >= 1L, "dup_delta planted")
     assert(twin(3000055L)(3).asInstanceOf[Long] >= 1L, "dup_delta planted")
 
-    val tmp = Files.createTempDirectory("graft-scdc-").toString
+    val tmp = tempDir("graft-scdc-")
     StreamingCdcDedup.seedChunks(seedDocs, "text", "doc_id", s"$tmp/chunks")
     b1.coalesce(1).write.parquet(s"$tmp/in")
     Thread.sleep(20)
@@ -82,7 +80,7 @@ class StreamingCdcDedupSpec extends SparkSpec {
 
   test("compactChunks: the visible store and subsequent scores are " +
       "bit-identical across the manifest fold; folded partitions GC'd") {
-    val tmp = Files.createTempDirectory("graft-scdc2-").toString
+    val tmp = tempDir("graft-scdc2-")
     StreamingCdcDedup.seedChunks(seedDocs, "text", "doc_id", s"$tmp/chunks")
     StreamingCdcDedup.processBatch(b1, 0L, "text", "doc_id",
       s"$tmp/chunks", s"$tmp/scores")
@@ -116,7 +114,7 @@ class StreamingCdcDedupSpec extends SparkSpec {
 
   test("cold start: an unseeded store treats batch 0 as all-novel and " +
       "batch 1 still dedups against it") {
-    val tmp = Files.createTempDirectory("graft-scdc3-").toString
+    val tmp = tempDir("graft-scdc3-")
     StreamingCdcDedup.processBatch(seedDocs, 0L, "text", "doc_id",
       s"$tmp/chunks", s"$tmp/scores")
     val s0 = StreamingCdcDedup.readScores(spark, s"$tmp/scores", 0L)

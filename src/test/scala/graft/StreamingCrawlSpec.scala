@@ -35,7 +35,7 @@ class StreamingCrawlSpec extends SparkSpec {
       .collect().map(keyOf).toMap
     assert(twin.nonEmpty, "fixture must keep at least one doc")
 
-    val tmp = Files.createTempDirectory("graft-scrawl-").toString
+    val tmp = tempDir("graft-scrawl-")
     // two arrival files -> two micro-batches (maxFilesPerTrigger=1)
     val a = dumps.filter(col("doc_id") % 2 === 0)
     val b = dumps.filter(col("doc_id") % 2 =!= 0)
@@ -74,7 +74,7 @@ class StreamingCrawlSpec extends SparkSpec {
     assert(gopherPassed.nonEmpty && oneShot.size > gopherPassed.size,
       "fixture needs both gopher-passed and gopher-dropped crawled docs")
 
-    val tmp = Files.createTempDirectory("graft-crawl2corpus-").toString
+    val tmp = tempDir("graft-crawl2corpus-")
     // stage the dump in two id-ordered arrival batches (the funnel's
     // greedy-dedup associativity contract is id-ordered arrival)
     val dump = docs.filter(col("doc_id") >= 250)
@@ -168,7 +168,7 @@ class StreamingCrawlSpec extends SparkSpec {
       "listings stores exactly what the payload door stores for the same " +
       "archives (the crawlDocsFromRecords shared-tail pin)") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-scrawlfd-").toString
+    val tmp = tempDir("graft-scrawlfd-")
     val payloads = dumps.collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("payload"))
     val listings = payloads.map { case (doc, payload) =>
@@ -195,7 +195,7 @@ class StreamingCrawlSpec extends SparkSpec {
   test("warcRecordsFromFiles: (doc, path) rows stream records off " +
       "storage through Hadoop FS with the warcRecords schema and rows") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-scrawlf-").toString
+    val tmp = tempDir("graft-scrawlf-")
     val payloads = dumps.limit(6).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("payload"))
     val files = payloads.map { case (doc, payload) =>

@@ -39,7 +39,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
       .drop("batch_id").collect().map(key).toMap
 
   test("streamed funnel equals the one-shot batch decide row-for-row") {
-    val tmp = Files.createTempDirectory("graft-scf-").toString
+    val tmp = tempDir("graft-scf-")
     val base = docsTable.filter(col("doc_id") < 250)
     val delta = docsTable.filter(col("doc_id") >= 250)
     StreamingCurationFunnel.seedIndex(base, "text", "doc_id", 5, s"$tmp/idx")
@@ -98,7 +98,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
   test("refresh cadence: streamed hot-swapped model epochs equal the q289 " +
       "batch composition row-for-row (counts/bloom folded between batches)") {
     StreamingCurationFunnel.clearRefreshMemo()
-    val tmp = Files.createTempDirectory("graft-scfr-").toString
+    val tmp = tempDir("graft-scfr-")
     val base = docsTable.filter(col("doc_id") < 250)
     val lm0 = rLm0
     val model0 = rModel0
@@ -162,7 +162,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
 
   test("refreshedLm: the one-scan driver-priced fold is bit-identical to " +
       "unigramRefreshModel over the same stored partitions") {
-    val tmp = Files.createTempDirectory("graft-scflm-").toString
+    val tmp = tempDir("graft-scflm-")
     val base = docsTable.filter(col("doc_id") < 250)
     StreamingCurationFunnel.seedCounts(base, "text", rLm0, s"$tmp/cnt")
     TextPipeline.unigramCounts(
@@ -190,7 +190,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
   test("compactCounts: the summed segment re-prices bit-identically " +
       "through the manifest, an uncommitted segment is invisible, folded " +
       "partitions are GC'd, below-horizon reads are refused") {
-    val tmp = Files.createTempDirectory("graft-scfcc-").toString
+    val tmp = tempDir("graft-scfcc-")
     val base = docsTable.filter(col("doc_id") < 250)
     StreamingCurationFunnel.seedCounts(base, "text", rLm0, s"$tmp/cnt")
     TextPipeline.unigramCounts(
@@ -242,8 +242,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
       col("doc_id") >= 250 && col("doc_id") < 400, col("doc_id") >= 400)
     def runOne(compactAfterBatch0: Boolean): Map[Long, Seq[Any]] = {
       StreamingCurationFunnel.clearRefreshMemo()
-      val tmp = Files.createTempDirectory(s"graft-scfsc$compactAfterBatch0-")
-        .toString
+      val tmp = tempDir(s"graft-scfsc$compactAfterBatch0-")
       StreamingCurationFunnel.seedIndex(base, "text", "doc_id", 5, s"$tmp/idx")
       StreamingCurationFunnel.seedCounts(base, "text", rLm0, s"$tmp/cnt")
       StreamingCurationFunnel.seedSegments(base, "text", rLm0, s"$tmp/seg")
@@ -289,7 +288,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
     val preds = Seq(
       col("doc_id") >= 250 && col("doc_id") < 400, col("doc_id") >= 400)
     def runOne(seg: Boolean): (Map[Long, Seq[Any]], Map[(Long, String), Long]) = {
-      val tmp = Files.createTempDirectory(s"graft-scfs$seg-").toString
+      val tmp = tempDir(s"graft-scfs$seg-")
       StreamingCurationFunnel.seedIndex(base, "text", "doc_id", 5, s"$tmp/idx")
       StreamingCurationFunnel.seedCounts(base, "text", rLm0, s"$tmp/cnt")
       if (seg)
@@ -327,7 +326,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
   test("runWithRefresh: the foreachBatch wiring replays the same epochs " +
       "from a real stream with checkpointed batch ids") {
     StreamingCurationFunnel.clearRefreshMemo()
-    val tmp = Files.createTempDirectory("graft-scfw-").toString
+    val tmp = tempDir("graft-scfw-")
     val base = docsTable.filter(col("doc_id") < 250)
     val lm0 = rLm0
     val model0 = rModel0
@@ -399,7 +398,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
     maxNllMicro = 10000000000000L)
 
   test("cross-batch dedup: dropped docs' fingerprints still suppress later copies") {
-    val tmp = Files.createTempDirectory("graft-scf2-").toString
+    val tmp = tempDir("graft-scf2-")
     StreamingCurationFunnel.seedIndex(
       df(1L -> tSeed), "text", "doc_id", 5, s"$tmp/idx")
     // batch 0: 10 is fresh, 11 near-dups 10 (same batch, J=0.857)
@@ -430,7 +429,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
   }
 
   test("retried micro-batch is idempotent and never self-dups") {
-    val tmp = Files.createTempDirectory("graft-scf3-").toString
+    val tmp = tempDir("graft-scf3-")
     StreamingCurationFunnel.seedIndex(
       df(1L -> tSeed), "text", "doc_id", 5, s"$tmp/idx")
     val batch = df(10L -> tX, 11L -> tDupTail)
@@ -452,7 +451,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
 
   test("restart from checkpoint: a second run continues batch ids past " +
       "the stored partitions and decides only the new arrivals") {
-    val tmp = Files.createTempDirectory("graft-scf5-").toString
+    val tmp = tempDir("graft-scf5-")
     StreamingCurationFunnel.seedIndex(
       df(1L -> tSeed), "text", "doc_id", 5, s"$tmp/idx")
     val schema = df(0L -> "x").schema
@@ -504,7 +503,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
     val oneShot = batchDec.collect().map(key).toMap
     Dedup.releaseCaches()
     for (trial <- 1 to 6) {
-      val tmp = Files.createTempDirectory(s"graft-scf6-$trial-").toString
+      val tmp = tempDir(s"graft-scf6-$trial-")
       StreamingCurationFunnel.seedIndex(
         df(1L -> tSeed), "text", "doc_id", 5, s"$tmp/idx")
       // random id-ordered split into 1..5 batches
@@ -524,14 +523,14 @@ class StreamingCurationFunnelSpec extends SparkSpec {
       "bit-for-bit, injected crashes on BOTH sides of the rename leave " +
       "either the old or the new state (never duplicates), recovery is " +
       "a plain rerun") {
-    val tmp = Files.createTempDirectory("graft-scf7-").toString
+    val tmp = tempDir("graft-scf7-")
     StreamingCurationFunnel.seedIndex(
       df(1L -> tSeed), "text", "doc_id", 5, s"$tmp/idx")
     StreamingCurationFunnel.processBatch(
       df(10L -> tX, 11L -> tDupTail), 0L, "text", "doc_id",
       synthModel, s"$tmp/idx", s"$tmp/out")
     // uncompacted control: batch 1 against the per-batch partitions
-    val controlDir = Files.createTempDirectory("graft-scf7c-").toString
+    val controlDir = tempDir("graft-scf7c-")
     def cp(src: String, dst: String): Unit = {
       val s = java.nio.file.Paths.get(src)
       java.nio.file.Files.walk(s).forEach { p =>
@@ -602,7 +601,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
       "_graft_manifest still reads; a commit lands as a fresh-generation " +
       "file, wins by max generation, and GCs superseded pointers") {
     import graft.streaming.Manifests
-    val tmp = Files.createTempDirectory("graft-scf8-").toString
+    val tmp = tempDir("graft-scf8-")
     // pre-port store: the round-17 layout wrote ONE unversioned file
     val legacy = new java.io.File(tmp, "_graft_manifest")
     val w = new java.io.FileWriter(legacy)
@@ -630,7 +629,7 @@ class StreamingCurationFunnelSpec extends SparkSpec {
   }
 
   test("funnel stages: bloom contamination and lm gate surface in verdicts") {
-    val tmp = Files.createTempDirectory("graft-scf4-").toString
+    val tmp = tempDir("graft-scf4-")
     // bloom trained ON tX's own shingles => doc 30 (a copy of tX's text
     // under a fresh id against an EMPTY base) is contaminated
     val m = synthModel.copy(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.syntax._
@@ -18,7 +16,7 @@ class StreamingCurationSpec extends SparkSpec {
   test("gopherRules gates a document stream; results equal the batch run") {
     val docs = Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("graft-scur-").toString
+    val dir = tempDir("graft-scur-")
     docs.coalesce(2).write.parquet(s"$dir/in")
 
     val stream = spark.readStream
@@ -56,7 +54,7 @@ class StreamingCurationSpec extends SparkSpec {
     // side is a pure map (no state, no shuffle) — the ingest-screening
     // deployment shape
     val words = TextPipeline.bloomWords(probes, "text", "doc_id")
-    val dir = Files.createTempDirectory("graft-sbloom-").toString
+    val dir = tempDir("graft-sbloom-")
     corpus.coalesce(3).write.parquet(s"$dir/in")
 
     val stream = TextPipeline.bloomProbe(
@@ -92,7 +90,7 @@ class StreamingCurationSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).limit(50)
     val copies = base.select((col("doc_id") + 100000L).as("doc_id"),
       concat(col("text"), lit("\n"), concat(lit("tail "), col("doc_id").cast("string"))).as("text"))
-    val dir = Files.createTempDirectory("graft-sline-").toString
+    val dir = tempDir("graft-sline-")
     base.coalesce(1).write.parquet(s"$dir/in")       // arrives first
     copies.coalesce(1).write.mode("append").parquet(s"$dir/in")
 
@@ -128,7 +126,7 @@ class StreamingCurationSpec extends SparkSpec {
     import graft.operators.Curation
     val docs = Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("graft-scms-").toString
+    val dir = tempDir("graft-scms-")
     docs.coalesce(3).write.parquet(s"$dir/in")
 
     def cells(toks: org.apache.spark.sql.DataFrame) = toks
@@ -165,7 +163,7 @@ class StreamingCurationSpec extends SparkSpec {
     val batch = Curation.chunkDocuments(docs, "text", "doc_id", 64, 16)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getString(4)))).toMap
-    val dir = Files.createTempDirectory("graft-schunk-").toString
+    val dir = tempDir("graft-schunk-")
     docs.randomSplit(Array(0.6, 0.4), seed = 3L)
       .foreach(_.coalesce(1).write.mode("append").parquet(s"$dir/in"))
     val stream = Curation.chunkDocuments(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventAnalytics
@@ -21,7 +19,7 @@ class StreamingDailyStatsSpec extends SparkSpec {
     val probe = ev.select(col("event_id"), col("event_type"),
       col("value"), col("ts"))
 
-    val dir = Files.createTempDirectory("graft-sds-").toString
+    val dir = tempDir("graft-sds-")
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
     probe.filter(unix_micros(col("ts")) < cut).coalesce(1)
       .write.parquet(s"$dir/in")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Streaming deduplication: dropDuplicates (exact, unbounded state) and
@@ -13,7 +11,7 @@ class StreamingDedupSpec extends SparkSpec {
   test("streaming dropDuplicates removes redelivered events exactly") {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("value"))
-    val dir = Files.createTempDirectory("graft-sdd-").toString
+    val dir = tempDir("graft-sdd-")
     // simulate at-least-once redelivery: the same events in two files
     ev.coalesce(1).write.parquet(s"$dir/a")
     ev.coalesce(1).write.parquet(s"$dir/b")
@@ -33,7 +31,7 @@ class StreamingDedupSpec extends SparkSpec {
   test("dropDuplicatesWithinWatermark bounds dedup state by event time") {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("value"))
-    val dir = Files.createTempDirectory("graft-sddw-").toString
+    val dir = tempDir("graft-sddw-")
     ev.coalesce(1).write.parquet(s"$dir/a")
     ev.coalesce(1).write.parquet(s"$dir/b")
 

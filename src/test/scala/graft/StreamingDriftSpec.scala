@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.FeatureEng
@@ -19,7 +17,7 @@ class StreamingDriftSpec extends SparkSpec {
     val binW = 50000000L
     val refBins = FeatureEng.referenceBins(ev, "event_type", "value", binW).cache()
 
-    val dir = Files.createTempDirectory("graft-sdrift-").toString
+    val dir = tempDir("graft-sdrift-")
     val probe = ev.select(col("event_id"), col("event_type"), col("value"), col("ts"))
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
     probe.filter(unix_micros(col("ts")) < cut).coalesce(1).write.parquet(s"$dir/in")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.ModelEval
@@ -20,7 +18,7 @@ class StreamingEmdSpec extends SparkSpec {
     val refCounts = StreamingKs.referenceValueCounts(ev, "event_type", "value")
       .cache()
 
-    val dir = Files.createTempDirectory("graft-semd-").toString
+    val dir = tempDir("graft-semd-")
     val probe = ev.select(col("event_id"), col("event_type"), col("value"), col("ts"))
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
     probe.filter(unix_micros(col("ts")) < cut).coalesce(1).write.parquet(s"$dir/in")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,7 +39,7 @@ class StreamingEnrichSpec extends SparkSpec {
       .collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
 
-    val dir = Files.createTempDirectory("graft-enrich-").toString
+    val dir = tempDir("graft-enrich-")
     val parts = probe.randomSplit(Array(0.5, 0.3, 0.2), seed = 7L)
     parts.foreach(_.coalesce(1).write.mode("append").parquet(s"$dir/in"))
     val stream = ChangeCapture.intervalEnrich(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
@@ -43,7 +41,7 @@ class StreamingEvictionSpec extends SparkSpec {
       batches: Seq[DataFrame],
       sleepBefore: Map[Int, Long],
       wire: DataFrame => DataFrame): Array[org.apache.spark.sql.Row] = {
-    val dir = Files.createTempDirectory(s"graft-evict-$name-").toString
+    val dir = tempDir(s"graft-evict-$name-")
     batches.head.coalesce(1).write.parquet(s"$dir/in")
     val src = spark.readStream.schema(spark.read.parquet(s"$dir/in").schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.ModelEval
@@ -22,7 +20,7 @@ class StreamingFairnessSpec extends SparkSpec {
           .cast("bigint").as("y"),
         (col("value") >= 0.5).cast("bigint").as("p"))
 
-    val dir = Files.createTempDirectory("graft-sfair-").toString
+    val dir = tempDir("graft-sfair-")
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
     ev.filter(unix_micros(col("ts")) < cut).coalesce(1).write.parquet(s"$dir/in")
     ev.filter(unix_micros(col("ts")) >= cut).coalesce(1)
@@ -73,7 +71,7 @@ class StreamingFairnessSpec extends SparkSpec {
       // a second day so the first one closes under the watermark
       ("A", 0L, 0L, ts(90000000)))
       .toDF("g", "y", "p", "ts")
-    val dir = Files.createTempDirectory("graft-sfair2-").toString
+    val dir = tempDir("graft-sfair2-")
     rows.coalesce(1).write.parquet(s"$dir/in")
     val counts = StreamingFairness.windowCohortCounts(
       spark.readStream.schema(rows.schema)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.FeatureEng
@@ -28,7 +26,7 @@ class StreamingFeatureSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(batch === oneShot, "trained cuts applied == one-shot winsorize")
 
-    val dir = Files.createTempDirectory("graft-sfeat-").toString
+    val dir = tempDir("graft-sfeat-")
     val probe = ev.select(col("event_id"), col("event_type"), col("value"))
     val parts = probe.randomSplit(Array(0.5, 0.3, 0.2), seed = 11L)
     parts.foreach(_.coalesce(1).write.mode("append").parquet(s"$dir/in"))
@@ -53,7 +51,7 @@ class StreamingFeatureSpec extends SparkSpec {
     val batch = FeatureEng.applyEncoding(ev, table, "event_type", "event_id")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
 
-    val dir = Files.createTempDirectory("graft-senc-").toString
+    val dir = tempDir("graft-senc-")
     val probe = ev.select(col("event_id"), col("event_type"))
     probe.coalesce(1).write.parquet(s"$dir/in")
     // a category the table has never seen

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventAnalytics
@@ -35,7 +33,7 @@ class StreamingFunnelSpec extends SparkSpec {
     val early = ev.filter(col("tsu") < unix_micros(to_timestamp(lit(cut))))
     val late = ev.filter(col("tsu") >= unix_micros(to_timestamp(lit(cut))))
     assert(early.count() > 0 && late.count() > 0, "both time slices must be non-empty")
-    val dir = Files.createTempDirectory("graft-sfunnel-").toString
+    val dir = tempDir("graft-sfunnel-")
     early.coalesce(1).write.parquet(s"$dir/in") // arrives first
     late.coalesce(1).write.mode("append").parquet(s"$dir/in")
 
@@ -70,9 +68,9 @@ class StreamingFunnelSpec extends SparkSpec {
 
   test("funnel state survives a stop/restart from checkpoint") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft-sfunnel-ckpt-in-").toString
-    val out = Files.createTempDirectory("graft-sfunnel-ckpt-out-").toString
-    val ckpt = Files.createTempDirectory("graft-sfunnel-ckpt-").toString
+    val in = tempDir("graft-sfunnel-ckpt-in-")
+    val out = tempDir("graft-sfunnel-ckpt-out-")
+    val ckpt = tempDir("graft-sfunnel-ckpt-")
 
     def start() = StreamingFunnel.progress(
       spark.readStream.schema(
@@ -110,7 +108,7 @@ class StreamingFunnelSpec extends SparkSpec {
     val rows = Seq(
       (1L, 5L, "click", 100L), (2L, 5L, "view", 100L),
       (4L, 5L, "click", 150L), (3L, 5L, "purchase", 150L))
-    val dir = Files.createTempDirectory("graft-sfunnel3-").toString
+    val dir = tempDir("graft-sfunnel3-")
     rows.toDF("event_id", "user_id", "event_type", "tsu")
       .coalesce(1).write.parquet(s"$dir/in")
     val stream = StreamingFunnel.progress(
@@ -136,7 +134,7 @@ class StreamingFunnelSpec extends SparkSpec {
     import spark.implicits._
     val b1 = Seq((1L, 10L, "view", 100L)) // view in batch 1
     val b2 = Seq((2L, 10L, "click", 200L), (3L, 10L, "purchase", 300L))
-    val dir = Files.createTempDirectory("graft-sfunnel2-").toString
+    val dir = tempDir("graft-sfunnel2-")
     b1.toDF("event_id", "user_id", "event_type", "tsu")
       .coalesce(1).write.parquet(s"$dir/in")
     b2.toDF("event_id", "user_id", "event_type", "tsu")

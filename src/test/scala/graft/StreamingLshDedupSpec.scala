@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -23,7 +21,7 @@ class StreamingLshDedupSpec extends SparkSpec {
 
     // split the corpus into two parquet files -> two micro-batches, so
     // some near-dup pairs straddle the batch boundary
-    val dir = Files.createTempDirectory("graft-slsh-").toString
+    val dir = tempDir("graft-slsh-")
     val n = docs.count()
     docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(dir)
     docs.filter(col("doc_id") % 2 === 1).coalesce(1).write.mode("append").parquet(dir)
@@ -57,7 +55,7 @@ class StreamingLshDedupSpec extends SparkSpec {
     val batchPairs = Dedup.minhashLshCandidates(half1, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val dir = Files.createTempDirectory("graft-slsh-seed-").toString
+    val dir = tempDir("graft-slsh-seed-")
     half2.coalesce(2).write.parquet(s"$dir/in")
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
@@ -81,9 +79,9 @@ class StreamingLshDedupSpec extends SparkSpec {
     val docs = Tables.table(spark, sfDir, "documents").select("doc_id", "text")
     val want = Dedup.minhashLshCandidates(docs, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dir = Files.createTempDirectory("graft-slsh-ckpt-src-").toString
-    val ckpt = Files.createTempDirectory("graft-slsh-ckpt-").toString
-    val outDir = Files.createTempDirectory("graft-slsh-ckpt-out-").toString
+    val dir = tempDir("graft-slsh-ckpt-src-")
+    val ckpt = tempDir("graft-slsh-ckpt-")
+    val outDir = tempDir("graft-slsh-ckpt-out-")
 
     // file sink: the memory sink refuses checkpoint recovery by design
     def start() = StreamingLshDedup
@@ -119,7 +117,7 @@ class StreamingLshDedupSpec extends SparkSpec {
 
   test("re-sent documents are absorbed idempotently (at-least-once upstream)") {
     val docs = Tables.table(spark, sfDir, "documents").select("doc_id", "text").limit(50)
-    val dir = Files.createTempDirectory("graft-slsh-dup-").toString
+    val dir = tempDir("graft-slsh-dup-")
     // the same file content delivered twice
     docs.coalesce(1).write.mode("append").parquet(dir)
     docs.coalesce(1).write.mode("append").parquet(dir)

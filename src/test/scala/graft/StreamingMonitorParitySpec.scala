@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventAnalytics
@@ -23,7 +21,7 @@ class StreamingMonitorParitySpec extends SparkSpec {
     val probe = ev.select(col("event_id"), col("event_type"),
       col("value"), col("ts"))
 
-    val dir = Files.createTempDirectory("graft-smp-").toString
+    val dir = tempDir("graft-smp-")
     // two input files so the stream actually runs multiple micro-batches
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
     probe.filter(unix_micros(col("ts")) < cut).coalesce(1)

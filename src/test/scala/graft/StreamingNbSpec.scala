@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.functions._
@@ -24,7 +22,7 @@ class StreamingNbSpec extends SparkSpec {
     val batch = TextClassify.naiveBayesApply(model, docs, "text", "doc_id")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
-    val dir = Files.createTempDirectory("graft-snb-").toString
+    val dir = tempDir("graft-snb-")
     val probe = docs.select(col("doc_id"), col("text"))
     probe.randomSplit(Array(0.5, 0.3, 0.2), seed = 7L)
       .foreach(_.coalesce(1).write.mode("append").parquet(s"$dir/in"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -38,7 +36,7 @@ class StreamingScd2Spec extends SparkSpec {
         "cust", "ts_us")
     val want = foldOnce(foldOnce(history, slice1), slice2)
 
-    val dir = Files.createTempDirectory("graft-sscd2-").toString
+    val dir = tempDir("graft-sscd2-")
     slice1.coalesce(1).write.parquet(s"$dir/in")
     slice2.coalesce(1).write.mode("append").parquet(s"$dir/in")
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventAnalytics
@@ -18,7 +16,7 @@ class StreamingSessionizeSpec extends SparkSpec {
       .withColumn("tsu", unix_micros(col("ts")))
       .select(col("event_id"), col("user_id"), col("tsu"))
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
-    val dir = Files.createTempDirectory("graft-ssess-").toString
+    val dir = tempDir("graft-ssess-")
     ev.filter(col("tsu") < cut).coalesce(1).write.parquet(s"$dir/in")
     ev.filter(col("tsu") >= cut).coalesce(1).write.mode("append").parquet(s"$dir/in")
 
@@ -42,7 +40,7 @@ class StreamingSessionizeSpec extends SparkSpec {
 
   test("a session continuing across the batch boundary requires state") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ssess2-").toString
+    val dir = tempDir("graft-ssess2-")
     Seq((1L, 4L, 100L), (2L, 4L, 5000L)).toDF("event_id", "user_id", "tsu")
       .coalesce(1).write.parquet(s"$dir/in")
     Seq((3L, 4L, 5500L)).toDF("event_id", "user_id", "tsu") // within gap of id=2

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventAnalytics
@@ -58,7 +56,7 @@ class StreamingSkewSpec extends SparkSpec {
   }
 
   test("velocity under 50% single-user skew: stream == batch, bounded state, no stall") {
-    val dir = Files.createTempDirectory("graft-skewvel-").toString
+    val dir = tempDir("graft-skewvel-")
     writeBatches(dir, 4)
     // lookback 10k us ≈ 5k retained events for the hot user — well under
     // its 30k total, so the per-batch prune must be doing its job for the
@@ -90,7 +88,7 @@ class StreamingSkewSpec extends SparkSpec {
   }
 
   test("funnel under 50% single-user skew: stream == batch conversion, constant state") {
-    val dir = Files.createTempDirectory("graft-skewfun-").toString
+    val dir = tempDir("graft-skewfun-")
     writeBatches(dir, 4)
     val window = 1000000L
     val steps = Seq("view", "click", "purchase")

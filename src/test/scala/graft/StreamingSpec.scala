@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EwmaPipeline
@@ -27,7 +25,7 @@ class StreamingSpec extends SparkSpec {
       .cache()
     // write the normalized events as a MULTI-FILE parquet dir so the file
     // source actually gets several micro-batches
-    val dir = Files.createTempDirectory("graft-stream-").toString
+    val dir = tempDir("graft-stream-")
     ev.repartition(5).write.mode("overwrite").parquet(dir)
 
     val batchDf = EwmaPipeline.windowedEwmaBatch(

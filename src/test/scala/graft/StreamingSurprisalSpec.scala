@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingSurprisal
@@ -25,7 +23,7 @@ class StreamingSurprisalSpec extends SparkSpec {
     val (lm, oov) = StreamingSurprisal.referenceLm(ref, "text")
     val lmC = lm.cache()
     try {
-      val dir = Files.createTempDirectory("graft-ssur-").toString
+      val dir = tempDir("graft-ssur-")
       val mm = probe.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val cut = (mm.getLong(0) + mm.getLong(1)) / 2
       probe.filter(col("doc_id") <= cut).coalesce(1).write.parquet(s"$dir/in")
@@ -68,7 +66,7 @@ class StreamingSurprisalSpec extends SparkSpec {
     val (lm, oov) = StreamingSurprisal.referenceLm(ref, "text")
     val lmC = lm.cache()
     try {
-      val dir = Files.createTempDirectory("graft-ssurg-").toString
+      val dir = tempDir("graft-ssurg-")
       val mm = probe.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val cut = (mm.getLong(0) + mm.getLong(1)) / 2
       probe.filter(col("doc_id") <= cut).coalesce(1).write.parquet(s"$dir/in")

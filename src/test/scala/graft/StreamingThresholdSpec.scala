@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.ModelEval
@@ -20,7 +18,7 @@ class StreamingThresholdSpec extends SparkSpec {
         (get_json_object(col("props"), "$.k").cast("bigint") >= 50)
           .cast("bigint").as("y"))
 
-    val dir = Files.createTempDirectory("graft-sthr-").toString
+    val dir = tempDir("graft-sthr-")
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
     ev.filter(unix_micros(col("ts")) < cut).coalesce(1).write.parquet(s"$dir/in")
     ev.filter(unix_micros(col("ts")) >= cut).coalesce(1)

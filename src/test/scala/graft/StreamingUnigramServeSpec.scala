@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextPipeline
@@ -67,7 +65,7 @@ class StreamingUnigramServeSpec extends SparkSpec {
   test("unigramServe runs unchanged on a streaming frame and matches batch") {
     val (maxLen, _, _) = params
     val thr = 3520000L
-    val dir = Files.createTempDirectory("graft-usrv-").toString
+    val dir = tempDir("graft-usrv-")
     docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$dir/in")
     docs.filter(col("doc_id") % 2 =!= 0).coalesce(1)
       .write.mode("append").parquet(s"$dir/in")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventAnalytics
@@ -18,7 +16,7 @@ class StreamingVelocitySpec extends SparkSpec {
       .withColumn("tsu", unix_micros(col("ts")))
       .select(col("event_id"), col("user_id"), col("tsu"), col("value"))
     val cut = unix_micros(to_timestamp(lit("2024-01-16")))
-    val dir = Files.createTempDirectory("graft-svel-").toString
+    val dir = tempDir("graft-svel-")
     ev.filter(col("tsu") < cut).coalesce(1).write.parquet(s"$dir/in")
     ev.filter(col("tsu") >= cut).coalesce(1).write.mode("append").parquet(s"$dir/in")
 
@@ -44,7 +42,7 @@ class StreamingVelocitySpec extends SparkSpec {
 
   test("a trailing window spanning the batch boundary requires state") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-svel2-").toString
+    val dir = tempDir("graft-svel2-")
     Seq((1L, 9L, 100L, 2.0)).toDF("event_id", "user_id", "tsu", "value")
       .coalesce(1).write.parquet(s"$dir/in")
     Seq((2L, 9L, 500L, 3.0)).toDF("event_id", "user_id", "tsu", "value")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -19,7 +17,7 @@ class TablesSpec extends SparkSpec {
   private val micros = Seq(1704067201000000L, 1704067202000000L)
 
   private def writeEvents(flavor: String): String = {
-    val dir = Files.createTempDirectory(s"tables-$flavor").toString
+    val dir = tempDir(s"tables-$flavor")
     val base = micros.zipWithIndex
       .map { case (us, i) => (i.toLong, s"u$i", us) }
       .toDF("event_id", "user_id", "us")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.WebCuration
@@ -61,7 +59,7 @@ class TwsFrontierSpec extends SparkSpec {
     }).toMap
 
     // the stream over the same two arrival batches
-    val dir = Files.createTempDirectory("graft-twsfr-").toString
+    val dir = tempDir("graft-twsfr-")
     b0.coalesce(1).write.parquet(s"$dir/in")
     Thread.sleep(20)
     b1.coalesce(1).write.mode("append").parquet(s"$dir/in")
@@ -93,7 +91,7 @@ class TwsFrontierSpec extends SparkSpec {
   test("native TTL restarts an idle host's numbering (fresh-frontier " +
       "semantics, stated loudly)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-twsfrttl-").toString
+    val dir = tempDir("graft-twsfrttl-")
     Seq((1L, 9L, 5L, true, 2L))
       .toDF("doc_id", "host", "priority", "allowed", "crawl_delay_s")
       .coalesce(1).write.parquet(s"$dir/in")

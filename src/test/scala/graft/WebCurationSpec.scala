@@ -84,7 +84,7 @@ class WebCurationSpec extends SparkSpec {
       (3L, "http://a.com/x?utm_source=f"), (4L, "http://a.com/y"),
       (5L, "https://B.com/z#frag"), (6L, "https://b.com/z"))
       .toDF("doc_id", "url")
-    val dir = Files.createTempDirectory("graft-surl-").toString
+    val dir = tempDir("graft-surl-")
     rows.coalesce(1).write.parquet(s"$dir/a")
     rows.coalesce(1).write.parquet(s"$dir/b") // redelivery
     val stream = spark.readStream

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,7 +28,7 @@ class ZorderPruningSpec extends SparkSpec {
     // one point per cell of the full 256x256 grid, id-derived (deterministic)
     val grid = spark.range(1L << (2 * bits)).select(
       (col("id") % 256).as("x"), (col("id") / 256).as("y"))
-    val dir = Files.createTempDirectory("graft-zprune-").toString
+    val dir = tempDir("graft-zprune-")
 
     // flat baseline: 64 round-robin files, every file spans the full plane
     grid.repartition(nBuckets).write.parquet(s"$dir/flat")
