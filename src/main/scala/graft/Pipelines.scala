@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
 import org.apache.spark.storage.StorageLevel
 
@@ -258,16 +258,33 @@ object Pipelines {
     * materialized shingle index) → bloom decontaminate → shard compose.
     * Returns the sharded row count.
     */
-  def fullCuration(spark: SparkSession, sfDir: String): Long = {
+  def fullCuration(spark: SparkSession, sfDir: String): Long =
+    curationShards(spark, sfDir)(_.count())
+
+  /** The body of [[fullCuration]]: hands its sharded `(doc, shard, pos)`
+    * frame to `f`, then unpersists the shingle index.
+    *
+    * The gopher gate, the exact-duplicate collapse and the bloom
+    * decontamination read each row itself (the collapse: one window over
+    * `text`), never a join of the frame back onto a function of itself on
+    * `doc_id`. Each such join doubles the plan, and the analyzer's work on
+    * the doubled tree, not the data, bounded the run. The gates use the
+    * helpers the frame operators are built from
+    * ([[operators.Curation.gopherWordGate]], [[operators.Dedup.exactRows]],
+    * [[operators.TextPipeline.bloomHits]]), and keep the joins' NULL
+    * semantics: the gate and the collapse drop a NULL `doc_id`, the
+    * decontamination keeps it.
+    *
+    * Precondition: `doc_id` is the key of `documents` (the generator
+    * numbers documents with `np.arange`). With a repeated id, the join
+    * forms kept or dropped every row carrying it together.
+    */
+  private[graft] def curationShards[T](spark: SparkSession, sfDir: String)(
+      f: DataFrame => T): T = {
     val docs = Tables.table(spark, sfDir, "documents")
-    val rules = operators.Curation.gopherRules(docs, "text", "doc_id",
-      minWords = 20, maxWords = 100000)
-    val gated = docs.join(
-      rules.filter(col("f_words") && col("f_mean_len") && col("f_alpha"))
-        .select(col("doc").as("doc_id")), Seq("doc_id"), "left_semi")
-    val exactReps = operators.Dedup.exact(gated, "text", "doc_id")
-    val collapsed = gated.join(
-      exactReps.select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi")
+    val gated = docs.filter(col("doc_id").isNotNull &&
+      operators.Curation.gopherWordGate(col("text"), minWords = 20, maxWords = 100000))
+    val collapsed = operators.Dedup.exactRows(gated, "text", "doc_id")
     val index = operators.Dedup.buildShingleIndex(collapsed, "text", "doc_id", 5)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -275,11 +292,11 @@ object Pipelines {
       val kept = operators.Dedup.keepRepresentatives(collapsed, "doc_id", pairs)
         .filter(col("keep")).drop("component", "keep")
       val probes = docs.filter(col("doc_id") < 10)
-      val words = operators.TextPipeline.bloomWords(probes, "text", "doc_id")
-      val clean = kept.join(
-        operators.TextPipeline.bloomProbe(kept, words, "text", "doc_id")
-          .select(col("doc").as("doc_id")), Seq("doc_id"), "left_anti")
-      operators.Curation.corpusShards(clean, "doc_id", nShards = 16).count()
+      val bloom = operators.TextPipeline.bloomModel(probes, "text", "doc_id")
+      val hit = operators.TextPipeline.bloomHits(
+        col("text"), bloom.words, bloom.kHashes, bloom.shingleK) >= 1
+      val clean = kept.filter(col("doc_id").isNull || !coalesce(hit, lit(false)))
+      f(operators.Curation.corpusShards(clean, "doc_id", nShards = 16))
     } finally index.unpersist(blocking = false)
   }
 

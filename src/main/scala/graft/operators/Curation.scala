@@ -44,8 +44,9 @@ object Curation {
     *   - >= 2 distinct required stopwords present
     *
     * Map-only: one projection per document, no shuffle — at 100 TB this
-    * runs at scan speed and the `keep` predicate pushes into downstream
-    * plans as an ordinary column filter.
+    * runs at scan speed. The word rules come from [[gopherWordFlags]],
+    * which a downstream plan applies as an ordinary column filter on its
+    * own rows ([[gopherWordGate]]), with no join back onto this frame.
     */
   def gopherRules(
       docs: DataFrame, textCol: String, idCol: String,
@@ -54,72 +55,75 @@ object Curation {
       .select(col(idCol).as("doc"), col(textCol).as("txt"))
       .withColumn("w", T.tokens(col("txt")))
       .withColumn("lines", split(col("txt"), "\n", -1))
-      // ONE compiled pass over the raw text for the three token counters
-      // — tokenization fused in, so the word-rule columns never build the
-      // token array (bit-identical to the HOF aggregate + filter/rlike
-      // formulation over tokens(); TextExprs scaladoc + CurationSpec pin
-      // equality). The per-token interpreted lambda + regex dispatch was
-      // the dominant map-side cost of the curation front door's stage-1
-      // gate; `w` survives only for the stopword rule, and plans that
-      // read just the word flags (the front door) prune it entirely.
-      .withColumn("__gs",
-        org.apache.spark.sql.graftvec.TextExprs.gopherTextStatsCol(col("txt")))
-      .withColumn("n_words", col("__gs").getItem(0))
+      // the word-rule signals and flags: ONE compiled pass over the raw
+      // text ([[gopherWordFlags]]); `w` survives only for the stopword rule
+      .withColumn("__wf", gopherWordFlags(col("txt"), minWords, maxWords))
+      .withColumn("n_words", col("__wf.n_words"))
       .withColumn("n_lines", size(col("lines")).cast("bigint"))
-      .withColumn("mean_word_len_centi",
-        when(col("n_words") === 0, 0L)
-          .otherwise(expr("__gs[1] * 100 DIV n_words")))
-      .withColumn("n_alpha_words", col("__gs").getItem(2))
+      .withColumn("mean_word_len_centi", col("__wf.mean_word_len_centi"))
       .withColumn("n_bullet_lines",
         size(filter(col("lines"), l => l.rlike("^\\s*[-*•]"))).cast("bigint"))
       .withColumn("n_ellipsis_lines",
         size(filter(col("lines"), l => l.rlike("(\\.\\.\\.|…)\\s*$"))).cast("bigint"))
-      .withColumn("alpha_word_bps",
-        when(col("n_words") === 0, 0L)
-          .otherwise(expr("n_alpha_words * 10000 DIV n_words")))
+      .withColumn("alpha_word_bps", col("__wf.alpha_word_bps"))
       .withColumn("bullet_line_bps", expr("n_bullet_lines * 10000 DIV n_lines"))
       .withColumn("ellipsis_line_bps", expr("n_ellipsis_lines * 10000 DIV n_lines"))
       .withColumn("req_stopword_hits",
         // array_intersect already returns the distinct intersection
         size(array_intersect(col("w"),
           array(RequiredStopwords.map(lit): _*))).cast("bigint"))
-      .withColumn("f_words", col("n_words").between(minWords, maxWords))
-      .withColumn("f_mean_len", col("mean_word_len_centi").between(300L, 1000L))
-      .withColumn("f_alpha", col("alpha_word_bps") >= 8000L)
+      .withColumn("f_words", col("__wf.f_words"))
+      .withColumn("f_mean_len", col("__wf.f_mean_len"))
+      .withColumn("f_alpha", col("__wf.f_alpha"))
       .withColumn("f_bullet", col("bullet_line_bps") < 9000L)
       .withColumn("f_ellipsis", col("ellipsis_line_bps") < 3000L)
       .withColumn("f_stopwords", col("req_stopword_hits") >= 2L)
       .withColumn("keep",
         col("f_words") && col("f_mean_len") && col("f_alpha") &&
           col("f_bullet") && col("f_ellipsis") && col("f_stopwords"))
-      .drop("txt", "w", "lines", "__gs", "n_alpha_words", "n_bullet_lines", "n_ellipsis_lines")
+      .drop("txt", "w", "lines", "__wf", "n_bullet_lines", "n_ellipsis_lines")
   }
 
-  /** The WORD-RULE conjunction of [[gopherRules]] (f_words ∧ f_mean_len
-    * ∧ f_alpha, with NULL text reading FALSE) as one map expression over
-    * the raw text — the exact rule arithmetic of the flag columns above,
-    * shared so the curation front door's stage-1 gate
-    * ([[CurationFunnel.decide]]) cannot drift from the reported flags
-    * (the q285 oracle and CurationFunnelReplicaSpec both replay this
-    * arithmetic). One [[org.apache.spark.sql.graftvec.TextExprs]]
-    * GopherTextStats pass per document, no token array, no join.
+  /** The word rules of [[gopherRules]] over one text column, as a struct
+    * of three signals — `n_words`, `mean_word_len_centi` (integer
+    * centi-chars), `alpha_word_bps` — and the three flags on them:
+    * `f_words` (count in [minWords, maxWords]), `f_mean_len` (mean in
+    * [3, 10] chars), `f_alpha` (>= 80% of words alphabetic). One
+    * [[org.apache.spark.sql.graftvec.TextExprs]] GopherTextStats pass per
+    * document, no token array. NULL text reads NULL throughout.
+    *
+    * The one definition of these rules: [[gopherRules]] reports them,
+    * and [[gopherWordGate]] (the curation front door's stage-1 gate and
+    * the `fullCuration` funnel's gate) filters on them.
+    */
+  def gopherWordFlags(text: Column, minWords: Int, maxWords: Int): Column = {
+    val gs = org.apache.spark.sql.graftvec.TextExprs.gopherTextStatsCol(text)
+    val (n, chars, alpha) = (gs.getItem(0), gs.getItem(1), gs.getItem(2))
+    def perWord(total: Column, scale: Long): Column =
+      when(n === 0, 0L).otherwise(call_function("div", total * scale, n))
+    // the flags test the signals' thresholds without dividing, exactly for
+    // every n >= 0, so a filter on them re-reads the stats fewer times
+    // (Spark's filter codegen does not share common subexpressions):
+    //   floor(100·chars / n) ∈ [300, 1000] ⟺ 100·chars ≥ 300n ∧ 100·chars < 1001n
+    //     (n = 0: the signal is 0 and the second test fails)
+    //   floor(10000·alpha / n) ≥ 8000      ⟺ n > 0 ∧ 5·alpha ≥ 4n
+    struct(
+      n.as("n_words"),
+      perWord(chars, 100L).as("mean_word_len_centi"),
+      perWord(alpha, 10000L).as("alpha_word_bps"),
+      n.between(minWords, maxWords).as("f_words"),
+      (chars * 100L >= n * 300L && chars * 100L < n * 1001L).as("f_mean_len"),
+      (n > 0L && alpha * 5L >= n * 4L).as("f_alpha"))
+  }
+
+  /** The conjunction of [[gopherWordFlags]]' three flags, with NULL text
+    * reading FALSE (a NULL would fall through a verdict's CASE arms): a
+    * row-local filter, so a plan gates its own rows without joining
+    * [[gopherRules]] back on the id.
     */
   def gopherWordGate(text: Column, minWords: Int, maxWords: Int): Column = {
-    require(minWords >= 1, "gopherWordGate: minWords >= 1 (the division-" +
-      "free rewrite relies on n >= 1 whenever the word-count flag holds)")
-    val gs = org.apache.spark.sql.graftvec.TextExprs.gopherTextStatsCol(text)
-    val n = gs.getItem(0)
-    val s = gs.getItem(1)
-    val a = gs.getItem(2)
-    // division-free exact rewrites of the flag arithmetic (conjunction-
-    // equivalent because f_words pins n >= minWords >= 1):
-    //   floor(100·s DIV n) ∈ [300, 1000] ⟺ 100s ≥ 300n ∧ 100s < 1001n
-    //   floor(10000·a DIV n) ≥ 8000     ⟺ 10000a ≥ 8000n ⟺ 5a ≥ 4n
-    coalesce(
-      n.between(minWords.toLong, maxWords.toLong) &&
-        s * 100L >= n * 300L && s * 100L < n * 1001L &&
-        a * 5L >= n * 4L,
-      lit(false))
+    val f = gopherWordFlags(text, minWords, maxWords)
+    coalesce(f("f_words") && f("f_mean_len") && f("f_alpha"), lit(false))
   }
 
   /** RELATIVE length gate: keep documents whose token count lies inside

@@ -111,6 +111,20 @@ object Dedup {
     df.groupBy(col(keyCol))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
+  /** The rows of `df` that [[exact]] names: per identical `keyCol` value
+    * (NULL is one value), the row whose `idCol` is the minimum. One window
+    * over `keyCol` — one shuffle, where a semi-join of `df` onto
+    * [[exact]]'s `keep_id` is an aggregate plus a join. Precondition:
+    * `idCol` is a key of `df`; with a repeated id the semi-join would also
+    * keep the other rows carrying a representative's id. Like the
+    * semi-join, drops rows whose `idCol` is NULL.
+    */
+  def exactRows(df: DataFrame, keyCol: String, idCol: String): DataFrame =
+    df.withColumn("__rep", col(idCol) === min(col(idCol)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col(keyCol))))
+      .filter(col("__rep"))
+      .drop("__rep")
+
   /** FUZZY-KEY near-dup pairs at edit distance ≤ 1 via FastSS
     * deletion-neighborhood blocking: every key joins its candidates
     * through the set {key} ∪ {key minus one character} — two keys within
@@ -790,14 +804,15 @@ object Dedup {
     * pair-thresholded, so this is the common case.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // nodes whose only edges are self-loops still deserve a label
-    val selfOnly = pairs.filter(col("id_a") === col("id_b"))
-      .select(col("id_a").as("id"), col("id_a").as("comp")).distinct()
-    val edges = pairs
+    // ONE evaluation of the pair frame (in a pipeline, an LSH self-join
+    // over the shingle index) feeds both the edges and the self-loops
+    val distinctPairs = pairs.select(col("id_a"), col("id_b")).distinct().materialize
+    val edges = distinctPairs
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .materialize
+    // nodes whose only edges are self-loops still deserve a label
+    val selfOnly = distinctPairs.filter(col("id_a") === col("id_b"))
+      .select(col("id_a").as("id"), col("id_a").as("comp"))
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     val stars =

@@ -270,24 +270,31 @@ object TextPipeline {
     bloomProbe(docs, model.words, textCol, idCol, model.shingleK, minShared,
       model.kHashes)
 
-  /** MAP-ONLY probe of a corpus against a built filter: (doc, n_hits) for
-    * documents with >= `minShared` DISTINCT shingles whose kHashes bits
-    * are all set. The per-document work — shingle windows, distinct, md5,
-    * bit probes — is ONE compiled loop over the token array
+  /** Per document, the number of DISTINCT word `shingleK`-shingles of
+    * `text` whose `kHashes` bits are all set in the filter `words`
+    * ([[bloomWords]]); NULL for NULL text. The per-document work —
+    * tokens, shingle windows, distinct, md5, bit probes — is ONE compiled
+    * loop over the token array
     * ([[org.apache.spark.sql.graftvec.FilterExprs.BloomShingleHitCountMd5]]);
-    * shingle strings are never materialized. No shuffle, no join; works
-    * unchanged on a STREAMING frame (stateless).
+    * shingle strings are never materialized. The one definition of a bloom
+    * hit: [[bloomProbe]] reports it, and a plan that decontaminates its
+    * own rows filters on it directly, with no anti-join back on the id.
+    */
+  def bloomHits(text: Column, words: Array[Long], kHashes: Int, shingleK: Int): Column =
+    org.apache.spark.sql.graftvec.FilterExprs.bloomShingleHitsMd5Col(
+      T.tokens(text), words, words.length * 32, kHashes, shingleK)
+
+  /** MAP-ONLY probe of a corpus against a built filter: (doc, n_hits) for
+    * documents with >= `minShared` [[bloomHits]]. No shuffle, no join;
+    * works unchanged on a STREAMING frame (stateless).
     */
   def bloomProbe(
       docs: DataFrame, words: Array[Long],
       textCol: String, idCol: String,
       shingleK: Int = 5, minShared: Int = 1, kHashes: Int = 4): DataFrame =
     docs
-      .withColumn("__w", T.tokens(col(textCol)))
       .select(col(idCol).as("doc"),
-        org.apache.spark.sql.graftvec.FilterExprs
-          .bloomShingleHitsMd5Col(col("__w"), words, words.length * 32, kHashes, shingleK)
-          .as("n_hits"))
+        bloomHits(col(textCol), words, kHashes, shingleK).as("n_hits"))
       .filter(col("n_hits") >= minShared)
 
   /** BLOOM-FILTER decontamination — the constant-memory scale path of

@@ -20,7 +20,9 @@ object CodegenCache {
     * Spark's default, 100, sits below the engine's working set, so a
     * repeated workload recompiles its classes on every pass: one pass of
     * `Pipelines.fullCuration` plus three registry queries (`q01`, `q187`,
-    * `q281`) touches at least 133 distinct classes (87 + 14 + 20 + 12),
+    * `q281`) touches at least 126 distinct classes (80 + 14 + 20 + 12;
+    * the funnel's 80 are the classes its first run compiles in a fresh
+    * JVM at sf0.01, counted in October 2026),
     * and Guava splits the 100 entries into 4 LRU segments of 25, so a
     * segment evicts well before the total does. 1024 (4 segments of 256)
     * holds several such passes.

@@ -74,6 +74,8 @@ class CurationSpec extends SparkSpec {
 
   test("gopherWordGate (the front door's stage-1 gate) equals the " +
       "gopherRules flag conjunction row-for-row") {
+    // each division-free flag of gopherWordFlags must also equal its
+    // threshold on the reported (divided) signal
     val edge = Seq(
       (200001L, null.asInstanceOf[String]), // NULL text -> false, not NULL
       (200002L, ""),
@@ -82,14 +84,20 @@ class CurationSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val d = docs.select(col("doc_id"), col("text")).unionByName(edge)
     for ((lo, hi) <- Seq((20, 100000), (1, 30), (5, 49))) {
-      val viaRules = Curation.gopherRules(d, "text", "doc_id", lo, hi)
-        .select(col("doc").as("doc_id"),
-          coalesce(col("f_words") && col("f_mean_len") && col("f_alpha"),
-            lit(false)).as("e"))
+      val viaSignals = Curation.gopherRules(d, "text", "doc_id", lo, hi)
+        .select(col("doc").as("doc_id"), col("f_words"), col("f_mean_len"), col("f_alpha"),
+          col("n_words").between(lo, hi).as("e_words"),
+          col("mean_word_len_centi").between(300L, 1000L).as("e_mean_len"),
+          (col("alpha_word_bps") >= 8000L).as("e_alpha"))
       val viaGate = d.select(col("doc_id"),
         Curation.gopherWordGate(col("text"), lo, hi).as("g"))
-      val diff = viaRules.join(viaGate, Seq("doc_id"))
-        .filter(col("e") =!= col("g") || col("g").isNull)
+      val diff = viaSignals.join(viaGate, Seq("doc_id"))
+        .filter(!(col("f_words") <=> col("e_words")) ||
+          !(col("f_mean_len") <=> col("e_mean_len")) ||
+          !(col("f_alpha") <=> col("e_alpha")) ||
+          col("g") =!= coalesce(col("e_words") && col("e_mean_len") && col("e_alpha"),
+            lit(false)) ||
+          col("g").isNull)
       assert(diff.count() === 0L, s"[$lo,$hi] " + diff.collect().mkString("; "))
     }
   }

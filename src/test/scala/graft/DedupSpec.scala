@@ -21,6 +21,20 @@ class DedupSpec extends SparkSpec {
     assert(bad === 0L)
   }
 
+  test("exactRows equals the semi-join onto exact, NULL text and NULL ids included") {
+    import spark.implicits._
+    val d = Seq[(java.lang.Long, String)](
+      (3L, "a"), (1L, "a"), (2L, "b"), (4L, null), (6L, null), (null, "b"),
+      (null, "c"), (7L, "c"), (8L, "d"))
+      .toDF("doc_id", "text")
+    val semi = d.join(Dedup.exact(d, "text", "doc_id").select(col("keep_id").as("doc_id")),
+      Seq("doc_id"), "left_semi")
+    val rows = Dedup.exactRows(d, "text", "doc_id")
+    assert(rows.columns === d.columns)
+    assert(rows.exceptAll(semi).count() === 0L && semi.exceptAll(rows).count() === 0L)
+    assert(rows.count() === 5L) // 1 (a), 2 (b), 4 (NULL), 7 (c), 8 (d)
+  }
+
   test("MinHash-LSH near-dups are a subset of exact Jaccard pairs with high recall") {
     val exact = Dedup.ngramJaccardPairs(docs, "text", "doc_id", shingleK = 5, threshold = 0.8)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -193,6 +207,21 @@ class DedupSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toSeq
     // node 2 has a self-loop AND a real edge: exactly ONE label row, the star's
     assert(rows.sorted === Seq(1L -> 1L, 2L -> 1L, 5L -> 5L, 9L -> 9L))
+  }
+
+  test("connected components: the pair frame is evaluated once") {
+    import spark.implicits._
+    val evaluated = spark.sparkContext.longAccumulator("cc-pair-rows")
+    val touch = udf { (a: Long) => evaluated.add(1); a }.asNondeterministic()
+    // repartitioned so the projection runs in tasks, not folded into a
+    // local relation on the driver
+    val raw = Seq((5L, 5L), (1L, 2L), (2L, 3L), (2L, 2L), (9L, 9L), (1L, 2L))
+      .toDF("a", "id_b").repartition(2)
+    val pairs = raw.select(touch(col("a")).as("id_a"), col("id_b"))
+    val rows = Dedup.connectedComponents(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(rows.sorted === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 9L -> 9L))
+    assert(evaluated.value === 6L, "each pair row is computed once")
   }
 
   test("connected components match driver-side union-find on random graphs") {

@@ -60,6 +60,42 @@ class PipelineEndToEndSpec extends SparkSpec {
     assert(counts === counts.sorted.reverse, s"pipeline funnel must narrow: $counts")
   }
 
+  test("fullCuration's row-local gates equal the join-based composition, " +
+      "on a plan of at most 8 relation leaves") {
+    import graft.operators.{Curation, Dedup, TextPipeline}
+    val docs = Tables.table(spark, sfDir, "documents")
+    // the reference: each gate joins the frame back onto a frame operator
+    // on doc_id (the composition Pipelines.curationShards replaced)
+    val rules = Curation.gopherRules(docs, "text", "doc_id", minWords = 20, maxWords = 100000)
+    val gated = docs.join(
+      rules.filter(col("f_words") && col("f_mean_len") && col("f_alpha"))
+        .select(col("doc").as("doc_id")), Seq("doc_id"), "left_semi")
+    val collapsed = gated.join(
+      Dedup.exact(gated, "text", "doc_id").select(col("keep_id").as("doc_id")),
+      Seq("doc_id"), "left_semi")
+    val index = Dedup.buildShingleIndex(collapsed, "text", "doc_id", 5)
+    val kept = Dedup.keepRepresentatives(collapsed, "doc_id",
+        Dedup.minhashNearDupsFromIndex(index, 0.8))
+      .filter(col("keep")).drop("component", "keep")
+    val words = TextPipeline.bloomWords(docs.filter(col("doc_id") < 10), "text", "doc_id")
+    val clean = kept.join(
+      TextPipeline.bloomProbe(kept, words, "text", "doc_id").select(col("doc").as("doc_id")),
+      Seq("doc_id"), "left_anti")
+    val want = Curation.corpusShards(clean, "doc_id", nShards = 16).cache()
+
+    Pipelines.curationShards(spark, sfDir) { shards =>
+      // each self-join doubled the plan: 44 leaves composed that way
+      val leaves = shards.queryExecution.analyzed.collectLeaves().size
+      assert(leaves <= 8, s"the funnel's analyzed plan has $leaves relation leaves")
+      val got = shards.cache()
+      assert(want.count() > 0L)
+      assert(got.exceptAll(want).count() === 0L)
+      assert(want.exceptAll(got).count() === 0L)
+      got.unpersist()
+    }
+    want.unpersist()
+  }
+
   test("curation stages compose: rules -> weights -> spans -> shards -> sample") {
     val docs = Tables.table(spark, sfDir, "documents")
 
